@@ -162,17 +162,32 @@ object Matching {
   /** J10/A7/V6 core: suffix-match lookup against a small registry.
     * `probe` rows match a `registry` value when the registry string ends
     * with the probe string (reference regex `paste0(imei, "$")`,
-    * R/validation-functions.R:365-366). Registry is broadcast; the
-    * non-equi condition runs as BroadcastNestedLoopJoin — fine because the
-    * registry is a device list (tiny), while `probe` streams through.
+    * R/validation-functions.R:365-366).
+    *
+    * Runs as an equi-join, not a nested loop: every distinct non-null
+    * registry value is exploded into all of its suffixes (the empty one
+    * included — `""` ends every string), and the probe string is
+    * broadcast-hash-joined against them. The broadcast side holds
+    * ≈(mean value length + 1) × registry rows (≈16 per 15-digit IMEI);
+    * each probe row does one hash lookup instead of one `endsWith` per
+    * registry value. A value has at most one suffix of a given length,
+    * so each matching value joins exactly once and the counts equal the
+    * `endsWith` definition. Suffixes are cut on characters and compared
+    * as UTF-8 bytes, which agree: a byte suffix that is itself valid
+    * UTF-8 starts on a character boundary.
+    *
     * Returns probe ++ (match_count, matched_value: the unique match else
-    * null).
+    * null), one row per distinct probe row.
     */
   def suffixMatchCount(probe: DataFrame, probeCol: String,
                        registry: DataFrame, registryCol: String): DataFrame = {
-    val reg = registry.select(col(registryCol).cast("string").as("__reg")).distinct()
-    val joined = probe.join(broadcast(reg),
-      col("__reg").endsWith(col(probeCol).cast("string")), "left")
+    val suffixes = registry.select(col(registryCol).cast("string").as("__reg"))
+      .filter(col("__reg").isNotNull).distinct()
+      .select(col("__reg"),
+        explode(sequence(lit(1), length(col("__reg")) + 1)).as("__pos"))
+      .select(col("__reg"), expr("substr(__reg, __pos)").as("__sfx"))
+    val joined = probe.join(broadcast(suffixes),
+      col("__sfx") === col(probeCol).cast("string"), "left")
     joined.groupBy(probe.columns.map(c => col(s"`$c`")): _*)
       .agg(
         count(col("__reg")).as("match_count"),

@@ -43,12 +43,16 @@ object Runner {
 
   /** Stage 3 — validate_landings (+ the alert-flags output the reference
     * computes but never persists — kept first-class, SURVEY.md V7).
+    * Runs [[Validate.fused]]: one wide scan and two tiny bounds
+    * aggregations instead of the faithful chain's re-scans and join
+    * tree. The two agree whenever (form_name, survey_id) is unique and
+    * non-null, which [[Preprocess]] guarantees for this stage's input.
     */
   def validate(spark: SparkSession, tables: StageTables,
                kNFishers: Double = 2.5, kNBoats: Double = 2.5,
                kPriceKg: Double = 3.0,
                globalBounds: Bounds.Strategy = Bounds.TwoPassExact): Unit = {
-    val res = Validate(StageIO.load(spark, tables.preprocessed),
+    val res = Validate.fused(StageIO.load(spark, tables.preprocessed),
       kNFishers, kNBoats, kPriceKg, globalBounds)
     StageIO.save(res.validated, tables.validated)
     StageIO.save(res.alertFlags, tables.alertFlags)

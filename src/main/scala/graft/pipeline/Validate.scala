@@ -110,9 +110,11 @@ object Validate {
 
   /** V6/J10 (reference validate_this_imei :339-375): per-row IMEI
     * validation against the deployed-device registry, fully vectorized —
-    * the registry is broadcast and the suffix match is a non-equi join +
-    * count, not a per-row R function. Returns (survey_id, imei,
-    * alert_number).
+    * the registry's suffixes are broadcast and the suffix match is a hash
+    * equi-join + count ([[Matching.suffixMatchCount]]), not a per-row R
+    * function. Returns (survey_id, imei, alert_number), one row per
+    * distinct (survey_id, raw imei): the match's groupBy collapses
+    * duplicate probe rows.
     */
   def validateImeis(data: DataFrame, imeiCol: String, registry: DataFrame,
                     registryCol: String): DataFrame = {
@@ -158,8 +160,10 @@ object Validate {
     // neutral at sf0.1). Callers whose input is NOT a cheap pruned-scan
     // projection (a join tree, a preprocess chain) should checkpoint
     // BEFORE calling, where they know what the upstream costs — the same
-    // contract as Corpus.pplBuckets. The fused twin ([[fused]]) remains
-    // the one-scan scale path.
+    // contract as Corpus.pplBuckets. The fused twin ([[fused]]) is the
+    // one-scan scale path, and the one `Runner.validate` runs; this chain
+    // stays as the reference-faithful form behind
+    // q_v7_validate_orchestration.
     val pre = preprocessed
     val outputs = Seq(
       validateDates(pre),
@@ -210,8 +214,10 @@ object Validate {
     * frame is touched once.
     *
     * Caveat shared with [[apply]]'s join semantics: (form_name, survey_id)
-    * is assumed unique (it is a surrogate key, P7); with duplicate keys the
-    * faithful form fans out in its joins while this form cannot.
+    * is assumed unique and non-null (it is a surrogate key, P7: Preprocess
+    * pastes it from the submission id and the 1-based vessel and catch
+    * indices, so it is never null); with duplicate keys the faithful form
+    * fans out multiplicatively in its joins while this form cannot.
     */
   def fused(preprocessed: DataFrame,
             kNFishers: Double = 2.5, kNBoats: Double = 2.5,

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -299,6 +300,37 @@ object GraftProps extends Properties("graft") {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
       // sequence equality: multi-bucket overlaps must emit exactly once
       got == naive
+    }
+
+  /** The `endsWith` nested-loop formulation [[Matching.suffixMatchCount]]
+    * replaced: the reference the suffix-exploded equi-join must equal. */
+  private def nestedLoopSuffixMatch(probe: DataFrame, probeCol: String,
+                                    registry: DataFrame, registryCol: String): DataFrame = {
+    val reg = registry.select(col(registryCol).cast("string").as("__reg")).distinct()
+    probe.join(broadcast(reg), col("__reg").endsWith(col(probeCol).cast("string")), "left")
+      .groupBy(probe.columns.map(c => col(s"`$c`")): _*)
+      .agg(count(col("__reg")).as("match_count"), min(col("__reg")).as("__only"))
+      .withColumn("matched_value", when(col("match_count") === 1, col("__only")))
+      .drop("__only")
+  }
+
+  // a tiny alphabet (digits plus multi-byte characters) forces shared
+  // suffixes, values shorter than the probe, and non-ASCII boundaries
+  private val suffixStr = Gen.choose(0, 4).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf("1", "2", "9", "é", "日")).map(_.mkString))
+  private val maybeStr = Gen.frequency(6 -> suffixStr.map(Option(_)), 1 -> Gen.const(None))
+
+  property("suffixMatchCount equals the endsWith nested-loop formulation") =
+    forAll(Gen.listOf(maybeStr), Gen.listOf(Gen.zip(Gen.choose(0, 3), maybeStr))) { (reg, rows) =>
+      // duplicated registry values and duplicated probe rows on purpose
+      val registry = (reg ++ reg.take(2)).toDF("r")
+      val probe = (rows ++ rows.take(2)).toDF("id", "p")
+      def bag(df: DataFrame) =
+        df.select("id", "p", "match_count", "matched_value").collect()
+          .map(_.toSeq.mkString("|")).toSeq.sorted
+      // sorted-row equality: same multiset, hence same row count
+      bag(Matching.suffixMatchCount(probe, "p", registry, "r")) ==
+        bag(nestedLoopSuffixMatch(probe, "p", registry, "r"))
     }
 
   property("pageRank conserves mass exactly when no node dangles") =

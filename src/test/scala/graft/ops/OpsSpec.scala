@@ -92,6 +92,23 @@ class OpsSpec extends SparkTestBase {
     assert(out.toSeq == Seq((1, 2L, null), (2, 1L, "1239"), (3, 0L, null)))
   }
 
+  test("J10/V6: suffixMatchCount and validateImeis plan no nested loop") {
+    val probe = Seq((1, "123456"), (2, "9"), (3, null)).toDF("id", "p")
+    val reg = Seq("869606024123456", "35000009", null).toDF("r")
+    val imeis = Seq(("s1", "4123456"), ("s2", "0"), ("s3", "12")).toDF("survey_id", "imei")
+    for ((name, df) <- Seq(
+        "suffixMatchCount" -> Matching.suffixMatchCount(probe, "p", reg, "r"),
+        "validateImeis" -> graft.pipeline.Validate.validateImeis(imeis, "imei", reg, "r"))) {
+      df.collect() // finalize the adaptive plan before walking it
+      val nodes = graft.PlanTestUtil.nodes(df.queryExecution.executedPlan)
+      val names = nodes.map(_.nodeName)
+      assert(!names.exists(n => n.contains("NestedLoopJoin") || n.contains("CartesianProduct")),
+        s"$name fell back to a nested loop:\n${df.queryExecution.executedPlan}")
+      assert(nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+        s"$name is not a broadcast hash join:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("as-of backward join picks the latest right row at or before left time") {
     val l = Seq((1, "k1", 10), (2, "k1", 20), (3, "k1", 5), (4, "k2", 10))
       .toDF("id", "k", "t")
