@@ -86,6 +86,33 @@ object Bounds {
     case TwoPassApprox(acc) => boundsTwoPass(df, groupCols, valueCol, k, logt, Some(acc))
   }
 
+  /** Global (one-group) bounds of several columns in one query: each
+    * `(name, value, k)` is stacked as (`column`, value) rows grouped by
+    * `column`, so the strategy runs one aggregation pipeline for all of
+    * them rather than one per column. Each column's `k` is applied
+    * afterwards as `median ± k * mad` on the rows whose bounds are not
+    * guarded — the arithmetic [[bounds]] itself uses, so the numbers are
+    * bit-identical to one [[bounds]] call per column (BoundsSpec). A
+    * column with no non-null value has no row. Output: `column`, n,
+    * median, mad, lower_low, upper_up.
+    */
+  def globalBoundsStacked(df: DataFrame, columns: Seq[(String, Column, Double)],
+                          logt: Boolean, strategy: Strategy): DataFrame = {
+    val stacked = df
+      .select(explode(array(columns.map { case (name, value, _) =>
+        struct(lit(name).as("column"), value.cast(DoubleType).as("x"))
+      }: _*)).as("__s"))
+      .select(col("__s.column").as("column"), col("__s.x").as("__x"))
+    val k = columns.foldLeft(lit(null).cast(DoubleType)) { case (acc, (name, _, kc)) =>
+      when(col("column") === name, lit(kc)).otherwise(acc)
+    }
+    val guarded = col("upper_up").isNull
+    bounds(stacked, Seq("column"), "__x", 1.0, logt, strategy)
+      .select(col("column"), col("n"), col("median"), col("mad"),
+        when(!guarded, col("median") - k * col("mad")).as("lower_low"),
+        when(!guarded, col("median") + k * col("mad")).as("upper_up"))
+  }
+
   private def medianSorted(v: Array[Double]): Double = {
     val n = v.length
     if (n == 0) Double.NaN

@@ -177,7 +177,9 @@ object Matching {
     * UTF-8 starts on a character boundary.
     *
     * Returns probe ++ (match_count, matched_value: the unique match else
-    * null), one row per distinct probe row.
+    * null), one row per distinct probe row. A probe row present k times
+    * counts each of its matches k times: pass a distinct probe for the
+    * number of registry values a probe value matches.
     */
   def suffixMatchCount(probe: DataFrame, probeCol: String,
                        registry: DataFrame, registryCol: String): DataFrame = {

@@ -29,7 +29,7 @@ object MergeTrips {
       .withColumn("landing_date", to_date(from_utc_timestamp(col("Ended"), Tz)))
 
   /** Full merge given prepped landings (with validated `imei` column from
-    * Validate.validateImeis, reference :73-85) and prepped trips.
+    * Validate.attachImeis, reference :73-85) and prepped trips.
     *
     * The reference's full_join + filter(!is.na both sides) reduces to an
     * inner join of the two unique-key sides (SURVEY.md J8) — implemented

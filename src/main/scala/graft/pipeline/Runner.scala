@@ -43,10 +43,12 @@ object Runner {
 
   /** Stage 3 — validate_landings (+ the alert-flags output the reference
     * computes but never persists — kept first-class, SURVEY.md V7).
-    * Runs [[Validate.fused]]: one wide scan and two tiny bounds
-    * aggregations instead of the faithful chain's re-scans and join
-    * tree. The two agree whenever (form_name, survey_id) is unique and
-    * non-null, which [[Preprocess]] guarantees for this stage's input.
+    * Runs [[Validate.fused]] instead of the faithful chain's re-scans and
+    * join tree: its one small bounds query runs once, when it is called,
+    * and each of the two writes is then a single scan-project-write job
+    * with the bounds as constants. The two forms agree whenever
+    * (form_name, survey_id) is unique and non-null, which [[Preprocess]]
+    * guarantees for this stage's input.
     */
   def validate(spark: SparkSession, tables: StageTables,
                kNFishers: Double = 2.5, kNBoats: Double = 2.5,
@@ -68,16 +70,15 @@ object Runner {
     validate(spark, tables, ks.kNFishers, ks.kNBoats, ks.kPriceKg)
   }
 
-  /** Stage 4 — merge_trips: validated IMEIs joined on, then the 1:1
-    * (landing_date, imei) match against PDS trips.
+  /** Stage 4 — merge_trips: IMEIs validated once per distinct tracker
+    * value and attached by survey_id ([[Validate.attachImeis]]), then the
+    * 1:1 (landing_date, imei) match against PDS trips.
     */
   def mergeTrips(spark: SparkSession, tables: StageTables,
                  trips: DataFrame, deviceRegistry: DataFrame,
                  registryCol: String = "IMEI"): Unit = {
-    val preprocessed = StageIO.load(spark, tables.preprocessed)
-    val imeis = Validate.validateImeis(preprocessed, "tracker_imei",
-      deviceRegistry, registryCol)
-    val landings = preprocessed.join(imeis, Seq("survey_id"), "left")
+    val landings = Validate.attachImeis(StageIO.load(spark, tables.preprocessed),
+      "tracker_imei", deviceRegistry, registryCol)
     StageIO.save(MergeTrips(landings, trips), tables.mergedTrips)
   }
 

@@ -11,10 +11,11 @@ import graft.ops.{Bounds, Matching}
   *
   * Contract per validator: (form_name, survey_id, cleaned columns, alert
   * column); invalid values masked to null, integer alert code recorded.
-  * Bounds tables are tiny per-group aggregates → broadcast joins; masks
-  * are pure column expressions (the reference's `rowwise()` blocks,
-  * R/validation-functions.R:226,301, are needless row-at-a-time escapes —
-  * the expressions are vectorizable and stay inside codegen here).
+  * Bounds tables are tiny per-group aggregates → broadcast joins here,
+  * driver-side constants in [[fused]]; masks are pure column expressions
+  * (the reference's `rowwise()` blocks, R/validation-functions.R:226,301,
+  * are needless row-at-a-time escapes — the expressions are vectorizable
+  * and stay inside codegen here).
   */
 object Validate {
 
@@ -108,23 +109,24 @@ object Validate {
         col("alert_price"))
   }
 
-  /** V6/J10 (reference validate_this_imei :339-375): per-row IMEI
-    * validation against the deployed-device registry, fully vectorized —
-    * the registry's suffixes are broadcast and the suffix match is a hash
-    * equi-join + count ([[Matching.suffixMatchCount]]), not a per-row R
-    * function. Returns (survey_id, imei, alert_number), one row per
-    * distinct (survey_id, raw imei): the match's groupBy collapses
-    * duplicate probe rows.
+  /** V6/J10 (reference validate_this_imei :339-375): the reference's
+    * scalar per-IMEI validator, evaluated once per distinct raw value of
+    * `imeiCol` — the verdict depends on the raw value alone, so landings
+    * sharing a tracker share it. Vectorized: the registry's suffixes are
+    * broadcast and the suffix match is a hash equi-join + count
+    * ([[Matching.suffixMatchCount]]), not a per-row R function. Returns
+    * (raw_imei, imei, alert_number), one row per distinct raw value, null
+    * included.
     */
   def validateImeis(data: DataFrame, imeiCol: String, registry: DataFrame,
                     registryCol: String): DataFrame = {
-    val probe = data.select(col("survey_id"), col(imeiCol).as("__raw"))
+    val probe = data.select(col(imeiCol).as("__raw")).distinct()
       .withColumn("__num", abs(expr("try_cast(__raw as double)")))
       .withColumn("__str", col("__num").cast(LongType).cast(StringType))
     val matched = Matching.suffixMatchCount(probe, "__str",
       registry.select(col(registryCol).cast(StringType).as("__reg")), "__reg")
     matched.select(
-      col("survey_id"),
+      col("__raw").as("raw_imei"),
       when(col("__raw").isNull || col("__raw") === "0", lit(null).cast(StringType))
         .when(col("__num") < 9999, lit(null).cast(StringType))
         .when(col("match_count") === 1, col("matched_value"))
@@ -134,6 +136,34 @@ object Validate {
         .when(col("match_count") === 1, lit(null).cast(IntegerType))
         .when(col("match_count") > 1, lit(2))
         .otherwise(lit(3)).as("alert_number"))
+  }
+
+  /** Landings ++ (imei, alert_number): the V6 verdicts of [[validateImeis]]
+    * attached with the semantics of the reference's `left_join(by =
+    * "survey_id")` of the per-(survey_id, raw IMEI) verdicts
+    * (R/merge_trips.R:73-85). A row with a null survey_id gets nulls; any
+    * other row gets one output row per distinct raw IMEI (null counted)
+    * among the rows sharing its survey_id. That set is the row's own IMEI
+    * unless a survey_id is reused across forms with different trackers —
+    * the join's fan-out, reproduced for just those survey_ids: their sets
+    * are collected by one narrow aggregation and broadcast (they are rare
+    * by construction — P7 keys are unique within a form), every other row
+    * looks its own IMEI up, and the verdicts attach by a broadcast hash
+    * join on the raw value. The wide frame is never shuffled.
+    */
+  def attachImeis(landings: DataFrame, imeiCol: String, registry: DataFrame,
+                  registryCol: String): DataFrame = {
+    val raw = struct(col(imeiCol).as("v"))
+    val shared = landings.filter(col("survey_id").isNotNull)
+      .groupBy(col("survey_id").as("__sid"))
+      .agg(collect_set(raw).as("__raws"))
+      .filter(size(col("__raws")) > 1)
+    val own = when(col("survey_id").isNotNull, raw)
+    landings.join(broadcast(shared), col("survey_id") === col("__sid"), "left")
+      .withColumn("__pick", explode(coalesce(col("__raws"), array(own))))
+      .join(broadcast(validateImeis(landings, imeiCol, registry, registryCol)),
+        col("__pick.v") === col("raw_imei"), "left")
+      .drop("__sid", "__raws", "__pick", "raw_imei")
   }
 
   /** V7 orchestration (reference validate_landings, R/validation.R:36-106):
@@ -196,22 +226,30 @@ object Validate {
   }
 
   /** Fused validate_landings — identical semantics to [[apply]] (equivalence
-    * tested in PipelineSpec), restructured for scale exactly like the J1
-    * fused gear assembly: every validator derives from the SAME preprocessed
-    * frame, so the faithful shape's 4 re-scans + 3 full-outer sort-merge
-    * joins + the J5 re-merge join chain collapse to
+    * tested in PipelineSpec and RunnerSpec), restructured for scale like
+    * the J1 fused gear assembly. Every validator derives from the SAME
+    * preprocessed frame and its bounds are a handful of numbers, so the
+    * faithful shape's 4 re-scans + 3 full-outer joins + the J5 re-merge
+    * join chain collapse to:
     *
-    *   1. one global-group bounds aggregation for n_fishers + n_boats
-    *      (two [[Bounds.locscaleb]] aggregates in a single pass when the
-    *      strategy is CollectExact; two-pass/approx strategies route through
-    *      [[Bounds.bounds]] per column — still tiny 1-row results),
-    *   2. one per-taxon bounds aggregation for price_kg,
-    *   3. ONE projection over preprocessed with the 1-row bounds attached
-    *      broadcast-style and the taxon bounds broadcast-joined.
+    *   1. ONE small query, run and collected when `fused` is called:
+    *      the n_fishers and n_boats upper bounds as one grouped
+    *      [[Bounds.globalBoundsStacked]] aggregation (`globalBounds`
+    *      strategy), unioned with the per-taxon price bounds
+    *      ([[Bounds.boundsAgg]]) — 2 + #taxa rows;
+    *   2. ONE projection over preprocessed per output, reading those
+    *      bounds as driver-side constants: two scalar literals and a
+    *      literal taxon → (lower, upper) map. No join, no broadcast, no
+    *      exchange: writing `validated` or `alertFlags` is a
+    *      scan-project-write job that re-runs nothing.
     *
-    * Data passes: 2 small aggregations + 1 wide scan, zero wide shuffles —
-    * vs ~8 scans and 5+ shuffles for the faithful chain. At 100 TB the wide
-    * frame is touched once.
+    * A bound that does not exist — a column entirely null or negative
+    * has no bounds row, a guarded column or taxon has null bounds, a taxon
+    * with no eligible price is absent from the map (`getItem` of a
+    * missing key is null) — is a null constant, so its alert never fires,
+    * exactly as [[apply]]'s left joins leave it. The map is searched
+    * linearly per row: right for the reference's dozens of taxa; with
+    * thousands, a broadcast join is the better attach.
     *
     * Caveat shared with [[apply]]'s join semantics: (form_name, survey_id)
     * is assumed unique and non-null (it is a surrogate key, P7: Preprocess
@@ -224,44 +262,39 @@ object Validate {
             kPriceKg: Double = 3.0,
             globalBounds: Bounds.Strategy = Bounds.TwoPassExact,
             dateCutoff: String = "2020-12-31"): ValidationResult = {
-    def maskedBase(valueCol: String): DataFrame = preprocessed.select(
+    def masked(valueCol: String): Column =
       when(col(valueCol) < 0, lit(null).cast(DoubleType))
-        .otherwise(col(valueCol).cast(DoubleType)).as("__x"))
-      .withColumn("__g", lit(1))
-    // keep the __g group key so the bounds attach via a LEFT join, not a
-    // cross join: when a column is entirely null/negative the bounds frame
-    // is 0 rows (both Bounds routes drop null-only groups) and a cross join
-    // would annihilate the whole dataset — apply() keeps every row with
-    // null bounds in that case, and so must this form
-    def globalUb(valueCol: String, k: Double, outName: String): DataFrame =
-      Bounds.bounds(maskedBase(valueCol), Seq("__g"), "__x", k, logt = true, globalBounds)
-        .select(col("__g"), (exp(col("upper_up")) - 1).as(outName))
-    val nfUb = globalUb("n_fishers", kNFishers, "__nf_ub")
-    val nbUb = globalUb("n_boats", kNBoats, "__nb_ub")
-    val eligible = preprocessed.filter(
-      col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch")
-    val priceBounds = Bounds.boundsAgg(eligible, Seq("catch_taxon"), "price_kg",
-      kPriceKg, logt = true)
-      .select(col("catch_taxon"),
-        exp(col("lower_low")).as("__plb"), exp(col("upper_up")).as("__pub"))
-
-    val joined = preprocessed
-      .withColumn("__g", lit(1))
-      .join(broadcast(nfUb), Seq("__g"), "left")
-      .join(broadcast(nbUb), Seq("__g"), "left")
-      .join(broadcast(priceBounds), Seq("catch_taxon"), "left")
+        .otherwise(col(valueCol).cast(DoubleType))
+    val nfMasked = masked("n_fishers")
+    val nbMasked = masked("n_boats")
+    val global = Bounds.globalBoundsStacked(preprocessed,
+      Seq(("n_fishers", nfMasked, kNFishers), ("n_boats", nbMasked, kNBoats)),
+      logt = true, globalBounds)
+      .select(lit(true).as("global"), col("column").as("key"),
+        lit(null).cast(DoubleType).as("lb"), (exp(col("upper_up")) - 1).as("ub"))
+    val price = Bounds.boundsAgg(
+      preprocessed.filter(col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch"),
+      Seq("catch_taxon"), "price_kg", kPriceKg, logt = true)
+      .select(lit(false).as("global"), col("catch_taxon").cast(StringType).as("key"),
+        exp(col("lower_low")).as("lb"), exp(col("upper_up")).as("ub"))
+    val (globalRows, priceRows) = global.unionByName(price).collect()
+      .partition(_.getBoolean(0))
+    def upper(column: String): Column =
+      globalRows.find(_.getString(1) == column).filterNot(_.isNullAt(3))
+        .fold(lit(null).cast(DoubleType))(r => lit(r.getDouble(3)))
+    // lower and upper are null together (the LocScaleB guard), so only
+    // taxa with both bounds enter the map
+    val priceBounds = typedLit(priceRows.filterNot(_.isNullAt(3))
+      .map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
+      .getItem(col("catch_taxon"))
 
     val alertDate = when(col("landing_date") < lit(dateCutoff), 1.0)
-    val nfMasked = when(col("n_fishers") < 0, lit(null).cast(DoubleType))
-      .otherwise(col("n_fishers").cast(DoubleType))
-    val alertNf = coalesce(when(nfMasked > col("__nf_ub"), 2.0),
+    val alertNf = coalesce(when(nfMasked > upper("n_fishers"), 2.0),
       when(col("n_fishers") < 0, 2.0))
-    val nbMasked = when(col("n_boats") < 0, lit(null).cast(DoubleType))
-      .otherwise(col("n_boats").cast(DoubleType))
-    val alertNb = coalesce(when(nbMasked > col("__nb_ub"), 3.0),
+    val alertNb = coalesce(when(nbMasked > upper("n_boats"), 3.0),
       when(col("n_boats") < 0, 3.0))
-    val alertPrice = when(
-      col("price_kg") >= col("__pub") || col("price_kg") <= col("__plb"), 4.0)
+    val alertPrice = when(col("price_kg") >= priceBounds.getField("_2") ||
+      col("price_kg") <= priceBounds.getField("_1"), 4.0)
 
     val replaced = Set("landing_date", "n_fishers", "n_boats",
       "price_kg", "catch_kg", "catch_price")
@@ -271,7 +304,7 @@ object Validate {
     val kept = (keys ++ preprocessed.columns
       .filterNot(c => replaced.contains(c) || keys.contains(c)))
       .map(c => col(s"`$c`"))
-    val validated = joined.select(kept ++ Seq(
+    val validated = preprocessed.select(kept ++ Seq(
       when(alertDate.isNull, col("landing_date")).as("landing_date"),
       when(alertNf.isNull, nfMasked).as("n_fishers"),
       when(alertNb.isNull, nbMasked).as("n_boats"),
@@ -279,7 +312,7 @@ object Validate {
       when(alertPrice.isNull, col("catch_kg")).as("catch_kg"),
       when(alertPrice.isNull, col("catch_price")).as("catch_price")): _*)
 
-    val flags = joined.select(
+    val flags = preprocessed.select(
       col("form_name"), col("survey_id"),
       concat_ws("-", Seq(alertDate, alertNf, alertNb, alertPrice)
         .map(_.cast(IntegerType).cast(StringType)): _*).as("alert_number"))

@@ -113,6 +113,33 @@ class BoundsSpec extends SparkTestBase {
     assert(coarseRel <= 0.5, s"coarse sketch unusable: $coarseRel")
   }
 
+  test("stacked global bounds with k applied afterwards are bit-identical to one call per column") {
+    val rng = new scala.util.Random(23)
+    // a: skewed with nulls; b: tied integers; c: all zero (guarded, null
+    // bounds); d: all null (no bounds row on either route)
+    val df = Seq.tabulate(600) { i =>
+      (if (i % 9 == 0) None else Some(math.exp(rng.nextGaussian()) * 10),
+        (i % 13).toDouble, 0.0, Option.empty[Double])
+    }.toDF("a", "b", "c", "d")
+    val ks = Seq("a" -> 2.5, "b" -> 1.7, "c" -> 3.0, "d" -> 2.0)
+    def bits(r: Row): Seq[Any] = r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other => other
+    }
+    for (strategy <- Seq(Bounds.TwoPassExact, Bounds.CollectExact)) {
+      val stacked = Bounds.globalBoundsStacked(df,
+        ks.map { case (c, k) => (c, col(c), k) }, logt = true, strategy)
+        .collect().map(r => r.getString(0) -> bits(Row.fromSeq(r.toSeq.drop(1)))).toMap
+      val separate = ks.flatMap { case (c, k) =>
+        Bounds.bounds(df.withColumn("__g", lit(1)), Seq("__g"), c, k, logt = true, strategy)
+          .drop("__g").collect().map(r => c -> bits(r))
+      }.toMap
+      assert(stacked == separate, s"$strategy")
+      assert(stacked.keySet == Set("a", "b", "c"), s"$strategy")
+      assert(stacked("c").takeRight(2) == Seq(null, null), s"$strategy: guarded column")
+    }
+  }
+
   test("guard: all-zero input yields null bounds (reference :34)") {
     val r = aggBounds(Seq(0, 0, 0, 0), 2.5, logt = true)
     assert(r.isNullAt(r.fieldIndex("lower_low")) && r.isNullAt(r.fieldIndex("upper_up")))

@@ -333,6 +333,67 @@ object GraftProps extends Properties("graft") {
         bag(nestedLoopSuffixMatch(probe, "p", registry, "r"))
     }
 
+  /** The per-row V6 formulation `Runner.mergeTrips` used before
+    * [[graft.pipeline.Validate.attachImeis]]: the suffix match runs once
+    * per (survey_id, raw IMEI) probe row, and the verdicts are left-joined
+    * back on survey_id. Fed distinct (survey_id, raw IMEI) pairs, so each
+    * registry match counts once per pair, as the reference's scalar
+    * `validate_this_imei` counts it. */
+  private def perRowImeis(data: DataFrame, imeiCol: String, registry: DataFrame,
+                          registryCol: String): DataFrame = {
+    val probe = data.select(col("survey_id"), col(imeiCol).as("__raw")).distinct()
+      .withColumn("__num", abs(expr("try_cast(__raw as double)")))
+      .withColumn("__str", col("__num").cast("long").cast("string"))
+    val matched = Matching.suffixMatchCount(probe, "__str",
+      registry.select(col(registryCol).cast("string").as("__reg")), "__reg")
+    val imeis = matched.select(
+      col("survey_id"),
+      when(col("__raw").isNull || col("__raw") === "0", lit(null).cast("string"))
+        .when(col("__num") < 9999, lit(null).cast("string"))
+        .when(col("match_count") === 1, col("matched_value"))
+        .otherwise(lit(null).cast("string")).as("imei"),
+      when(col("__raw").isNull || col("__raw") === "0", lit(null).cast("int"))
+        .when(col("__num") < 9999, lit(1))
+        .when(col("match_count") === 1, lit(null).cast("int"))
+        .when(col("match_count") > 1, lit(2))
+        .otherwise(lit(3)).as("alert_number"))
+    data.join(imeis, Seq("survey_id"), "left")
+  }
+
+  // registry values sharing suffixes (multi-match probes), a duplicate
+  // and a null; tracker values drawn from full devices, suffixes, short
+  // and negative numbers, "0", unregistered, non-numeric and null
+  private val devices = Seq("869606024123456", "869606000123456", "869606024777001",
+    "350000000777001", "869606024123456", null)
+  private val trackerValue: Gen[Option[String]] = Gen.frequency(
+    3 -> Gen.oneOf(devices.flatMap(Option(_))).map(Option(_)),
+    3 -> Gen.oneOf("123456", "4123456", "777001", "24777001", "9123456").map(Option(_)),
+    1 -> Gen.oneOf("0", "-4123456", "-12", "1234", "9998", "abc", "350000000000009").map(Option(_)),
+    1 -> Gen.const(None))
+  // two forms drawing survey_ids from a small pool: the same survey_id
+  // shows up in both forms, with the same or a different tracker
+  private val landingRow = for {
+    form <- Gen.oneOf("legacy", "current")
+    sid <- Gen.frequency(8 -> Gen.oneOf("1-1-1", "1-1-2", "2-1-1", "3-1-1").map(Option(_)),
+      1 -> Gen.const(None))
+    imei <- trackerValue
+    kg <- Gen.chooseNum(1, 99)
+  } yield (form, sid, imei, kg)
+
+  property("attachImeis equals the per-row validateImeis + survey_id join") =
+    forAll(Gen.listOf(landingRow), Gen.someOf(devices)) { (rows, reg) =>
+      // one planted cross-form collision with different trackers per case
+      val planted = Seq(("legacy", Some("9-1-1"), Some("123456"), 1),
+        ("current", Some("9-1-1"), Some("869606024777001"), 2))
+      val data = (rows ++ planted).toDF("form_name", "survey_id", "tracker_imei", "catch_kg")
+      val registry = reg.toSeq.toDF("IMEI")
+      val cols = Seq("form_name", "survey_id", "tracker_imei", "catch_kg", "imei", "alert_number")
+      def bag(df: DataFrame) =
+        df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      bag(graft.pipeline.Validate.attachImeis(data, "tracker_imei", registry, "IMEI")) ==
+        bag(perRowImeis(data, "tracker_imei", registry, "IMEI"))
+    }
+
   property("pageRank conserves mass exactly when no node dangles") =
     forAll(Gen.chooseNum(2, 12), Gen.chooseNum(1L, 99L)) { (n, salt) =>
       // every node gets an out-edge (a pseudo-random functional graph),
