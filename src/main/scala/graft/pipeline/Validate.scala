@@ -138,32 +138,35 @@ object Validate {
         .otherwise(lit(3)).as("alert_number"))
   }
 
-  /** Landings ++ (imei, alert_number): the V6 verdicts of [[validateImeis]]
-    * attached with the semantics of the reference's `left_join(by =
-    * "survey_id")` of the per-(survey_id, raw IMEI) verdicts
-    * (R/merge_trips.R:73-85). A row with a null survey_id gets nulls; any
-    * other row gets one output row per distinct raw IMEI (null counted)
-    * among the rows sharing its survey_id. That set is the row's own IMEI
-    * unless a survey_id is reused across forms with different trackers —
-    * the join's fan-out, reproduced for just those survey_ids: their sets
-    * are collected by one narrow aggregation and broadcast (they are rare
-    * by construction — P7 keys are unique within a form), every other row
-    * looks its own IMEI up, and the verdicts attach by a broadcast hash
-    * join on the raw value. The wide frame is never shuffled.
+  /** Landings ++ (imei, alert_number): the reference's `left_join(by =
+    * "survey_id")` of per-(survey_id, raw IMEI) verdicts
+    * (R/merge_trips.R:73-85), row for row as the per-row formulation
+    * computes it — the suffix match probed once per landing row and
+    * grouped by (survey_id, raw IMEI), so a pair carried by k rows counts
+    * each of its m registry matches k times. Here V6 runs once per
+    * distinct raw value ([[validateImeis]], broadcast: one row per
+    * tracker in use) and k comes from one narrow count per pair; k·m is a
+    * unique match only when k = 1, so a unique match repeated under one
+    * survey_id becomes alert 2 with no IMEI, as before. The pair counts
+    * attach by a left join on survey_id, which fans out where a survey_id
+    * carries several trackers (e.g. reused across forms) — the planner
+    * picks that join from the counts' size — and each output row then
+    * looks up its pair's verdict.
     */
   def attachImeis(landings: DataFrame, imeiCol: String, registry: DataFrame,
                   registryCol: String): DataFrame = {
-    val raw = struct(col(imeiCol).as("v"))
-    val shared = landings.filter(col("survey_id").isNotNull)
-      .groupBy(col("survey_id").as("__sid"))
-      .agg(collect_set(raw).as("__raws"))
-      .filter(size(col("__raws")) > 1)
-    val own = when(col("survey_id").isNotNull, raw)
-    landings.join(broadcast(shared), col("survey_id") === col("__sid"), "left")
-      .withColumn("__pick", explode(coalesce(col("__raws"), array(own))))
-      .join(broadcast(validateImeis(landings, imeiCol, registry, registryCol)),
-        col("__pick.v") === col("raw_imei"), "left")
-      .drop("__sid", "__raws", "__pick", "raw_imei")
+    val verdicts = validateImeis(landings, imeiCol, registry, registryCol)
+    val pairs = landings.groupBy(col("survey_id"), col(imeiCol).as("__raw"))
+      .agg(count(lit(1)).as("__k"))
+    val repeatedMatch = col("__k") > 1 && col("imei").isNotNull
+    // the using-column join's order: survey_id, then the other landing columns
+    val kept = ("survey_id" +: landings.columns.filterNot(_ == "survey_id"))
+      .map(c => col(s"`$c`"))
+    landings.join(pairs, Seq("survey_id"), "left")
+      .join(broadcast(verdicts), col("__raw") === col("raw_imei"), "left")
+      .select(kept ++ Seq(
+        when(!repeatedMatch, col("imei")).as("imei"),
+        when(repeatedMatch, lit(2)).otherwise(col("alert_number")).as("alert_number")): _*)
   }
 
   /** V7 orchestration (reference validate_landings, R/validation.R:36-106):

@@ -334,14 +334,12 @@ object GraftProps extends Properties("graft") {
     }
 
   /** The per-row V6 formulation `Runner.mergeTrips` used before
-    * [[graft.pipeline.Validate.attachImeis]]: the suffix match runs once
-    * per (survey_id, raw IMEI) probe row, and the verdicts are left-joined
-    * back on survey_id. Fed distinct (survey_id, raw IMEI) pairs, so each
-    * registry match counts once per pair, as the reference's scalar
-    * `validate_this_imei` counts it. */
+    * [[graft.pipeline.Validate.attachImeis]], unchanged: the suffix match
+    * runs once per landing row's (survey_id, raw IMEI) probe, and the
+    * verdicts are left-joined back on survey_id. */
   private def perRowImeis(data: DataFrame, imeiCol: String, registry: DataFrame,
                           registryCol: String): DataFrame = {
-    val probe = data.select(col("survey_id"), col(imeiCol).as("__raw")).distinct()
+    val probe = data.select(col("survey_id"), col(imeiCol).as("__raw"))
       .withColumn("__num", abs(expr("try_cast(__raw as double)")))
       .withColumn("__str", col("__num").cast("long").cast("string"))
     val matched = Matching.suffixMatchCount(probe, "__str",
@@ -382,16 +380,20 @@ object GraftProps extends Properties("graft") {
 
   property("attachImeis equals the per-row validateImeis + survey_id join") =
     forAll(Gen.listOf(landingRow), Gen.someOf(devices)) { (rows, reg) =>
-      // one planted cross-form collision with different trackers per case
+      // planted cross-form collisions per case: one with different
+      // trackers, one with the same tracker
       val planted = Seq(("legacy", Some("9-1-1"), Some("123456"), 1),
-        ("current", Some("9-1-1"), Some("869606024777001"), 2))
+        ("current", Some("9-1-1"), Some("869606024777001"), 2),
+        ("legacy", Some("8-1-1"), Some("4123456"), 3),
+        ("current", Some("8-1-1"), Some("4123456"), 4))
       val data = (rows ++ planted).toDF("form_name", "survey_id", "tracker_imei", "catch_kg")
       val registry = reg.toSeq.toDF("IMEI")
       val cols = Seq("form_name", "survey_id", "tracker_imei", "catch_kg", "imei", "alert_number")
       def bag(df: DataFrame) =
         df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
-      bag(graft.pipeline.Validate.attachImeis(data, "tracker_imei", registry, "IMEI")) ==
-        bag(perRowImeis(data, "tracker_imei", registry, "IMEI"))
+      val got = graft.pipeline.Validate.attachImeis(data, "tracker_imei", registry, "IMEI")
+      val want = perRowImeis(data, "tracker_imei", registry, "IMEI")
+      got.columns.sameElements(want.columns) && bag(got) == bag(want)
     }
 
   property("pageRank conserves mass exactly when no node dangles") =

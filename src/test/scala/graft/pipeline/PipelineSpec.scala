@@ -239,10 +239,10 @@ class PipelineSpec extends SparkTestBase {
     assert(started.startsWith("2024-03-11 05:30"))
   }
 
-  test("merge: IMEI verdicts attach per distinct tracker; a survey_id shared across forms fans out") {
+  test("merge: IMEI verdicts attach by survey_id; a survey_id shared across forms fans out") {
     val registry = Seq("869606024123456", "869606000777001").toDF("IMEI")
     val landings = Seq(
-      ("legacy", "1-1-1", "4123456"), // unique suffix match
+      ("legacy", "1-1-1", "4123456"), // one registry match
       ("current", "1-1-1", "4123456"), // same survey_id, same tracker
       ("legacy", "2-1-1", "4123456"),
       ("current", "2-1-1", "777001"), // same survey_id, another tracker
@@ -252,15 +252,15 @@ class PipelineSpec extends SparkTestBase {
     val got = Validate.attachImeis(landings, "tracker_imei", registry, "IMEI")
       .select("form_name", "survey_id", "tracker_imei", "imei", "alert_number")
       .collect().map(_.toSeq.mkString("|")).toSeq.sorted
-    // each tracker's verdict counts its registry matches once, so a
-    // tracker repeated under one survey_id keeps its unique match; a
+    // a tracker repeated under one survey_id counts its registry match
+    // once per row, so its unique match reads as several (alert 2); a
     // survey_id carrying two trackers gives every one of its rows both
-    // verdicts, as the reference's left join by survey_id does
+    // verdicts, as the left join by survey_id does
     assert(got == Seq(
-      "current|1-1-1|4123456|869606024123456|null",
+      "current|1-1-1|4123456|null|2",
       "current|2-1-1|777001|869606024123456|null",
       "current|2-1-1|777001|869606000777001|null",
-      "legacy|1-1-1|4123456|869606024123456|null",
+      "legacy|1-1-1|4123456|null|2",
       "legacy|2-1-1|4123456|869606024123456|null",
       "legacy|2-1-1|4123456|869606000777001|null",
       "legacy|3-1-1|0|null|null",
