@@ -1202,9 +1202,18 @@ object Bench {
       val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
     })
 
-  private def newSession(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
+  private def newSession(cpus: String): SparkSession =
+    Session(cpus, Seq(
+      // unroll de-pressure knobs (round 16, verdict item 3): the r15
+      // driver crash was storage-memory exhaustion from 32 concurrent
+      // task unrolls of localCheckpoint blocks at the 8 g heap.
+      // CHECKPOINT_LEVEL=DISK_ONLY streams checkpoint blocks straight
+      // to DiskStore (no unroll at all — see Materialize.cut);
+      // STORAGE_FRACTION trades execution headroom for storage. Both
+      // default to Spark/library defaults; the measured decision is in
+      // docs/BENCH_SALVAGE.md + SCALING.md.
+      graft.ops.Materialize.CheckpointLevelKey ->
+        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_LEVEL", "MEMORY_AND_DISK")) ++
       // shuffle partitions default to the thread count but are
       // separately overridable (round 17): the REAL sf100 OOM class —
       // named by the in-process histogram, docs/HOST_DRIFT.md §6 — is
@@ -1216,28 +1225,8 @@ object Bench {
       // shuffles back down, so the knob is near-free where data is
       // small and load-bearing where it is not — the standard
       // partitions-track-data sizing this library preaches for 100 TB.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // unroll de-pressure knobs (round 16, verdict item 3): the r15
-      // driver crash was storage-memory exhaustion from 32 concurrent
-      // task unrolls of localCheckpoint blocks at the 8 g heap.
-      // CHECKPOINT_LEVEL=DISK_ONLY streams checkpoint blocks straight
-      // to DiskStore (no unroll at all — see Materialize.cut);
-      // STORAGE_FRACTION trades execution headroom for storage. Both
-      // default to Spark/library defaults; the measured decision is in
-      // docs/BENCH_SALVAGE.md + SCALING.md.
-      .config(graft.ops.Materialize.CheckpointLevelKey,
-        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_LEVEL", "MEMORY_AND_DISK"))
-    val spark = sys.env.get("SPARK_GRAFT_STORAGE_FRACTION")
-      .fold(b)(f => b.config("spark.memory.storageFraction", f))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map("spark.sql.shuffle.partitions" -> _) ++
+      sys.env.get("SPARK_GRAFT_STORAGE_FRACTION").map("spark.memory.storageFraction" -> _))
 
   /** Untimed warmup: touch every table once, then run a REPRESENTATIVE
     * slice of the heaviest composed query end-to-end. Table counts alone
@@ -1931,7 +1920,7 @@ object Bench {
     val budget = sys.env.getOrElse(SectionBudgetEnv, "1200").toDouble
     val names = sys.env.getOrElse(SectionQueriesEnv, "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.defaultCpus
     val start = System.nanoTime()
     def timeLeft(): Boolean = (System.nanoTime() - start) / 1e9 < budget
     inFlightFile = Some(outPath + ".inflight")
@@ -2174,7 +2163,7 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - startNs) / 1e9
     def timeLeft(): Boolean = elapsed < deadlineSecs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.defaultCpus
     // 5 passes, not 3: after one suspect exclusion a 3-pass query is
     // down to two samples — one GC-unlucky sample then decides the
     // median (see [[median]]). Five passes keep ≥3 clean samples through

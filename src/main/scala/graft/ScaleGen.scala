@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -91,12 +91,9 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-scalegen").getOrCreate()
+    // 32 shuffle partitions on any host: the generated corpora keep one
+    // file layout wherever they are built
+    val spark = Session(confs = Seq("spark.sql.shuffle.partitions" -> "32"))
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // Non-destructive write: materialize into a temp dir, verify it is

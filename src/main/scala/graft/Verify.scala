@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,20 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional dev filter; driver passes 2 args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Fork-materialization strategy override (docs/SCALING.md, round 15):
     // SPARK_GRAFT_FORK_MATERIALIZE=table runs the whole gate catalog with
     // durable parquet fork staging — the catalog-wide strategy-invariance
     // artifact (docs/fork_invariance_r15.json) is two Verify runs diffed.
-    sys.env.get("SPARK_GRAFT_FORK_MATERIALIZE")
-      .foreach(v => builder.config(graft.ops.Materialize.StrategyKey, v))
     // Checkpoint storage-level override (round 17): =DISK_ONLY runs the
     // whole catalog with unroll-free checkpoint writes — the catalog-wide
     // level-invariance artifact (docs/checkpoint_level_invariance_r17.json)
     // is two Verify runs diffed, certifying the degraded bench retry mode
     // and the small-heap escape hatch can never change answers.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_LEVEL")
-      .foreach(v => builder.config(graft.ops.Materialize.CheckpointLevelKey, v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val overrides = Seq(
+      "SPARK_GRAFT_FORK_MATERIALIZE" -> graft.ops.Materialize.StrategyKey,
+      "SPARK_GRAFT_CHECKPOINT_LEVEL" -> graft.ops.Materialize.CheckpointLevelKey)
+      .flatMap { case (env, key) => sys.env.get(env).map(key -> _) }
+    val spark = Session(confs = overrides)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {

@@ -110,8 +110,8 @@ object VectorExprs {
     * (planes planeOffset..planeOffset+bits-1) — the OR-amplification
     * hook: each LSH table t uses offset t*bits.
     *
-    * `planeHash` = `"xxhash64"` (exactly the HOF form in
-    * Similarity.planeWeight, bit-parity property-tested — the default)
+    * `planeHash` = `"xxhash64"` (exactly the HOF plane weight SimilaritySpec
+    * keeps as its reference, bit-parity property-tested — the default)
     * or `"md5"` (first 15 hex digits of md5("p_i") mod 2000001, mapped
     * to [-1, 1] — reproducible in any engine with an md5(), which makes
     * the bucketing itself SQL-oracle-able; projections are sequential

@@ -296,13 +296,13 @@ object Dedup {
   private def shingleCeiling(df: DataFrame): Long =
     df.sparkSession.conf.get(ShingleCeilingKey, "2000000").toLong
 
-  private def pairCeiling(df: DataFrame): Long =
+  private[ops] def pairCeiling(df: DataFrame): Long =
     df.sparkSession.conf.get(PairCeilingKey, "1000000").toLong
 
   /** identity below the ceiling (planner free to broadcast), shuffle_hash
     * pin above it.
     */
-  private def adaptivePin(small: Boolean): DataFrame => DataFrame =
+  private[ops] def adaptivePin(small: Boolean): DataFrame => DataFrame =
     if (small) identity else _.hint("shuffle_hash")
 
   /** Exact dedup: keep, per distinct normalized text, the row with the
@@ -794,7 +794,8 @@ object Dedup {
     * long-document corpora (web pages: hundreds-to-thousands of shingles
     * vs 64 bands) this is 10-80× smaller; on the short-doc synthetic
     * gate corpus (~51 shingles/doc) it is actually slightly LARGER
-    * (measured by IncrementalProbeBench at sf100: 132 MB vs 104 MB).
+    * (measured by `IncrementalProbeBench` of commit 0adf981 at sf100:
+    * 132 MB vs 104 MB).
     * The bucket derivation is byte-identical to [[minhashLshPairs]]'
     * banding (same signature expression, same per-band xxhash64 fold),
     * so an index built here collides exactly like the in-memory path.
@@ -883,9 +884,10 @@ object Dedup {
     * the shuffle-free arrival of both tables (and its negative control
     * shows the plain-parquet index reshuffling per batch).
     *
-    * WHEN TO USE — measured, not assumed (IncrementalProbeBench with
-    * pre-persisted indexes, warm pass, 8 g heap; round-13 sweep across
-    * the generated decades, history = half the corpus):
+    * WHEN TO USE — measured, not assumed (`IncrementalProbeBench` of
+    * commit 0adf981 with pre-persisted indexes, warm pass, 8 g heap;
+    * round-13 sweep across the generated decades, history = half the
+    * corpus):
     *
     *   | corpus | inverted probe | band probe | index bytes (sh/bands) |
     *   |--------|----------------|------------|------------------------|
@@ -941,7 +943,7 @@ object Dedup {
       n, bands, rowsPerBand, threshold).forkMaterialize()
     // ONE tokenize+shingle pass over the survivors feeds both the band
     // probe and the verify sets (the signature is the dominant batch
-    // cost — see the IncrementalProbeBench numbers in the scaladoc)
+    // cost — see the probe-bench numbers in the scaladoc)
     val survShingled = wordShingled(batchSurvivors, textCol, idCol, n)
       .forkMaterialize()
     // candidate probe: batch side built (Θ(batch × bands) fixed-width
@@ -1719,15 +1721,11 @@ object Dedup {
   /** MinHash signature as an array column: for permutation i,
     * min over shingles s of xxhash64(s, i). Evaluated by the fused
     * [[graft.functions.HashExprs.MinHashSig]] expression (one eval/row);
-    * [[minhashSignatureHof]] is the equivalent HOF form kept for
-    * property-testing the expression against Spark builtins.
+    * DedupSpec property-tests it against the equivalent HOF form over
+    * Spark builtins.
     */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     graft.functions.HashExprs.minhashSig(shingles, numHashes)
-
-  def minhashSignatureHof(shingles: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingles, s => xxhash64(s, i))))
 
   /** MinHash + LSH banding near-dup candidate pairs, verified with exact
     * shingle Jaccard. `bands` × `rowsPerBand` hashes; two docs collide if
@@ -1837,28 +1835,14 @@ object Dedup {
 
   /** Connected components over a near-dup pair list. Returns (id, label)
     * for every vertex that appears in `pairs`; the label is the cluster's
-    * minimum id. Two interchangeable algorithms (equality-tested on chain/
-    * star/random graphs in DedupSpec):
+    * minimum id.
     *
-    *   - `"star"` (default): alternating large-star/small-star contraction
-    *     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    *     SoCC'14) — O(log n) rounds regardless of graph shape, the
-    *     planet-scale guarantee when a near-dup graph hides a long chain
-    *     (e.g. documents A≈B≈C≈… drifting gradually).
-    *   - `"label"`: iterative min-label propagation — O(diameter) rounds;
-    *     marginally less work per round, fine for the shallow clusters
-    *     typical of near-dup graphs.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          algorithm: String = "star"): DataFrame =
-    algorithm match {
-      case "star"  => connectedComponentsStar(pairs, maxIter)
-      case "label" => connectedComponentsLabel(pairs, maxIter)
-      case other => throw new IllegalArgumentException(
-        s"unknown connected-components algorithm '$other' (star | label)")
-    }
-
-  /** Large-star/small-star alternation. Each round:
+    * Large-star/small-star alternation (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — O(log n) rounds
+    * regardless of graph shape, the planet-scale guarantee when a near-dup
+    * graph hides a long chain (e.g. documents A≈B≈C≈… drifting gradually).
+    * DedupSpec checks it equal to iterative min-label propagation (O(diameter)
+    * rounds) on chain, star and random graphs. Each round:
     *
     *   - LARGE-STAR: for every vertex u (symmetric neighborhoods), link
     *     each strictly-larger neighbor v to m = min(N(u) ∪ {u}).
@@ -1972,43 +1956,6 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 
-  /** Iterative min-label propagation: every vertex starts labeled with
-    * itself; each round every vertex takes the min label across itself and
-    * its neighbors; stop when no label changes. Deterministic; converges
-    * in O(graph diameter) rounds — near-dup clusters are shallow, so a
-    * handful. Lineage is cut per round with localCheckpoint so plans don't
-    * grow exponentially.
-    */
-  def connectedComponentsLabel(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    // same single-materialization contract as the star variant: the union
-    // below reads its source twice within one job
-    val p0 = pairs.select(col("id_a"), col("id_b")).forkMaterialize()
-    // same small-graph broadcast / big-graph shuffle_hash adaptivity as
-    // the star variant (labels is Θ(dup-graph vertices))
-    val h = adaptivePin(p0.count() <= pairCeiling(p0))
-    val edges = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .lineageCut()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .lineageCut()
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val propagated = edges.join(h(labels), edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-        .union(labels)
-        .groupBy("id").agg(min("label").as("label"))
-        .lineageCut()
-      changed = propagated.as("n")
-        .join(h(labels.withColumnRenamed("label", "__old")), Seq("id"))
-        .filter(col("label") =!= col("__old")).count()
-      labels = propagated
-      iter += 1
-    }
-    labels
-  }
-
   /** Keep-one-per-near-dup-cluster: documents whose id is not the minimum
     * of its cluster are dropped (isolated documents always survive).
     */
@@ -2061,12 +2008,6 @@ object Dedup {
   def simhash64(textCol: Column): Column =
     graft.functions.HashExprs.simhash64(Text.tokens(textCol))
 
-  /** HOF-builtin form of [[simhash64]], kept to property-test the fused
-    * expression (bit-identical by construction).
-    */
-  def simhash64Hof(textCol: Column): Column =
-    simhashVote(transform(Text.tokens(textCol), t => xxhash64(t)))
-
   /** [[simhash64]] variant whose per-token 64-bit hash is the first 16
     * hex digits of md5 (bytes 0-7 big-endian). md5 is the one
     * 64-bit-capable hash Spark and DuckDB both expose with identical
@@ -2078,30 +2019,6 @@ object Dedup {
     */
   def simhash64Md5(textCol: Column): Column =
     graft.functions.HashExprs.simhash64(Text.tokens(textCol), "md5")
-
-  /** HOF-builtin form of [[simhash64Md5]] (conv/substring/md5 chain),
-    * kept to property-test the fused expression's MessageDigest token
-    * hash against Spark's own md5() builtin (bit-identical).
-    */
-  def simhash64Md5Hof(textCol: Column): Column =
-    simhashVote(transform(Text.tokens(textCol), t =>
-      shiftleft(conv(substring(md5(t), 1, 8), 16, 10).cast(LongType), 32)
-        .bitwiseOR(conv(substring(md5(t), 9, 8), 16, 10).cast(LongType))))
-
-  /** Per-bit majority vote over an array of 64-bit token hashes: bit j of
-    * the result is 1 iff more hashes have bit j set than clear. Shared by
-    * the HOF and md5 simhash forms; the sum of distinct powers of two is
-    * exact in two's complement (the 1L<<63 term wraps negative, which is
-    * the intended bit pattern).
-    */
-  private def simhashVote(hashes: Column): Column = {
-    val bits: Seq[Column] = (0 until 64).map { j =>
-      val vote = aggregate(hashes, lit(0), (acc, h) =>
-        acc + when(shiftright(h, j).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(vote > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Bit ranges `(offset, width)` splitting a 64-bit word into `numChunks`
     * disjoint, covering, NON-EMPTY chunks: chunk i spans

@@ -10,63 +10,30 @@ import org.apache.spark.sql.types._
   * exact cosine top-k as the baseline, hyperplane-LSH buckets as the
   * 100 TB scale path.
   *
-  * Vector math is expressed with `zip_with`/`aggregate` higher-order
-  * functions — pure Catalyst expressions, no UDF/serialization cost, and
-  * arithmetic is double everywhere so results are engine-reproducible.
+  * Vector math is fused Catalyst expressions ([[graft.functions
+  * .VectorExprs]]) or `zip_with`/`aggregate` higher-order functions — no
+  * UDF/serialization cost, and arithmetic is double everywhere so results
+  * are engine-reproducible.
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ (sequential left-to-right double sum — deterministic). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** ‖a‖₂ */
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-
   /** Cosine similarity; null-safe on zero vectors (returns null).
     * Fused expression ([[graft.functions.VectorExprs.CosineSim]]) — one
-    * eval per row; [[cosineHof]] is the builtin-HOF twin kept for parity
-    * testing.
+    * eval per row; SimilaritySpec pins it to a builtin-HOF form.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineSim(a, b)
-
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val na = l2norm(a)
-    val nb = l2norm(b)
-    when(na > 0 && nb > 0, d / (na * nb))
-  }
-
-  /** Deterministic pseudo-random hyperplane weight for (plane, dim):
-    * xxhash64 folded into [-1, 1). No RNG — reproducible across runs,
-    * executors, and resumes.
-    */
-  private def planeWeight(plane: Int, dim: Column): Column =
-    (pmod(xxhash64(lit(plane), dim), lit(2000001L)).cast(DoubleType) - 1000000.0) / 1000000.0
 
   /** Hyperplane-LSH bucket id: `bits` sign bits of projections onto
     * deterministic hyperplanes. Nearby (cosine) vectors collide with high
     * probability; bucket count = 2^bits bounds candidate-set size.
     * `planeOffset` selects an independent plane family — table t of an
     * OR-amplified scheme passes offset t*bits.
-    * Fused expression; [[hyperplaneBucketHof]] kept for parity testing.
+    * Fused expression; SimilaritySpec pins it to a builtin-HOF form.
     */
   def hyperplaneBucket(vec: Column, bits: Int, planeOffset: Int = 0,
                        planeHash: String = "xxhash64"): Column =
     graft.functions.VectorExprs.hyperplaneBucket(vec, bits, planeOffset, planeHash)
-
-  def hyperplaneBucketHof(vec: Column, bits: Int, planeOffset: Int = 0): Column = {
-    val idx = sequence(lit(0), size(vec) - 1)
-    val bitCols: Seq[Column] = (0 until bits).map { p =>
-      val proj = aggregate(
-        zip_with(vec, idx, (x, i) => x * planeWeight(planeOffset + p, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
 
   /** Exact brute-force cosine top-k: every query row scored against the
     * whole corpus, top k per query by (cosine desc, corpus id asc — the
@@ -318,37 +285,6 @@ object Similarity {
       .select(col("__id"), col("__s"),
         slice(col("__v"), col("__s") * dsub + 1, lit(dsub)).as("__sv"))
 
-  /** Squared L2 distance computed as `⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩` with each
-    * inner product a sequential left-to-right double sum — the SAME
-    * association order DuckDB's `LIST_INNER_PRODUCT` uses, so codebook
-    * assignment DECISIONS reproduce bit-for-bit in the relational oracle
-    * (the property every centroid gate already leans on via [[cosine]]).
-    * The canonical PQ subquantizer metric: unlike cosine it respects
-    * subvector magnitude, which the reconstruction must preserve.
-    */
-  private def l2sq(a: Column, b: Column): Column =
-    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
-
-  /** HOF twin of the native PQ assignment ([[pqAssignNative]]), kept for
-    * bit-parity testing: min over the broadcast codebook of (squared L2
-    * asc, code asc) — the deterministic tie rule, expressed as a
-    * min-struct so the per-(id, subspace) reduction map-side combines.
-    * The candidate fan-out (×ksub rows per subvector, three array
-    * allocations per candidate inside [[l2sq]]) is why the native
-    * expression replaced it on the hot path: 45 s → ~1 s warm at sf0.1.
-    */
-  private[ops] def pqAssignHof(sv: DataFrame, codebook: DataFrame): DataFrame =
-    sv.join(broadcast(codebook), Seq("__s"))
-      .select(col("__id"), col("__s"),
-        // (distance, code) only: code is unique, so a third tie-break
-        // slot could never fire — carrying the subvector there was pure
-        // shuffle weight
-        struct(l2sq(col("__sv"), col("cent")).as("__d"), col("code").as("__code"))
-          .as("__cand"))
-      .groupBy("__id", "__s")
-      .agg(min(col("__cand")).as("__w"))
-      .select(col("__id"), col("__s"), col("__w.__code").cast("long").as("code"))
-
   /** Collect a codebook frame to the driver as code-sorted per-subspace
     * (ids, centroid matrices) — the √-corpus-free, ksub·d-double object
     * [[graft.functions.VectorExprs.PqEncode]] references from the plan.
@@ -372,8 +308,8 @@ object Similarity {
 
   /** All m codes per vector via the native [[graft.functions.VectorExprs
     * .PqEncode]] expression — one tight JVM loop per row, no candidate
-    * fan-out. Returns (__id, __s, code) long-format, bit-compatible with
-    * [[pqAssignHof]] (spec-pinned).
+    * fan-out. Returns (__id, __s, code) long-format; SimilaritySpec pins
+    * it bit-identical to the relational min over the broadcast codebook.
     */
   private def pqAssignNative(vecs: DataFrame, codebook: DataFrame,
                              m: Int, dsub: Int): DataFrame = {
@@ -399,7 +335,7 @@ object Similarity {
     * into `m` subspaces of `dsub` dims; each subspace gets `ksub`
     * centroids seeded from the first `ksub` corpus vectors by id (code =
     * 1-based rank — no RNG) and refined by `iters` Lloyd steps under
-    * squared-L2 assignment ([[l2sq]]) with the same quantized-integer
+    * squared-L2 assignment ([[pqAssignNative]]) with the same quantized-integer
     * mean update as [[ivfCentroids]] ([[CentroidQuantScale]]), so the
     * whole codebook stream is BIT-reproducible at any partitioning and
     * rebuildable in the relational oracle. Returns (__s, code, cent).

@@ -118,9 +118,9 @@ object Text {
     * decision. The selection runs as the fused
     * [[graft.functions.TextExprs.Winnow]] kernel — O(grams) via a
     * monotonic-deque sliding minimum with one reused digest (the HOF
-    * twin below, kept spec-pinned bit-identical, allocated a struct per
-    * (window, gram) comparison in interpreted lambdas: 16.1 s → ~1 s at
-    * sf0.1). The only exchange is whatever the caller joins the
+    * form TextSpec keeps as its bit-identical reference allocated a
+    * struct per (window, gram) comparison in interpreted lambdas: 16.1 s
+    * → ~1 s at sf0.1). The only exchange is whatever the caller joins the
     * fingerprints on. Texts shorter than `k` chars yield one whole-text
     * gram (every doc fingerprints); fewer grams than `w` yield one
     * window over them all.
@@ -132,41 +132,6 @@ object Text {
     df.select(col(idCol),
         explode(graft.functions.TextExprs.winnow(
           normalize(col(textCol)), k, w)).as("__fp"))
-      .select(col(idCol),
-        col("__fp.pos").as("pos"), col("__fp.h").as("fingerprint"))
-  }
-
-  /** Builtin-HOF twin of [[winnowingFingerprints]], kept for bit-parity
-    * testing of the fused kernel (the same convention as cosineHof /
-    * hyperplaneBucketHof).
-    */
-  def winnowingFingerprintsHof(df: org.apache.spark.sql.DataFrame,
-                               idCol: String, textCol: String,
-                               k: Int = 5, w: Int = 4): org.apache.spark.sql.DataFrame = {
-    require(k >= 1 && w >= 1, s"k=$k w=$w must be >= 1")
-    // each stage materializes its column so the next stage's lambdas
-    // slice an attribute instead of re-running the whole chain per
-    // element (the tokens-materialization trap, same as wordShingles)
-    val norm = df.select(col(idCol), normalize(col(textCol)).as("__s"))
-    norm.select(col(idCol),
-      transform(
-        sequence(lit(1), greatest(length(col("__s")) - lit(k - 1), lit(1))),
-        i => struct(
-          conv(substring(md5(col("__s").substr(i, lit(k))), 1, 15), 16, 10)
-            .cast(LongType).as("h"),
-          i.cast(IntegerType).as("pos"))).as("__grams"))
-      .select(col(idCol),
-        transform(
-          sequence(lit(1), greatest(size(col("__grams")) - lit(w - 1), lit(1))),
-          widx => aggregate(
-            slice(col("__grams"), widx, lit(w)),
-            struct(lit(Long.MaxValue).as("h"), lit(-1).as("pos")),
-            (acc, g) => when(
-              g.getField("h") < acc.getField("h") ||
-                (g.getField("h") === acc.getField("h") &&
-                  g.getField("pos") > acc.getField("pos")),
-              g).otherwise(acc))).as("__sel"))
-      .select(col(idCol), explode(array_distinct(col("__sel"))).as("__fp"))
       .select(col(idCol),
         col("__fp.pos").as("pos"), col("__fp.h").as("fingerprint"))
   }

@@ -194,6 +194,15 @@ object Preprocess {
       family(joined, "length").as("gear_length"))
   }
 
+  /** R's double division `x / y` without ANSI's DIVIDE_BY_ZERO: a
+    * non-zero x over a zero y is ±Inf (SURVEY.md P6). R's 0/0 is NaN,
+    * which R treats as NA — medians drop it and comparisons with it are
+    * NA — so it is null here: a Spark NaN sorts above every value and
+    * would fire the high-price alert.
+    */
+  private def rDivide(x: Column, y: Column): Column =
+    when(y === 0, when(x =!= 0, x * Double.PositiveInfinity)).otherwise(x / y)
+
   private val numericCols = Seq(
     "n_boats", "n_fishers", "n_women", "trip_length", "mesh_size_mm",
     "catch_price", "catch_kg", "lat", "lon", "gear_depth",
@@ -204,14 +213,14 @@ object Preprocess {
     * gillnets HOF fix-up → P4 recodes
     * (reference R/preprocessing.R:274-398).
     */
-  def apply(raw: DataFrame, useFaithfulJoins: Boolean = false): DataFrame = {
+  def apply(raw: DataFrame): DataFrame = {
     val core = coreData(raw)
     val merged = harmonized(core)
-    val gears = if (useFaithfulJoins) gearEffortJoined(core) else gearEffortFused(core)
+    val gears = gearEffortFused(core)
 
     // J2: reference full-joins merged × gears on (form_name, submission_id,
     // survey_id, gear) — both sides derive 1:1 from core_data so this is a
-    // re-assembly too; under fused mode it collapses to a key join.
+    // re-assembly too, which collapses to a key join.
     // Null-safe: gear is null when no gear was recorded, and dplyr's
     // full_join matches NA keys (na_matches="na") — a plain equi-join
     // would split such rows in two.
@@ -230,7 +239,7 @@ object Preprocess {
       .withColumn("submission_id", col("submission_id").cast(StringType))
       .withColumn("survey_id", col("survey_id").cast(StringType))
       .withColumn("price_kg",
-        when(col("catch_price_type") === "total", col("catch_price") / col("catch_kg"))
+        when(col("catch_price_type") === "total", rDivide(col("catch_price"), col("catch_kg")))
           .otherwise(col("catch_price")))
       .distinct()
 

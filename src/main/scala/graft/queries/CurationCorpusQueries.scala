@@ -479,7 +479,7 @@ private[graft] object CurationCorpusQueries {
         .select(col("doc_id").as("id_a"), (col("doc_id") - 1).as("id_b"))
         .unionByName(d.filter(pmod(col("doc_id"), lit(9)) === 5)
           .select(col("doc_id").as("id_a"), (col("doc_id") - 3).as("id_b")))
-      Dedup.connectedComponents(edges).orderBy("id")
+      Dedup.connectedComponentsStar(edges).orderBy("id")
     },
     Some("""WITH RECURSIVE e AS (
               SELECT doc_id AS a, doc_id - 1 AS b FROM documents WHERE doc_id % 9 <> 0

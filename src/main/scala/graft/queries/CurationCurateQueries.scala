@@ -74,7 +74,7 @@ private[graft] object CurationCurateQueries {
     * survivors and scores every doc, and DSIR runs two hashed-unigram
     * passes plus a top-k cut: 14.4 s, ~58% of the gate wall
     * (docs/CURATE_SCREENS_ATTRIBUTION.md; per-stage table from
-    * `CurateProfile <reps> screens`). Like curateE2E it is excluded
+    * `CurateProfile <reps> screens`, a tool in commit 0adf981). Like curateE2E it is excluded
     * from every scale set — the composition coverage needs the planted
     * structure; scaling claims don't.
     */

@@ -117,8 +117,7 @@ private[graft] object CurationDedupQueries {
             WHERE ntext NOT IN (SELECT ntext FROM hist)
             ORDER BY batch, doc_id"""
 
-  // private[graft] (round 14): TwinProfile reuses the exact gate constructions
-  private[graft] def reuseHistory(d: org.apache.spark.sql.DataFrame) =
+  private def reuseHistory(d: org.apache.spark.sql.DataFrame) =
     (0 until 20).map(i => d.select(
       (col("doc_id") + lit(100000L * (i + 1))).as("doc_id"),
       concat(col("text"), lit(s" v$i")).as("text"),

@@ -13,17 +13,7 @@ object SparkTestBase {
     // previous `sbt test` run — the catalog is fresh each run but
     // ./spark-warehouse would persist, failing with LOCATION_ALREADY_EXISTS.
     val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Session("4", Seq("spark.sql.warehouse.dir" -> warehouse))
   }
 }
 

@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.SparkTestBase
+import graft.ops.Materialize.ForkOps
 
 /** Dedup operator semantics: exact survivors, fused hash expressions vs
   * HOF builtins (bit parity), LSH recall against the exact definition,
@@ -275,7 +278,7 @@ class DedupSpec extends SparkTestBase {
     val sh = Text.charShingles(col("text"), 5)
     val both = docs.select(
       Dedup.minhashSignature(sh, 16).as("expr"),
-      Dedup.minhashSignatureHof(sh, 16).as("hof")).collect()
+      DedupTwins.minhashSignatureHof(sh, 16).as("hof")).collect()
     both.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -295,7 +298,7 @@ class DedupSpec extends SparkTestBase {
   test("SimHash64 expression is bit-identical to the HOF form") {
     val both = docs.select(
       Dedup.simhash64(col("text")).as("expr"),
-      Dedup.simhash64Hof(col("text")).as("hof")).collect()
+      DedupTwins.simhash64Hof(col("text")).as("hof")).collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
@@ -450,7 +453,7 @@ class DedupSpec extends SparkTestBase {
     // and the fused MessageDigest token hash is bit-identical to the
     // Spark-builtin conv/substring/md5 HOF chain
     docs.select(Dedup.simhash64Md5(col("text")).as("expr"),
-        Dedup.simhash64Md5Hof(col("text")).as("hof")).collect()
+        DedupTwins.simhash64Md5Hof(col("text")).as("hof")).collect()
       .foreach(r => assert(r.getLong(0) == r.getLong(1)))
     val exact = (for {
       a <- sigs.keys; b <- sigs.keys if a < b
@@ -486,9 +489,10 @@ class DedupSpec extends SparkTestBase {
   test("connected components: chains collapse to min label") {
     // 1-2, 2-7, 7-9 form one chain; 4-5 another; 8 isolated (absent)
     val pairs = Seq((1L, 2L), (2L, 7L), (7L, 9L), (4L, 5L)).toDF("id_a", "id_b")
-    for (algo <- Seq("star", "label")) {
-      val labels = Dedup.connectedComponents(pairs, algorithm = algo)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((algo, cc) <- Seq[(String, DataFrame => DataFrame)](
+        "star" -> (Dedup.connectedComponentsStar(_)),
+        "label" -> (DedupTwins.connectedComponentsLabel(_)))) {
+      val labels = cc(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels == Map(1L -> 1L, 2L -> 1L, 7L -> 1L, 9L -> 1L, 4L -> 4L, 5L -> 4L),
         s"algorithm=$algo")
     }
@@ -503,7 +507,7 @@ class DedupSpec extends SparkTestBase {
       // rounds), which is precisely the scale failure star exists to fix
       val star = Dedup.connectedComponentsStar(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val label = Dedup.connectedComponentsLabel(df, maxIter = 64)
+      val label = DedupTwins.connectedComponentsLabel(df, maxIter = 64)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star == label, s"graph=$name")
       // min-centered: every label is the minimum of its own cluster
@@ -1319,5 +1323,76 @@ class DedupSpec extends SparkTestBase {
         "emb", "vec", threshold = 0.9)
     }
     assert(e2.getMessage.contains("vec"))
+  }
+}
+
+/** Builtin-HOF and relational twins of the fused dedup kernels: the
+  * references DedupSpec compares the production kernels against.
+  */
+object DedupTwins {
+
+  /** HOF form of [[Dedup.minhashSignature]]: for permutation i, min over
+    * shingles s of xxhash64(s, i).
+    */
+  def minhashSignatureHof(shingles: Column, numHashes: Int): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)),
+      i => array_min(transform(shingles, s => xxhash64(s, i))))
+
+  /** Iterative min-label propagation: every vertex starts labeled with
+    * itself; each round every vertex takes the min label across itself and
+    * its neighbors; stop when no label changes. Converges in O(graph
+    * diameter) rounds — the independent definition
+    * [[Dedup.connectedComponentsStar]] is checked against.
+    */
+  def connectedComponentsLabel(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    val p0 = pairs.select(col("id_a"), col("id_b")).forkMaterialize()
+    val h = Dedup.adaptivePin(p0.count() <= Dedup.pairCeiling(p0))
+    val edges = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .lineageCut()
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
+      .lineageCut()
+    var iter = 0
+    var changed = 1L
+    while (changed > 0 && iter < maxIter) {
+      val propagated = edges.join(h(labels), edges("dst") === labels("id"))
+        .select(edges("src").as("id"), col("label"))
+        .union(labels)
+        .groupBy("id").agg(min("label").as("label"))
+        .lineageCut()
+      changed = propagated.as("n")
+        .join(h(labels.withColumnRenamed("label", "__old")), Seq("id"))
+        .filter(col("label") =!= col("__old")).count()
+      labels = propagated
+      iter += 1
+    }
+    labels
+  }
+
+  /** HOF form of [[Dedup.simhash64]] (bit-identical by construction). */
+  def simhash64Hof(textCol: Column): Column =
+    simhashVote(transform(Text.tokens(textCol), t => xxhash64(t)))
+
+  /** HOF form of [[Dedup.simhash64Md5]]: the conv/substring/md5 chain,
+    * to test the fused MessageDigest token hash against Spark's own md5().
+    */
+  def simhash64Md5Hof(textCol: Column): Column =
+    simhashVote(transform(Text.tokens(textCol), t =>
+      shiftleft(conv(substring(md5(t), 1, 8), 16, 10).cast(LongType), 32)
+        .bitwiseOR(conv(substring(md5(t), 9, 8), 16, 10).cast(LongType))))
+
+  /** Per-bit majority vote over an array of 64-bit token hashes: bit j of
+    * the result is 1 iff more hashes have bit j set than clear. The sum of
+    * distinct powers of two is exact in two's complement (the 1L<<63 term
+    * wraps negative, which is the intended bit pattern).
+    */
+  private def simhashVote(hashes: Column): Column = {
+    val bits: Seq[Column] = (0 until 64).map { j =>
+      val vote = aggregate(hashes, lit(0), (acc, h) =>
+        acc + when(shiftright(h, j).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
+      when(vote > 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ + _)
   }
 }

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.SparkTestBase
 
@@ -254,7 +256,7 @@ class TextSpec extends SparkTestBase {
     }
     // the fused kernel and the HOF formulation select identically —
     // same convention as the cosine/hyperplane twins
-    val hof = Text.winnowingFingerprintsHof(
+    val hof = TextTwins.winnowingFingerprintsHof(
       texts.toDF("doc_id", "text"), "doc_id", "text", k = 5, w = 4)
       .collect()
       .groupBy(_.getLong(0))
@@ -276,5 +278,44 @@ class TextSpec extends SparkTestBase {
       .map { case (id, rs) => id -> rs.map(_.getLong(2)).toSet }
     assert((fps(0L) & fps(1L)).nonEmpty,
       "documents sharing a 20-char substring must share a fingerprint")
+  }
+}
+
+/** Builtin-HOF twin of the fused text kernels, the reference TextSpec
+  * compares [[Text.winnowingFingerprints]] against.
+  */
+object TextTwins {
+
+  /** Winnowing over builtin HOFs: md5-prefix k-gram hashes, each window's
+    * minimum (ties → rightmost position), distinct (fingerprint, pos).
+    */
+  def winnowingFingerprintsHof(df: DataFrame, idCol: String, textCol: String,
+                               k: Int = 5, w: Int = 4): DataFrame = {
+    require(k >= 1 && w >= 1, s"k=$k w=$w must be >= 1")
+    // each stage materializes its column so the next stage's lambdas
+    // slice an attribute instead of re-running the whole chain per
+    // element (the tokens-materialization trap, same as wordShingles)
+    val norm = df.select(col(idCol), Text.normalize(col(textCol)).as("__s"))
+    norm.select(col(idCol),
+      transform(
+        sequence(lit(1), greatest(length(col("__s")) - lit(k - 1), lit(1))),
+        i => struct(
+          conv(substring(md5(col("__s").substr(i, lit(k))), 1, 15), 16, 10)
+            .cast(LongType).as("h"),
+          i.cast(IntegerType).as("pos"))).as("__grams"))
+      .select(col(idCol),
+        transform(
+          sequence(lit(1), greatest(size(col("__grams")) - lit(w - 1), lit(1))),
+          widx => aggregate(
+            slice(col("__grams"), widx, lit(w)),
+            struct(lit(Long.MaxValue).as("h"), lit(-1).as("pos")),
+            (acc, g) => when(
+              g.getField("h") < acc.getField("h") ||
+                (g.getField("h") === acc.getField("h") &&
+                  g.getField("pos") > acc.getField("pos")),
+              g).otherwise(acc))).as("__sel"))
+      .select(col(idCol), explode(array_distinct(col("__sel"))).as("__fp"))
+      .select(col(idCol),
+        col("__fp.pos").as("pos"), col("__fp.h").as("fingerprint"))
   }
 }

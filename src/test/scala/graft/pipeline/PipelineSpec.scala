@@ -118,6 +118,34 @@ class PipelineSpec extends SparkTestBase {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("preprocess: a zero-weight total price gives R's x/0, and validate masks it") {
+    // ten ordinary usipa catches (price_kg 1000..1450, so the price bounds
+    // bind), then 5000 over 0 kg (R: Inf) and 0 over 0 kg (R: NaN, is.na)
+    val catches = (1 to 10).map(i =>
+      s"""{"fish_species": "Usipa", "weight": "$i", "weight_type": "kg",
+          "value_species": "${i * (1000 + 50 * (i - 1))}", "value_type": "total"}""") ++ Seq(
+      """{"fish_species": "Usipa", "weight": "0", "value_species": "5000", "value_type": "total"}""",
+      """{"fish_species": "Usipa", "weight": "0", "value_species": "0", "value_type": "total"}""")
+    val raw = Ingest(Seq("FieldDataApp-2024" -> jsonDf(
+      s"""{"_id": 301, "today": "2024-03-12", "landing_date": "2024-03-11",
+         "group_vessel_data": [
+           {"group_vessel_data/group_vessel/crew_number": "3",
+            "group_vessel_data/group_catch": [${catches.mkString(",")}]}]}""")))
+    val pre = Preprocess(Restructure.conformTo(Preprocess.stripPrefixes(raw), Schemas.rawLandings))
+    val priceKg = pre.select("survey_id", "price_kg").collect()
+      .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+    assert(priceKg.size == 12) // the stage completes: no DIVIDE_BY_ZERO
+    assert(priceKg("301-1-1").contains(1000.0) && priceKg("301-1-10").contains(1450.0))
+    assert(priceKg("301-1-11").contains(Double.PositiveInfinity))
+    assert(priceKg("301-1-12").isEmpty) // null, not NaN: NaN would sort above every bound
+    val res = Validate.fused(pre)
+    val flags = res.alertFlags.collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    assert(flags("301-1-11") == "4" && flags("301-1-12") == "")
+    assert((1 to 10).forall(i => flags(s"301-1-$i") == ""))
+    val masked = res.validated.filter(col("survey_id") === "301-1-11").collect().head
+    assert(Seq("price_kg", "catch_kg", "catch_price").forall(c => masked.isNullAt(masked.fieldIndex(c))))
+  }
+
   test("validate: date cutoff, negative counts, alert unite") {
     val data = Seq(
       ("f", "s1", "2019-06-01", 3.0, 2.0, "usipa", 10.0, 100.0, 10.0),
