@@ -23,9 +23,9 @@ import graft.queries.Q
   * round 9 every sample is calibration-BRACKETED (see [[calibrate]]),
   * so a sample whose window ran hot is flagged `suspect` and the median
   * prefers the clean samples outright. `value` is the sum of medians;
-  * per-query min, raw samples, per-sample epoch timestamps, loads and
-  * suspect flags ride along in bench_out.json so a judge can see exactly
-  * where a noise window sat without rerunning.
+  * per-query min, raw samples, per-sample epoch timestamps and suspect
+  * flags ride along in bench_out.json so a judge can see exactly where a
+  * noise window sat without rerunning.
   *
   * Timeout protocol (round 10): the driver kills the bench process at a
   * hard 3600 s, and rounds 7–9 each lost their entire artifact to that
@@ -51,10 +51,9 @@ import graft.queries.Q
   *      before its first sample lands in `skipped_queries`, NOT in
   *      `errors` — a skip is not a crash.
   *   3. WATCHDOG — each sample runs in its own Spark job group and a
-  *      daemon timer cancels the group after SPARK_GRAFT_QUERY_CAP
-  *      seconds (default 120 — 4× the heaviest clean sf0.1 query; scale
-  *      sections use SPARK_GRAFT_SCALE_QUERY_CAP, default 600, because
-  *      sf1/sf30 queries legitimately run minutes). The r9 run lost
+  *      daemon timer cancels the group after [[queryCap]] seconds (scale
+  *      sections use [[scaleQueryCap]], because sf1/sf30 queries
+  *      legitimately run minutes). The r9 run lost
   *      ~15.5 min to ONE contended q_curate_e2e sample; a capped sample
   *      records `Left(watchdog…)` and the partial-reps machinery already
   *      treats it as a missing rep, never as a fast median. The cancel
@@ -108,15 +107,6 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else s(n / 2 - 1)
   }
 
-  /** 1-minute system load average (Linux /proc/loadavg equivalent), or -1
-    * where the platform can't report it. Recorded beside every timed
-    * sample: a pass that ran while another sbt/DuckDB process occupied the
-    * host shows load ≫ core count here, so a reader of bench_out.json can
-    * see contention without rerunning anything.
-    */
-  private def loadAvg: Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
   /** Cumulative host-busy CPU jiffies from /proc/stat, or -1 where /proc
     * isn't available. Host busy = user+nice+system+irq+softirq+steal from
     * the aggregate `cpu` line (idle and iowait excluded). The difference
@@ -148,13 +138,6 @@ object Bench {
     * comm field (2nd) is in parentheses and MAY CONTAIN SPACES, so fields
     * are counted from after the LAST `)` — state is then index 0, utime
     * index 11, stime index 12 (man proc: fields 3, 14, 15 1-based).
-    * Separation matters (round 14): the external-CPU arm only ever
-    * SUBTRACTED utime+stime from host jiffies, so kernel time inflating
-    * OUR OWN stime kept `ext` at 0 and the sample read clean — exactly
-    * how the r12/r13 driver-channel heavy samples ran 3–5× slow with
-    * every arm green (docs/BENCH_HEAP.md: this host's first-touch
-    * page-zeroing pathology is sys-CPU inside the faulting process, not
-    * GC, not majflt, not PSI). stime/wall is now its own suspect arm.
     * Package-private for the spec.
     */
   private[graft] def parseSelfUtimeStime(statLine: String): (Long, Long) = {
@@ -172,55 +155,6 @@ object Bench {
     u + s
   }
 
-  /** minflt (minor page faults of this process) from a `/proc/self/stat`
-    * line — 1-based field 10, index 7 after the last `)` (same
-    * comm-with-spaces hazard as [[parseSelfUtimeStime]]). Minor faults
-    * are pages resolved WITHOUT disk IO — fresh-anonymous-page zeroing
-    * above all — which is why the majflt arm (field 12) never saw the
-    * heap pathology: an oversized heap faults in millions of fresh pages
-    * and not one of them is "major". Package-private for the spec.
-    */
-  private[graft] def parseSelfMinflt(statLine: String): Long = {
-    val after = statLine.substring(statLine.lastIndexOf(')') + 1).trim
-    val f = after.split("\\s+")
-    require(f.length >= 13, s"unexpected /proc/self/stat tail: $after")
-    f(7).toLong
-  }
-
-  /** majflt (major page faults of this process) from a `/proc/self/stat`
-    * line — 1-based field 12, index 9 after the last `)` (same comm-with-
-    * spaces hazard as [[parseSelfJiffies]]). Package-private for the spec.
-    */
-  private[graft] def parseSelfMajflt(statLine: String): Long = {
-    val after = statLine.substring(statLine.lastIndexOf(')') + 1).trim
-    val f = after.split("\\s+")
-    require(f.length >= 13, s"unexpected /proc/self/stat tail: $after")
-    f(9).toLong
-  }
-
-  /** (read_bytes, write_bytes) from `/proc/self/io` content — ACTUAL
-    * device IO attributed to this process (the storage-layer counters,
-    * not rchar/wchar syscall volume, which double-counts page-cache
-    * hits). Bracketing a sample yields its own-process device-IO rate:
-    * the counter that separates "the sample did more write work" from
-    * "the same writes drained slower" — the residual ambiguity in the
-    * plain reuse twin's clean 32–47 s spread
-    * (docs/HEAPFIX_VALIDATION.md finding 2: sys-cores pinned at 11–12
-    * while wall varies 1.5×). DIAGNOSTIC ONLY, like minflt — a
-    * write-RATE threshold cannot discriminate, because slow writeback
-    * LOWERS the rate; what a reader wants is bytes ≈ equal across twins
-    * while wall differs (device-speed cause) vs bytes tracking wall
-    * (work-volume cause). -1 where the file is unreadable.
-    */
-  private[graft] def parseSelfIo(content: String): (Long, Long) = {
-    def grab(k: String): Long = {
-      val m = java.util.regex.Pattern
-        .compile(s"(?m)^$k:\\s*(\\d+)").matcher(content)
-      if (m.find()) m.group(1).toLong else -1L
-    }
-    (grab("read_bytes"), grab("write_bytes"))
-  }
-
   /** Cumulative `some total=` stall microseconds from a PSI file
     * (`/proc/pressure/{io,memory}`): the kernel's own accounting of time
     * ANY task on the host spent stalled on that resource. The delta of
@@ -231,7 +165,7 @@ object Bench {
     * sf100 MinHash sample and called it clean; CPU accounting is blind
     * to page-cache eviction, writeback and reclaim stalls by design).
     * -1 where PSI is unavailable (CONFIG_PSI=n, pre-4.20 kernel) —
-    * never trips the suspect arm, same contract as loadAvg's -1.
+    * never trips the suspect arm.
     */
   private[graft] def psiSomeTotalMicros(path: String): Long =
     try {
@@ -242,89 +176,38 @@ object Bench {
       if (m.find()) m.group(1).toLong else -1L
     } catch { case _: Throwable => -1L }
 
-  /** Cumulative stop-the-world GC milliseconds of THIS JVM (all
-    * collectors). Bracketing a sample gives its gc fraction — the
-    * self-inflicted counterpart to the external arms: a JVM aged by
-    * hundreds of prior samples (fragmented old gen, full code cache,
-    * metaspace churn) collects more on identical work, which no
-    * host-side counter can see because the burn is OUR OWN CPU.
-    */
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
   /** Everything bracketed around one timed sample, read in one place so
-    * both ends see the same instant ordering. /proc/self/stat is read
-    * ONCE and all four of its counters (utime, stime, minflt, majflt)
-    * parsed from the same line — two reads could straddle a burst and
-    * disagree about which side of the bracket it landed on.
+    * both ends see the same instant ordering.
     */
-  private final case class EnvSnap(hostBusy: Long, selfUser: Long,
-                                   selfSys: Long, gcMs: Long,
-                                   minflt: Long, majflt: Long,
-                                   psiIo: Long, psiMem: Long,
-                                   ioRead: Long, ioWrite: Long)
+  private final case class EnvSnap(hostBusy: Long, self: Long, psiIo: Long)
 
   private def snapEnv(): EnvSnap = {
-    val (u, s, minf, majf) = try {
+    val self = try {
       val src = scala.io.Source.fromFile("/proc/self/stat")
-      val line = try src.getLines().next() finally src.close()
-      val (uu, ss) = parseSelfUtimeStime(line)
-      (uu, ss, parseSelfMinflt(line), parseSelfMajflt(line))
-    } catch { case _: Throwable => (-1L, -1L, -1L, -1L) }
-    val (ioR, ioW) = try {
-      val src = scala.io.Source.fromFile("/proc/self/io")
-      val content = try src.mkString finally src.close()
-      parseSelfIo(content)
-    } catch { case _: Throwable => (-1L, -1L) }
-    EnvSnap(hostBusyJiffies, u, s, gcMillis, minf, majf,
-      psiSomeTotalMicros("/proc/pressure/io"),
-      psiSomeTotalMicros("/proc/pressure/memory"),
-      ioR, ioW)
+      try parseSelfJiffies(src.getLines().next()) finally src.close()
+    } catch { case _: Throwable => -1L }
+    EnvSnap(hostBusyJiffies, self, psiSomeTotalMicros("/proc/pressure/io"))
   }
 
   /** Per-sample diagnostics derived from the two [[EnvSnap]] brackets.
     * Unavailable counters surface as -1 and never trip [[envCause]].
     */
-  private[graft] final case class SampleDiag(extCores: Double, gcFrac: Double,
-                                             sysCores: Double,
-                                             minfltRate: Double,
-                                             majfltRate: Double,
-                                             psiIoFrac: Double,
-                                             psiMemFrac: Double,
-                                             ioReadMb: Double = -1.0,
-                                             ioWriteMb: Double = -1.0)
+  private[graft] final case class SampleDiag(extCores: Double, psiIoFrac: Double)
 
   private def diagOf(a: EnvSnap, b: EnvSnap, secs: Double): SampleDiag = {
     def frac(x0: Long, x1: Long, unitPerSec: Double): Double =
       if (x0 < 0 || x1 < 0 || secs <= 0) -1.0
       else math.max(0.0, (x1 - x0) / unitPerSec / secs)
     val extCores =
-      if (a.hostBusy < 0 || b.hostBusy < 0 || a.selfUser < 0 || b.selfUser < 0
+      if (a.hostBusy < 0 || b.hostBusy < 0 || a.self < 0 || b.self < 0
         || secs <= 0) -1.0
       else {
-        val ext = (b.hostBusy - a.hostBusy) -
-          ((b.selfUser + b.selfSys) - (a.selfUser + a.selfSys))
+        val ext = (b.hostBusy - a.hostBusy) - (b.self - a.self)
         math.max(0.0, ext / 100.0 / secs) // USER_HZ=100, the /proc ABI constant
       }
     SampleDiag(
       extCores = extCores,
-      gcFrac = frac(a.gcMs, b.gcMs, 1000.0),
-      sysCores = frac(a.selfSys, b.selfSys, 100.0), // jiffies → cores
-      minfltRate = if (a.minflt < 0 || b.minflt < 0 || secs <= 0) -1.0
-                   else math.max(0.0, (b.minflt - a.minflt) / secs),
-      majfltRate = if (a.majflt < 0 || b.majflt < 0 || secs <= 0) -1.0
-                   else math.max(0.0, (b.majflt - a.majflt) / secs),
-      psiIoFrac = frac(a.psiIo, b.psiIo, 1e6),
-      psiMemFrac = frac(a.psiMem, b.psiMem, 1e6),
-      // TOTAL MB over the sample (not a rate): the diagnostic question
-      // is "did the twins move the same bytes" — see [[parseSelfIo]]
-      ioReadMb = if (a.ioRead < 0 || b.ioRead < 0) -1.0
-                 else math.max(0.0, (b.ioRead - a.ioRead) / 1048576.0),
-      ioWriteMb = if (a.ioWrite < 0 || b.ioWrite < 0) -1.0
-                  else math.max(0.0, (b.ioWrite - a.ioWrite) / 1048576.0))
+      psiIoFrac = frac(a.psiIo, b.psiIo, 1e6))
   }
 
   /** The measured cause when a sample's environment ran abnormal, or
@@ -332,33 +215,12 @@ object Bench {
     *
     *   - `ext`: other processes burned > max(1, cores/16) CPU cores
     *     during the sample ([[highExternal]] — the round-12 arm).
-    *   - `psi_io` / `psi_mem`: tasks on the host spent >25% of the
-    *     sample's wall window stalled on IO / memory reclaim (kernel
-    *     PSI accounting — catches page-cache eviction, writeback and
-    *     reclaim pressure that burns no CPU and so slipped past the
-    *     r12 detector: BENCH_r12's 143 s sf100 MinHash sample read
-    *     0.295 external cores and was labeled clean).
-    *   - `sys`: THIS process burned kernel CPU at > [[sysCoresMax]]
-    *     cores over the sample's window (stime/wall, the round-14 arm).
-    *     This is the arm every earlier round lacked structurally: ext
-    *     SUBTRACTS self-burn so own-kernel time keeps it at 0, majflt
-    *     counts disk-backed faults only, PSI memory reads 0 without
-    *     reclaim, and GC is normal — yet this host's one documented
-    *     pathology (docs/BENCH_HEAP.md: -Xmx100g ⇒ 8× slower, sys
-    *     1832 s vs 17 s) is exactly kernel first-touch page-zeroing
-    *     INSIDE the bench process. Threshold calibrated on this host
-    *     (and the reason there is no minflt arm): see [[sysCoresMax]].
-    *     When both ext and sys fire, the LARGER signal names the cause.
-    *   - `majflt`: this process took major page faults at >50/s (and
-    *     >100 total — a handful on a short sample is startup noise).
-    *     With no swap configured this means page-cache misses on
-    *     file-backed mappings — evicted executable/jar pages.
-    *   - `gc`: >50% of the sample's wall window was stop-the-world GC.
-    *     Not host contention but still a sample that does NOT measure
-    *     the query's plan: on fixed code+data+heap, a gc-dominated
-    *     sample means the JVM arrived degraded (175-query suites age
-    *     the heap/code cache before the scale sections run). Flagged
-    *     so the artifact carries the cause instead of a silent 5×.
+    *   - `psi_io`: tasks on the host spent >25% of the sample's wall
+    *     window stalled on IO (kernel PSI accounting — catches
+    *     page-cache eviction and writeback pressure that burns no CPU
+    *     and so slipped past the r12 detector: BENCH_r12's 143 s sf100
+    *     MinHash sample read 0.295 external cores and was labeled
+    *     clean).
     *
     * Thresholds deliberately coarse: this is a "the number is not
     * trustworthy AND here is why" marker, not a profiler.
@@ -368,125 +230,9 @@ object Bench {
     // commas into artifact strings
     def r(fmtStr: String, v: Double): String =
       String.format(java.util.Locale.ROOT, fmtStr, Double.box(v))
-    // sys OUTRANKS ext when it is the larger signal: in the injected
-    // -Xmx100g validation run the sf100 MinHash sample burned 19.3 sys
-    // cores while side-effect kernel threads nudged ext to 2.1 — an
-    // "ext=2.1" label on a sample whose real cause is 19 cores of
-    // own-process kernel time misattributes the round's central anomaly
-    val sysHit = d.sysCores > sysCoresMax
-    val extHit = highExternal(d.extCores)
-    if (extHit && (!sysHit || d.extCores >= d.sysCores))
-      Some(r("ext=%.1f", d.extCores))
-    else if (sysHit) Some(r("sys=%.1f", d.sysCores))
+    if (highExternal(d.extCores)) Some(r("ext=%.1f", d.extCores))
     else if (d.psiIoFrac > 0.25) Some(r("psi_io=%.2f", d.psiIoFrac))
-    else if (d.psiMemFrac > 0.25) Some(r("psi_mem=%.2f", d.psiMemFrac))
-    else if (d.majfltRate > 50.0) Some(r("majflt=%.0f/s", d.majfltRate))
-    else if (d.gcFrac > 0.5) Some(r("gc=%.2f", d.gcFrac))
     else None
-  }
-
-  /** Own-process sys-CPU suspect threshold, in cores of stime over the
-    * sample's wall window. Calibrated on this host (round 14, committed
-    * as docs/bench_sysarm_*.json + docs/twinprofile_*.json): the
-    * syscall-heaviest CLEAN -Xmx8g sample in the suite is the sf1 plain
-    * reuse twin at 6.5–11.3 sys cores across three idle control runs —
-    * and the per-stage profile shows that burn is INHERENT, not noise
-    * (TwinProfile at 8g: the plain screen's six history anti-joins +
-    * per-batch landings run at ~10.6 sys cores sustained). Ordinary
-    * heavy samples run 0.2–3.1. The injected -Xmx100g pathology's
-    * bench-channel samples measured 16.2–20.1 sys cores (bloom twin
-    * 4.6×, plain 2.6×, sf100 MinHash 2.4–8× slow). 13.0 splits the
-    * bands: ≥15% above the worst clean value, ≥24% under the mildest
-    * pathological one. Env-overridable for other host classes, same
-    * contract as [[calibBaseline]].
-    *
-    * TWO MEASURED NEGATIVES, recorded so nobody re-adds them:
-    * (1) minflt RATE does not discriminate — the clean 8g control
-    * faulted at up to 110k/s (normal allocation + mmap'd shuffle files)
-    * while the 100g pathology ran 42k–166k/s, because slow first-touch
-    * faults REDUCE the fault rate (each fault costs more wall); it
-    * rides in every artifact as a diagnostic array only. (2) sys
-    * FRACTION (stime/(utime+stime)) does not discriminate either —
-    * clean plain screen 0.49 vs pathological 0.64, clean bloom 0.27 vs
-    * 0.33 (TwinProfile) — overlapping bands, because a standalone
-    * oversized-heap run touches progressively and barely suffers; the
-    * bench-context amplifier is G1 UNCOMMITTING heap after the
-    * calibration System.gc() and the next sample re-zeroing the pages,
-    * which no per-stage fraction sees. The threshold-free arm that
-    * actually pins the channel difference is [[heapMismatchCause]].
-    */
-  private def sysCoresMax: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SYS_CORES_MAX", "13.0").toDouble
-
-  /** The committed bench protocol runs -Xmx8g (docs/BENCH_HEAP.md: this
-    * host zeroes fresh pages pathologically slowly, so heap size selects
-    * a kernel regime, not just a GC regime — comparing numbers across
-    * heap sizes compares kernels, not queries). Env-overridable for
-    * hosts with a different committed protocol.
-    */
-  private def expectedHeapMb: Double =
-    sys.env.getOrElse("SPARK_GRAFT_EXPECTED_HEAP_MB", "8192").toDouble
-
-  /** The threshold-free round-14 arm: a run whose actual -Xmx deviates
-    * >25% from the committed protocol heap gets every SCALE sample
-    * tagged `heap=<N>mb` (unless a stronger per-sample cause already
-    * fired). This is the arm that needed no calibration: the r12/r13
-    * driver-channel anomaly selected exactly the heap-heavy queries,
-    * every committed artifact is pinned at 8g, and the one knob the
-    * artifacts could not previously prove about themselves was the
-    * heap — now `heap_max_mb` rides in every JVM block AND mismatches
-    * flag the samples they make untrustworthy. Main-suite (sf0.1)
-    * samples are deliberately NOT flagged: the injected-pathology run
-    * measured them within noise of the 8g control (5.9/4.9/1.9 vs
-    * 5.9/5.1/1.9 s — too little fresh allocation per query to suffer),
-    * and flagging 875 samples would zero out every median's clean set.
-    */
-  private[graft] def heapMismatchCause: Option[String] = {
-    val mb = Runtime.getRuntime.maxMemory / 1048576.0
-    if (mb > expectedHeapMb * 1.25 || mb < expectedHeapMb * 0.75)
-      Some(s"heap=${mb.toLong}mb")
-    else None
-  }
-
-  /** One-line JVM-aging evidence for the artifact: code-cache and
-    * metaspace occupancy plus uptime and cumulative GC time. Since
-    * round 16 each scale section runs in its own CHILD JVM (so this
-    * block reads near-fresh there — the point of the isolation), but
-    * the five main-suite passes still share one JVM: if a late pass is
-    * slow and this block shows the code cache pinned at its max, the
-    * cause is aging, not the operator.
-    */
-  private def jvmHealthJson: String = {
-    import scala.jdk.CollectionConverters._
-    def mb(b: Long): String = fmt(b / 1048576.0)
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-    def pool(nameFrag: String): String = {
-      val ps = pools.filter(_.getName.toLowerCase.contains(nameFrag))
-      if (ps.isEmpty) "-1,-1" else {
-        val used = ps.map(_.getUsage.getUsed).sum
-        val max = ps.map(p => math.max(0L, p.getUsage.getMax)).sum
-        s"${mb(used)},${mb(max)}"
-      }
-    }
-    val Array(ccU, ccM) = pool("codeheap").split(",") match {
-      case a if a.length == 2 => a
-      case _ => Array("-1", "-1")
-    }
-    val Array(msU, _) = pool("metaspace").split(",")
-    val up = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
-    // heap_max_mb (round 14): the actual -Xmx this run resolved to. The
-    // r12/r13 driver-channel anomaly was finally attributable only
-    // because the committed artifacts pinned their heap OUTSIDE the
-    // artifact (docs/BENCH_HEAP.md: comparing numbers across heap sizes
-    // compares kernels, not queries) — a channel mismatch must be
-    // visible IN the artifact itself.
-    val parentHeap = sys.env.get("SPARK_GRAFT_PARENT_HEAP_MB")
-      .collect { case s if s.forall(_.isDigit) => s }
-      .fold("")(p => s""""heap_parent_mb":$p,""")
-    s"""{"heap_max_mb":${mb(Runtime.getRuntime.maxMemory)},$parentHeap""" +
-      s""""code_cache_used_mb":$ccU,"code_cache_max_mb":$ccM,""" +
-      s""""metaspace_used_mb":$msU,"gc_total_s":${fmt(gcMillis / 1000.0)},""" +
-      s""""uptime_s":${fmt(up)}}"""
   }
 
   /** A sample is externally contended when OTHER processes averaged more
@@ -616,20 +362,17 @@ object Bench {
     * (0.25–0.42 s across sessions on the 32-thread host) — not above it;
     * round 9's 0.45 left the absolute hot threshold at 0.675 s, which a
     * uniformly ~2×-contended run on a fast host (clean ≈0.3 s) slid
-    * under. Overridable via SPARK_GRAFT_CALIB_BASELINE for other
-    * hardware. The absolute arm of the hot-calibration rule: without it,
+    * under. The absolute arm of the hot-calibration rule: without it,
     * a run where EVERY pass is uniformly contended (the r07 failure — all
     * passes ~1.7× slow) self-compares clean.
     */
-  private def calibBaseline: Double =
-    sys.env.getOrElse("SPARK_GRAFT_CALIB_BASELINE", "0.42").toDouble
+  private val calibBaseline: Double = 0.42
 
   /** Queries between mid-pass calibration points. 16 → ~8 extra
     * calibration runs per ~135-query pass, ≈2–3 s of a ~4-minute pass —
     * sample-granular contention evidence for ~1% overhead.
     */
-  private def calibEvery: Int =
-    math.max(1, sys.env.getOrElse("SPARK_GRAFT_CALIB_EVERY", "16").toInt)
+  private val calibEvery: Int = 16
 
   /** A calibration point ran hot when it exceeds the smaller of the
     * SPIKE arm — 2× the run's best point, floored at [[calibBaseline]] —
@@ -657,8 +400,7 @@ object Bench {
   // just-finished threads — r11 lost all 5 q_curate_e2e_scale samples
   // to its predecessor's loadavg wake on a truly idle host — and it
   // still false-negatived on contention starting AFTER the pre-sample
-  // read, which is most of a minute-long sample's window. loadavg
-  // readings still ride in the artifact as diagnostics.)
+  // read, which is most of a minute-long sample's window.)
 
   /** Wall-clock deadline for the WHOLE bench (seconds from main() entry).
     * Default 3000 leaves ~10 min of headroom inside the driver's hard
@@ -676,8 +418,7 @@ object Bench {
     * entry. 240 still stops a runaway sample from eating the budget
     * (r9 lost 15.5 min to one), while letting a cold flagship through.
     */
-  private def queryCap: Double =
-    sys.env.getOrElse("SPARK_GRAFT_QUERY_CAP", "240").toDouble
+  private val queryCap: Double = 240
 
   /** Per-sample watchdog cap for sf1/sf30 scale sections (seconds).
     * Separate from [[queryCap]] because scale queries legitimately run
@@ -685,8 +426,7 @@ object Bench {
     * the planner-driven replacements are far cheaper but reuse twins
     * still build a 20× history sequentially).
     */
-  private def scaleQueryCap: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_QUERY_CAP", "600").toDouble
+  private val scaleQueryCap: Double = 600
 
   /** Heaviest queries by round-2 per-query minima — the sf1 smoke set.
     * The LSH families run their PLANNER-DRIVEN `_auto` twins here: the
@@ -1121,14 +861,8 @@ object Bench {
          else s""","host_drift":""" +
            hostDrift.map("\"" + _ + "\"").mkString("[", ",", "]")) +
         // the run's actual heap, in the line the driver parses — the
-        // channel knob the committed artifacts pin outside themselves;
-        // when this process is a heap-neutralizing re-exec
-        // ([[reexecAtExpectedHeap]]), the parent's foreign heap rides
-        // beside it so the channel mismatch stays visible evidence
-        s""","heap_mb":${Runtime.getRuntime.maxMemory / 1048576}""" +
-        sys.env.get("SPARK_GRAFT_PARENT_HEAP_MB")
-          .collect { case s if s.forall(_.isDigit) => s }
-          .fold("")(p => s""","heap_parent_mb":$p""")
+        // channel knob the committed artifacts pin outside themselves
+        s""","heap_mb":${Runtime.getRuntime.maxMemory / 1048576}"""
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
       s""""reps":$reps,"reps_completed":$repsCompleted,"truncated":$truncated,""" +
       s""""contended":${contended.mkString("[", ",", "]")},"suspect":$suspect,""" +
@@ -1204,13 +938,12 @@ object Bench {
 
   private def newSession(cpus: String): SparkSession =
     Session(cpus, Seq(
-      // unroll de-pressure knobs (round 16, verdict item 3): the r15
+      // unroll de-pressure knob (round 16, verdict item 3): the r15
       // driver crash was storage-memory exhaustion from 32 concurrent
       // task unrolls of localCheckpoint blocks at the 8 g heap.
       // CHECKPOINT_LEVEL=DISK_ONLY streams checkpoint blocks straight
-      // to DiskStore (no unroll at all — see Materialize.cut);
-      // STORAGE_FRACTION trades execution headroom for storage. Both
-      // default to Spark/library defaults; the measured decision is in
+      // to DiskStore (no unroll at all — see Materialize.cut). It
+      // defaults to the library default; the measured decision is in
       // docs/BENCH_SALVAGE.md + SCALING.md.
       graft.ops.Materialize.CheckpointLevelKey ->
         sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_LEVEL", "MEMORY_AND_DISK")) ++
@@ -1225,8 +958,7 @@ object Bench {
       // shuffles back down, so the knob is near-free where data is
       // small and load-bearing where it is not — the standard
       // partitions-track-data sizing this library preaches for 100 TB.
-      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map("spark.sql.shuffle.partitions" -> _) ++
-      sys.env.get("SPARK_GRAFT_STORAGE_FRACTION").map("spark.memory.storageFraction" -> _))
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map("spark.sql.shuffle.partitions" -> _))
 
   /** Untimed warmup: touch every table once, then run a REPRESENTATIVE
     * slice of the heaviest composed query end-to-end. Table counts alone
@@ -1321,62 +1053,7 @@ object Bench {
     * seconds, every few minutes — measured across rounds); 20 s lets a
     * burst that bit the first attempt drain before the retry starts.
     */
-  private def settleSecs: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_SETTLE", "20").toDouble
-
-  /** Whether a suspect scale sample is retried once after [[settleSecs]]
-    * (round-13; the r12 driver channel shipped its THIRD consecutive
-    * contended sf1 section — flagged honestly, but round-over-round
-    * comparison then needs the committed idle artifacts; one in-run
-    * retry usually lands a clean sample at the cost of one extra
-    * minute-scale query).
-    */
-  private def scaleRetry: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_RETRY", "true").toBoolean
-
-  /** Stream every byte of a scale dir through the page cache, returning
-    * (MB read, seconds). Round 15, verdict item 2 — the unexplained
-    * 41.6-vs-66.2 s idle spread on sf100 curate-scale. The attribution
-    * experiment (docs/CACHE_ATTRIBUTION.md) REFUTED the page-cache
-    * suspect: drop_caches-cold vs warm runs measured 33.9-40.4 s with
-    * no cold/warm separation (the query reads a 105 MB table; device
-    * reads are seconds at most). The spread's measured cause is
-    * own-process KERNEL time — the slow committed sample burned 9.7
-    * sys-cores vs the fast run's 1.5, every other arm clean: the
-    * BENCH_HEAP.md gc-uncommit-retouch amplifier operating at 8g,
-    * below the (correctly-calibrated) 13.0 sys-arm threshold — and the
-    * fix is the -Xms=-Xmx pin (build.sbt; the re-exec child adds
-    * AlwaysPreTouch), under which G1 cannot uncommit and the
-    * experiment's four pinned runs sat in a ±9% band. This precache
-    * stays because it costs ~1 s warm and turns the cache-state
-    * question from "unrecorded" into per-section artifact evidence
-    * (`<label>_precache_{mb,sec}`: a cold dir reads at device speed,
-    * a warm one at memory speed) — the table-touch warmup cannot do
-    * this: parquet `count()` reads footers, never the data pages.
-    */
-  private def precacheDir(spark: SparkSession, dir: String): (Double, Double) = {
-    val t0 = System.nanoTime()
-    var bytes = 0L
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      val buf = new Array[Byte](1 << 20)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile) {
-          val in = fs.open(f.getPath)
-          try {
-            var n = 0
-            while ({ n = in.read(buf); n >= 0 }) bytes += n
-          } finally in.close()
-        }
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] precache of $dir failed: $e")
-    }
-    (bytes / 1048576.0, (System.nanoTime() - t0) / 1e9)
-  }
+  private val settleSecs: Double = 20
 
   /** One scale section (sf1/sf30/sf100): pre-validate every table in the
     * dir, run the picked queries once each in a FRESH session, and hand
@@ -1415,15 +1092,10 @@ object Bench {
           Some(t -> Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
         }
       }
-      // warm the page cache BEFORE the JVM warmup and record what was
-      // found (see [[precacheDir]]) — cold-dir evidence rides in the
-      // artifact as `<label>_precache_{mb,sec}`
-      val (precacheMb, precacheSec) = precacheDir(spark, dir)
       warmup(spark, dir)
       // bandwidth probe once per section, warm JVM, before any sample —
       // host-class drift evidence for this section's minute-scale runs
       val membwGbps = calibrateMemGbps(spark)
-      val load = loadAvg
       // calibration BETWEEN EVERY query, not just section brackets: a
       // scale query runs minutes, so a host-contention burst (r10: an
       // idle-looking box ran sf30 semdedup at 17× — external steal the
@@ -1438,7 +1110,6 @@ object Bench {
       // Left into _retried — breaking the "nothing is silently
       // discarded" contract for exactly the failed-then-recovered case)
       case class ScaleRun(name: String, res: Either[String, Double],
-                          loadBefore: Double, loadAfter: Double,
                           diag: SampleDiag, calibBefore: Double,
                           calibAfter: Double,
                           origRes: Option[Either[String, Double]])
@@ -1456,7 +1127,6 @@ object Bench {
       def attempt(q: Q, orig: Option[Either[String, Double]]): ScaleRun = {
         noteInFlight(s"$label:${q.name}")
         val cb = calibs.last
-        val lb = loadAvg
         partitionMap.get(q.name).foreach(n =>
           spark.conf.set("spark.sql.shuffle.partitions", n.toString))
         val (r, _, diag) =
@@ -1466,17 +1136,16 @@ object Bench {
         val ca = calibrate(spark)
         calibs += ca
         noteInFlight(s"(between samples; last=$label:${q.name})")
-        ScaleRun(q.name, r, lb, loadAvg, diag, cb, ca, orig)
+        ScaleRun(q.name, r, diag, cb, ca, orig)
       }
       val runs = scala.collection.mutable.LinkedHashMap.empty[String, ScaleRun]
       val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
       // Suspect arms here: the PER-QUERY calibration brackets (already
       // sample-granular in this section, unlike the main suite's
       // every-16-queries points) OR any measured [[envCause]] arm —
-      // external CPU, PSI io/memory stall, major faults, GC-dominated
-      // window. A loadavg arm would false-positive here — samples are
-      // minute-scale 32-thread jobs back-to-back, so the 1-minute
-      // loadavg before query N is dominated by query N-1's own
+      // external CPU or PSI io stall. A loadavg arm would false-positive
+      // here — samples are minute-scale 32-thread jobs back-to-back, so
+      // the 1-minute loadavg before query N is dominated by query N-1's own
       // just-finished threads (measured 3.8 → 15.0 self-ramp across an
       // otherwise-idle section) — but every envCause arm measures the
       // sample's OWN window, so none has a self-ramp to false-positive
@@ -1484,11 +1153,9 @@ object Bench {
       // inside a minute-long sample (the r12 failure: a 143 s sf100
       // sample with cool edges and 0.295 external cores, labeled clean
       // while its cause — non-CPU by elimination — stayed invisible).
-      // The load reads still ride in `<label>_sample_load_before`.
       def runBest = calibs.min
       def causeOf(r: ScaleRun): Option[String] =
         envCause(r.diag)
-          .orElse(heapMismatchCause) // wrong-heap run: every scale sample carries it
           .orElse(
             if (isHot(r.calibBefore, runBest) || isHot(r.calibAfter, runBest))
               Some("calib_bracket") else None)
@@ -1562,22 +1229,9 @@ object Bench {
             s""""${label}_calibration":[${calibs.map(fmt).mkString(",")}],""" +
             s""""${label}_contended":$hot,""" +
             s""""${label}_suspect":${suspects.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""${label}_load":${fmt(load)},""" +
-            s""""${label}_sample_load":${jm(r => fmt(r.loadAfter))},""" +
-            s""""${label}_sample_load_before":${jm(r => fmt(r.loadBefore))},""" +
             s""""${label}_sample_ext_cores":${jm(r => fmt(r.diag.extCores))},""" +
-            s""""${label}_sample_gc_frac":${jm(r => fmt(r.diag.gcFrac))},""" +
-            s""""${label}_sample_sys_cores":${jm(r => fmt(r.diag.sysCores))},""" +
-            s""""${label}_sample_minflt_rate":${jm(r => fmt(r.diag.minfltRate))},""" +
-            s""""${label}_sample_majflt_rate":${jm(r => fmt(r.diag.majfltRate))},""" +
             s""""${label}_sample_psi_io":${jm(r => fmt(r.diag.psiIoFrac))},""" +
-            s""""${label}_sample_psi_mem":${jm(r => fmt(r.diag.psiMemFrac))},""" +
-            s""""${label}_sample_io_read_mb":${jm(r => fmt(r.diag.ioReadMb))},""" +
-            s""""${label}_sample_io_write_mb":${jm(r => fmt(r.diag.ioWriteMb))},""" +
-            s""""${label}_jvm":$jvmHealthJson,""" +
-            s""""${label}_membw_gbps":${fmt(membwGbps)},""" +
-            s""""${label}_precache_mb":${fmt(precacheMb)},""" +
-            s""""${label}_precache_sec":${fmt(precacheSec)}""" +
+            s""""${label}_membw_gbps":${fmt(membwGbps)}""" +
             manifestJson +
             s""","${label}_dir":"$dir""""
         (frag, ScaleSummary(label, ran.map(r => r.name -> r.res.toOption), hot,
@@ -1596,11 +1250,7 @@ object Bench {
       // succeeded — a clean-but-slower retry is the honest number, a
       // still-dirty retry leaves the flagged original in place
       val firstSuspects = runs.values.filter(r => causeOf(r).isDefined).map(_.name).toSeq
-      // no settle-retry under a heap mismatch: the cause is permanent for
-      // the whole process, so a retry can only re-pay the sample's cost
-      // to earn the same flag
-      if (scaleRetry && firstSuspects.nonEmpty && heapMismatchCause.isEmpty
-        && timeLeft()) {
+      if (firstSuspects.nonEmpty && timeLeft()) {
         Thread.sleep((settleSecs * 1000).toLong)
         firstSuspects.foreach { name =>
           if (timeLeft()) {
@@ -1618,17 +1268,6 @@ object Bench {
     } finally spark.stop()
   }
 
-  /** Whether a heap-mismatched Bench process re-execs itself at the
-    * committed protocol heap instead of merely flagging every scale
-    * sample (round 15, verdict item 1: "a flagged-bad measurement still
-    * measures nothing"). The child gets SPARK_GRAFT_HEAP_REEXEC=false,
-    * so a child that STILL mismatches (e.g. the expected heap is
-    * unattainable) degrades to the round-14 flagging behavior instead
-    * of forking forever.
-    */
-  private def heapReexecEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_HEAP_REEXEC", "true").toBoolean
-
   /** JVM arguments this process was launched with, minus every knob the
     * protocol pins itself (heap sizing, pre-touch, region size, OOM
     * hooks) — the inheritable remainder (add-opens, -D conf) any child
@@ -1644,7 +1283,7 @@ object Bench {
         a.startsWith("-XX:OnOutOfMemoryError"))
   }
 
-  /** Command line for a `graft.Bench` child at the committed protocol
+  /** Command line for a `graft.Bench` child at this process's own
     * heap: Xms pinned to Xmx (G1 cannot uncommit below Xms, so the
     * gc-uncommit-retouch amplifier cannot exist), AlwaysPreTouch (every
     * heap page zeroed ONCE at JVM start, outside all sample windows),
@@ -1654,32 +1293,12 @@ object Bench {
     * fragment the region map into a spurious OOM (docs/HOST_DRIFT.md §1).
     */
   private def protocolJvmCmd(extraJvmArgs: Seq[String]): Seq[String] = {
-    val mb = expectedHeapMb.toLong
+    val mb = Runtime.getRuntime.maxMemory / 1048576
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     Seq(javaBin) ++ inheritedJvmArgs ++ Seq(
       s"-Xms${mb}m", s"-Xmx${mb}m", "-XX:+AlwaysPreTouch",
       "-XX:G1HeapRegionSize=32m") ++ extraJvmArgs ++ Seq(
       "-cp", System.getProperty("java.class.path"), "graft.Bench")
-  }
-
-  /** Re-exec this JVM as `graft.Bench` at [[expectedHeapMb]] (see
-    * [[protocolJvmCmd]] for the pinned JVM knobs; AlwaysPreTouch costs a
-    * measured 1.4 s at 8 g at JVM start, outside all sample windows).
-    * The child inherits stdio (its digest line IS this process's
-    * output), every non-heap JVM arg, the classpath and the environment;
-    * the parent's foreign heap is recorded for the artifact via
-    * SPARK_GRAFT_PARENT_HEAP_MB. Never returns.
-    */
-  private def reexecAtExpectedHeap(args: Array[String], actualMb: Long): Nothing = {
-    import scala.jdk.CollectionConverters._
-    val cmd = protocolJvmCmd(Nil) ++ args
-    val pb = new ProcessBuilder(cmd.asJava).inheritIO()
-    pb.environment().put("SPARK_GRAFT_PARENT_HEAP_MB", actualMb.toString)
-    pb.environment().put("SPARK_GRAFT_HEAP_REEXEC", "false")
-    System.err.println(s"[bench] heap ${actualMb}mb deviates from the " +
-      s"committed protocol ${expectedHeapMb.toLong}mb - re-exec at the " +
-      "protocol heap (SPARK_GRAFT_HEAP_REEXEC=false to flag instead)")
-    sys.exit(pb.start().waitFor())
   }
 
   // ===== crash salvage (round 16, verdict items 1+4) ======================
@@ -1762,7 +1381,7 @@ object Bench {
   // Passes and scale sections used to share one JVM; HOST_DRIFT §1's own
   // evidence is that the OOM class is JVM-aging-dependent (the query that
   // killed two full runs completed clean in a fresh JVM). Each scale
-  // section now runs in a CHILD JVM at the protocol heap: a dead child is
+  // section now runs in a CHILD JVM at the parent's heap: a dead child is
   // a recorded `oom_child` cause plus whatever the child had already
   // published — never a dead round — and the parent retries the section
   // once in another fresh JVM. The child publishes its section fragment
@@ -1776,17 +1395,6 @@ object Bench {
   private val SectionPartitionMapEnv = "SPARK_GRAFT_SECTION_PARTITION_MAP"
   private val SectionOutEnv = "SPARK_GRAFT_SECTION_OUT"
   private val SectionBudgetEnv = "SPARK_GRAFT_SECTION_BUDGET"
-
-  /** Whether scale sections run in child JVMs (default) or inline in
-    * this process (the pre-r16 behavior, kept for the attribution
-    * experiments that deliberately reproduce JVM-aging sequences).
-    */
-  private def sectionIsolate: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SECTION_ISOLATE", "true").toBoolean
-
-  /** One fresh-JVM retry for a section whose child died. */
-  private def sectionChildRetry: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SECTION_CHILD_RETRY", "true").toBoolean
 
   /** Serialize a section's (fragment, summary) for the child→parent file.
     * Line-oriented: FRAG carries the JSON fragment verbatim (single line
@@ -1858,65 +1466,13 @@ object Bench {
       java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** OOM class-histogram forensics (round 17, verdict item 1a): a
-    * daemon thread in the section CHILD that waits for the
-    * OnOutOfMemoryError marker file, then takes a class histogram of
-    * its OWN heap via the in-process DiagnosticCommand MBean
-    * (`gcClassHistogram` — the jcmd GC.class_histogram implementation,
-    * no attach round-trip) and writes the head to `<outPath>.oomlog`
-    * for the parent's death echo. Two designs were tried LIVE and
-    * fail structurally, which is why this one exists:
-    *
-    *   - attach-based (`jmap -histo` from the hook): the hook runs
-    *     synchronously on the OOMing thread and a mid-OOM VM does not
-    *     reliably start its attach listener — measured: six SIGQUIT
-    *     thread dumps, then `AttachNotSupportedException: target
-    *     process doesn't respond within 10500ms`, histogram never
-    *     taken. Attach also deadlocks by construction when the hook
-    *     waits on jmap and jmap waits on the VM the hook is blocking.
-    *   - hook-appends-to-the-section-log: the child's stdout redirect
-    *     is a NON-append fd whose lagging file offset silently
-    *     overwrites O_APPEND writes from a hook subprocess — measured:
-    *     the hook's block vanished from the live log while its marker
-    *     touch survived. Hence the separate `.oomlog` file.
-    *
-    * The histogram call triggers a full GC first (the DCmd default),
-    * which post-OOM typically frees the aborted task's garbage and
-    * makes the capture allocatable; a capture that itself OOMs
-    * degrades to a one-line note — the marker classification
-    * (`oom_child`) never depends on this thread.
-    */
-  private def startOomForensics(outPath: String): Unit = {
-    val t = new Thread(() => {
-      val marker = new java.io.File(outPath + ".oom")
-      while (!marker.isFile) Thread.sleep(200)
-      val histo =
-        try {
-          val server = java.lang.management.ManagementFactory.getPlatformMBeanServer
-          val name = new javax.management.ObjectName(
-            "com.sun.management:type=DiagnosticCommand")
-          server.invoke(name, "gcClassHistogram",
-            Array[AnyRef](null), Array("[Ljava.lang.String;"))
-            .asInstanceOf[String].linesIterator.take(44).mkString("\n")
-        } catch { case e: Throwable => s"histogram unavailable: $e" }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outPath + ".oomlog"),
-        (s"[graft-oom] class histogram (in-process, post-OOM):\n$histo\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    }, "graft-oom-forensics")
-    t.setDaemon(true)
-    t.start()
-  }
-
-  /** Child-mode entry: run ONE scale section in this (fresh, protocol-
-    * heap) JVM, publishing the fragment file after every sample. No
+  /** Child-mode entry: run ONE scale section in this (fresh) JVM,
+    * publishing the fragment file after every sample. No
     * stdout: the parent owns the driver-facing lines.
     */
   private def runSectionChild(label: String): Unit = {
     val dir = sys.env(SectionDirEnv)
     val outPath = sys.env(SectionOutEnv)
-    startOomForensics(outPath)
     val budget = sys.env.getOrElse(SectionBudgetEnv, "1200").toDouble
     val names = sys.env.getOrElse(SectionQueriesEnv, "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
@@ -1956,10 +1512,7 @@ object Bench {
       val budget = math.max(60.0, budgetLeft())
       // OnOutOfMemoryError leaves a marker even when the death path
       // skips Spark's exit-52 handler (e.g. an OOM on a non-task
-      // thread). The marker doubles as the trigger for the child's
-      // in-process class-histogram forensics ([[startOomForensics]] —
-      // attach-based jmap provably cannot do this job, see that
-      // scaladoc); the parent echoes the resulting `.oomlog` on death.
+      // thread).
       val cmd = protocolJvmCmd(
         Seq(s"-XX:OnOutOfMemoryError=/bin/touch ${oomMarker.getPath}"))
       val pb = new ProcessBuilder(cmd.asJava)
@@ -1971,21 +1524,16 @@ object Bench {
       env.put(SectionQueriesEnv, names.mkString(","))
       env.put(SectionOutEnv, outPath)
       env.put(SectionBudgetEnv, budget.toLong.toString)
-      env.put("SPARK_GRAFT_HEAP_REEXEC", "false") // already at protocol heap
-      if (degrade) env.put("SPARK_GRAFT_CHECKPOINT_LEVEL",
-        sys.env.getOrElse("SPARK_GRAFT_OOM_RETRY_LEVEL", "DISK_ONLY"))
+      if (degrade) env.put("SPARK_GRAFT_CHECKPOINT_LEVEL", "DISK_ONLY")
       // sf100 defaults to the unroll-free checkpoint level (round 17,
       // verdict item 1b): r16's driver run hit oom_child in a FRESH
       // child at the default level — MemoryStore unroll pressure at
       // sf100 working sets is a property of this host class, not of JVM
       // age — and SCALING.md §11 measured DISK_ONLY within host noise.
       // The child discloses the level in the fragment
-      // (`sf100_checkpoint_level`), a caller-pinned level always wins,
-      // and SPARK_GRAFT_SF100_CHECKPOINT_LEVEL=MEMORY_AND_DISK restores
-      // the old default for A/B runs.
+      // (`sf100_checkpoint_level`) and a caller-pinned level always wins.
       else if (label == "sf100" && !sys.env.contains("SPARK_GRAFT_CHECKPOINT_LEVEL"))
-        env.put("SPARK_GRAFT_CHECKPOINT_LEVEL",
-          sys.env.getOrElse("SPARK_GRAFT_SF100_CHECKPOINT_LEVEL", "DISK_ONLY"))
+        env.put("SPARK_GRAFT_CHECKPOINT_LEVEL", "DISK_ONLY")
       // sf100 also gets data-scaled shuffle partitions (round 17): the
       // histogram-named OOM class is per-task join-build/sort memory,
       // whose peak is build-bytes ÷ partitions × concurrency. 64 (not
@@ -1999,15 +1547,12 @@ object Bench {
       // (`sf100_shuffle_partitions`); a caller-pinned value wins; AQE
       // coalesces where the data is small.
       if (label == "sf100" && !sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")) {
-        env.put("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          sys.env.getOrElse("SPARK_GRAFT_SF100_SHUFFLE_PARTITIONS", "64"))
+        env.put("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64")
         // per-query partition overrides ride a separate env (round 18,
-        // verdict stretch 7) — only when the caller pinned NOTHING, so
-        // both pin envs keep their "always win" contract
-        if (!sys.env.contains("SPARK_GRAFT_SF100_SHUFFLE_PARTITIONS") &&
-            Sf100PartitionMap.nonEmpty)
-          env.put(SectionPartitionMapEnv, Sf100PartitionMap
-            .map { case (q, n) => s"$q=$n" }.mkString(","))
+        // verdict stretch 7) — only when the caller pinned nothing, so
+        // the pin keeps its "always win" contract
+        env.put(SectionPartitionMapEnv, Sf100PartitionMap
+          .map { case (q, n) => s"$q=$n" }.mkString(","))
       }
       System.err.println(s"[bench] $label section -> child JVM (attempt $n, " +
         s"budget ${budget.toLong}s${if (degrade) ", DEGRADED checkpoint level" else ""})")
@@ -2060,19 +1605,9 @@ object Bench {
           java.nio.charset.StandardCharsets.UTF_8).trim
         catch { case _: Throwable => "" }
         // the root exception must survive the driver's 2000-char tail:
-        // echo the child log's last lines to OUR stderr — plus the
-        // child's post-OOM class-histogram forensics when it captured
-        // one, so the dying allocation class lands in THIS process's
-        // stderr where the driver (and HOST_DRIFT) can quote it
-        val oomBlock = try {
-          val p = java.nio.file.Paths.get(outPath + ".oomlog")
-          if (java.nio.file.Files.isRegularFile(p))
-            "\n" + new String(java.nio.file.Files.readAllBytes(p),
-              java.nio.charset.StandardCharsets.UTF_8).take(4000)
-          else ""
-        } catch { case _: Throwable => "" }
+        // echo the child log's last lines to OUR stderr
         System.err.println(s"[bench] $label child died ($cause, " +
-          s"in-flight: $inflight); log tail:\n${log.takeRight(1200)}$oomBlock")
+          s"in-flight: $inflight); log tail:\n${log.takeRight(1200)}")
         Some((cause, inflight))
       }
     }
@@ -2103,7 +1638,7 @@ object Bench {
       case None => ()
       case Some((cause1, inflight1)) =>
         publishDeath(1, cause1, inflight1)
-        if (sectionChildRetry && budgetLeft() > 60) {
+        if (budgetLeft() > 60) {
           // an OOM death retries DEGRADED: the retry child's lineage cuts
           // run DISK_ONLY (Materialize.cut streams blocks to DiskStore —
           // the MemoryStore unroll that killed attempt 1 does not EXIST
@@ -2143,15 +1678,6 @@ object Bench {
     lastPublished.get(label)
 
   def main(args: Array[String]): Unit = {
-    // NEUTRALIZE a foreign heap before measuring anything (round 15):
-    // rounds 12-14 each shipped heavy scale samples 2-4.6× over the
-    // committed idle bands because the driver channel exports a large
-    // SPARK_DRIVER_MEM; round 14 made the artifact NAME that cause
-    // (heap_mb + per-sample heap= tags), this makes the measurement
-    // valid instead — the bench re-runs itself at the protocol heap and
-    // the artifact records both heaps.
-    if (heapReexecEnabled && heapMismatchCause.isDefined)
-      reexecAtExpectedHeap(args, Runtime.getRuntime.maxMemory / 1048576)
     // child mode (round 16): run exactly one scale section and exit —
     // the parent owns stdout, artifacts and death classification
     sys.env.get(SectionChildEnv) match {
@@ -2188,11 +1714,11 @@ object Bench {
     // Each sample carries the index of the calibration point immediately
     // before it; its trailing bracket is calibIdx + 1 (the next mid-pass
     // point, or the pass-end point).
-    case class Sample(name: String, ts: Long, loadBefore: Double, load: Double,
+    case class Sample(name: String, ts: Long,
                       diag: SampleDiag, res: Either[String, Double],
                       leaked: Boolean, calibIdx: Int)
-    case class Pass(calibs: Seq[Double], passLoad: Double, samples: Seq[Sample])
-    case class Judged(secs: Double, ts: Long, loadBefore: Double, load: Double,
+    case class Pass(calibs: Seq[Double], samples: Seq[Sample])
+    case class Judged(secs: Double, ts: Long,
                       diag: SampleDiag, cause: Option[String], suspect: Boolean)
 
     val passes = scala.collection.mutable.ArrayBuffer.empty[Pass]
@@ -2242,11 +1768,10 @@ object Bench {
             p.samples.count(s => envCause(s.diag).isDefined) >= 2 => i + 1 }
       // A sample is SUSPECT when either surrounding calibration point ran
       // hot OR any [[envCause]] arm measured an abnormal environment
-      // DURING its wall window — external CPU (the r12 arm), PSI
-      // io/memory stall, major-fault storms, or a GC-dominated window
-      // (the r13 arms: the causes CPU accounting is blind to). Only
+      // DURING its wall window — external CPU (the r12 arm) or a PSI
+      // io stall (the r13 arm: a cause CPU accounting is blind to). Only
       // successful reps are judged, so every per-query array below
-      // (samples / ts / load / diag / cause / suspect) is index-aligned.
+      // (samples / ts / diag / cause / suspect) is index-aligned.
       val judged: Seq[(String, Judged)] = ps.flatMap { p =>
         p.samples.flatMap { s =>
           s.res.toOption.map { secs =>
@@ -2259,8 +1784,7 @@ object Bench {
               if (isHot(p.calibs(s.calibIdx), runBest) || trailingHot)
                 Some("calib_bracket")
               else None)
-            s.name -> Judged(secs, s.ts, s.loadBefore, s.load, s.diag,
-              cause, cause.isDefined)
+            s.name -> Judged(secs, s.ts, s.diag, cause, cause.isDefined)
           }
         }
       }
@@ -2298,17 +1822,8 @@ object Bench {
       val mins = jmap(good)(s => fmt(s.map(_.secs).min))
       val samples = jmap(good)(s => s.map(j => fmt(j.secs)).mkString("[", ",", "]"))
       val sampleTs = jmap(good)(s => s.map(_.ts).mkString("[", ",", "]"))
-      val sampleLoad = jmap(good)(s => s.map(j => fmt(j.load)).mkString("[", ",", "]"))
-      val sampleLoadBefore = jmap(good)(s => s.map(j => fmt(j.loadBefore)).mkString("[", ",", "]"))
       val sampleExt = jmap(good)(s => s.map(j => fmt(j.diag.extCores)).mkString("[", ",", "]"))
-      val sampleGc = jmap(good)(s => s.map(j => fmt(j.diag.gcFrac)).mkString("[", ",", "]"))
-      val sampleSys = jmap(good)(s => s.map(j => fmt(j.diag.sysCores)).mkString("[", ",", "]"))
-      val sampleMinflt = jmap(good)(s => s.map(j => fmt(j.diag.minfltRate)).mkString("[", ",", "]"))
-      val sampleMajflt = jmap(good)(s => s.map(j => fmt(j.diag.majfltRate)).mkString("[", ",", "]"))
       val samplePsiIo = jmap(good)(s => s.map(j => fmt(j.diag.psiIoFrac)).mkString("[", ",", "]"))
-      val samplePsiMem = jmap(good)(s => s.map(j => fmt(j.diag.psiMemFrac)).mkString("[", ",", "]"))
-      val sampleIoRead = jmap(good)(s => s.map(j => fmt(j.diag.ioReadMb)).mkString("[", ",", "]"))
-      val sampleIoWrite = jmap(good)(s => s.map(j => fmt(j.diag.ioWriteMb)).mkString("[", ",", "]"))
       val sampleCause = jmap(good)(s =>
         s.map(j => "\"" + jesc(j.cause.getOrElse("")) + "\"").mkString("[", ",", "]"))
       val sampleSuspect = jmap(good)(s => s.map(_.suspect).mkString("[", ",", "]"))
@@ -2333,7 +1848,6 @@ object Bench {
       val calibJson = ps
         .map(_.calibs.map(fmt).mkString("[", ",", "]")).mkString("[", ",", "]")
       val contJson = contended.mkString("[", ",", "]")
-      val loadJson = ps.map(p => fmt(p.passLoad)).mkString("[", ",", "]")
       val skipJson =
         if (skippedWork.isEmpty && neverRan.isEmpty) ""
         else s""","skipped":${jarr(skippedWork.toSeq ++ neverRan)}"""
@@ -2357,25 +1871,16 @@ object Bench {
         s"""$errJson$skipJson${scaleJsons.mkString},"sf":"$sfDir"}"""
       val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":$qs,"queries_min":$mins,"samples":$samples,""" +
-        s""""sample_ts":$sampleTs,"sample_load":$sampleLoad,""" +
-        s""""sample_load_before":$sampleLoadBefore,""" +
+        s""""sample_ts":$sampleTs,""" +
         s""""sample_ext_cores":$sampleExt,""" +
-        s""""sample_gc_frac":$sampleGc,""" +
-        s""""sample_sys_cores":$sampleSys,""" +
-        s""""sample_minflt_rate":$sampleMinflt,""" +
-        s""""sample_majflt_rate":$sampleMajflt,""" +
         s""""sample_psi_io":$samplePsiIo,""" +
-        s""""sample_psi_mem":$samplePsiMem,""" +
-        s""""sample_io_read_mb":$sampleIoRead,""" +
-        s""""sample_io_write_mb":$sampleIoWrite,""" +
         s""""sample_cause":$sampleCause,""" +
         s""""sample_suspect":$sampleSuspect,""" +
-        s""""jvm":$jvmHealthJson,""" +
         s""""calibration":$calibJson,"calib_baseline":${fmt(calibBaseline)},""" +
         s""""calib_every":$calibEvery,"contended":$contJson,""" +
         s""""suspect":$nSuspect,"clean_medians":true,""" +
         s""""no_clean_samples":${jarr(noClean)},""" +
-        s""""pass_load":$loadJson,"reps":$reps,""" +
+        s""""reps":$reps,""" +
         s""""reps_completed":${passes.length},"truncated":$truncated,""" +
         s""""deadline_secs":${fmt(deadlineSecs)},"elapsed_secs":${fmt(elapsed)},""" +
         s""""query_cap_secs":${fmt(queryCap)},""" +
@@ -2412,7 +1917,6 @@ object Bench {
         val spark = newSession(cpus)
         try {
           warmup(spark, sfDir)
-          val passLoad = loadAvg
           val calibs = scala.collection.mutable.ArrayBuffer(calibrate(spark))
           val samples = scala.collection.mutable.ArrayBuffer.empty[Sample]
           var cut = false
@@ -2423,18 +1927,13 @@ object Bench {
             } else {
               if (qi > 0 && qi % calibEvery == 0) calibs += calibrate(spark)
               val ts = System.currentTimeMillis() / 1000L
-              // loadavg before/after ride along as DIAGNOSTICS only —
-              // since round 12 the suspect rule judges on the measured
-              // per-sample environment inside runOnce, not on either read
-              val lb = loadAvg
               noteInFlight(s"pass$p:${q.name}")
               val (r, leaked, diag) = runOnce(spark, q, sfDir, queryCap)
               noteInFlight(s"(between samples; last=pass$p:${q.name})")
-              samples += Sample(q.name, ts, lb, loadAvg, diag, r, leaked,
-                calibs.length - 1)
+              samples += Sample(q.name, ts, diag, r, leaked, calibs.length - 1)
               // per-sample salvage: fold the in-flight pass into the
               // cumulative artifact and reprint the digest
-              partialPass = Some(Pass(calibs.toSeq, passLoad, samples.toSeq))
+              partialPass = Some(Pass(calibs.toSeq, samples.toSeq))
               emit()
             }
           }
@@ -2443,7 +1942,7 @@ object Bench {
           // warmup) is not a completed rep — don't let it inflate
           // reps_completed; its skip marker already rides in "skipped"
           partialPass = None
-          if (samples.nonEmpty) passes += Pass(calibs.toSeq, passLoad, samples.toSeq)
+          if (samples.nonEmpty) passes += Pass(calibs.toSeq, samples.toSeq)
         } finally spark.stop()
         emit()
       }
@@ -2467,7 +1966,7 @@ object Bench {
         else {
           // every publication REPLACES this section's fragment in the
           // cumulative artifact and re-emits — per-sample salvage for
-          // scale sections, whether they run inline or in a child JVM
+          // scale sections, which run in a child JVM
           var idx = -1
           def publish(frag: String, summary: ScaleSummary): Unit = {
             if (idx < 0) {
@@ -2477,12 +1976,7 @@ object Bench {
             lastPublished += label -> (frag, summary)
             emit()
           }
-          if (sectionIsolate)
-            runSectionInChild(label, d, names, budgetLeft, publish)
-          else
-            scaleSection(label, d, cpus,
-              catalog.filter(q => names.contains(q.name)),
-              () => budgetLeft() > 0, publish)
+          runSectionInChild(label, d, names, budgetLeft, publish)
           None
         }
       }
@@ -2511,33 +2005,27 @@ object Bench {
     //      measured in the quiet-host slot, so comparability also says
     //      keep it.
     //
-    // The scale phase is BUDGETED (default 1200 s — the committed
+    // The scale phase is BUDGETED (1200 s — the committed
     // sections total ~460 s idle) so a pathological section cannot eat
     // the main suite's deadline. Only sections that NEVER STARTED inside
     // the budget defer to the old post-suite slot; a section that starts
     // and exhausts the budget mid-way records its remaining queries
     // under `<label>_skipped` and they do not re-run later (re-queueing
     // them would emit a second `<label>` fragment — duplicate JSON keys
-    // in the artifact). SPARK_GRAFT_SCALE_FIRST=false restores the r12
-    // order (used by the attribution experiment that reproduces the
-    // driver-channel sequence).
-    val scaleFirst = sys.env.getOrElse("SPARK_GRAFT_SCALE_FIRST", "true").toBoolean
-    val scaleBudget = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET", "1200").toDouble
+    // in the artifact).
+    val scaleBudget = 1200.0
     // emit an (empty) artifact before any work: even a death inside the
     // first section's warmup now leaves the driver a parsed line
     emit()
 
-    val pending =
-      if (scaleFirst)
-        runScaleSections(allSections,
-          () => math.min(scaleBudget, deadlineSecs) - elapsed)
-      else allSections
+    val pending = runScaleSections(allSections,
+      () => math.min(scaleBudget, deadlineSecs) - elapsed)
 
     runPasses()
 
-    // post-suite slot: sections the scale-first budget didn't cover (or
-    // all of them under SPARK_GRAFT_SCALE_FIRST=false), under the global
-    // deadline; a section that can't start records a skip marker
+    // post-suite slot: sections the scale-first budget didn't cover,
+    // under the global deadline; a section that can't start records a
+    // skip marker
     pending.foreach { case s @ (label, d, _) =>
       if (new java.io.File(d).isDirectory && !timeLeft()) {
         truncated = true; skippedWork += label

@@ -4,7 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * query fn — checkpoints, iterative convergence loops — is part of its
   * cost, as in Bench), and the Spark jobs that write ran: count, Σjob
   * time, the driver gap (wall − Σjob: analysis, planning and scheduling
-  * on the driver) and the slowest jobs with their stage and task counts.
+  * on the driver) and the slowest jobs with their stage and task counts,
+  * each labelled by the SQL operators its final stage runs.
   *
   * Usage: runMain graft.Profile <sfDir> <gate> [gate ...]
   */
@@ -42,8 +43,7 @@ object Profile {
       if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == MarkerGroup))
         markerId = j.jobId
       else started.put(j.jobId, (j.time, Job(j.jobId, 0.0, j.stageInfos.size,
-        j.stageInfos.map(_.numTasks).sum,
-        j.stageInfos.map(_.name.takeWhile(_ != '+').trim).distinct.mkString(" | "))))
+        j.stageInfos.map(_.numTasks).sum, jobLabel(j.stageInfos))))
 
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       if (j.jobId == markerId) drained.countDown()
@@ -60,6 +60,18 @@ object Profile {
       drained.await(60, TimeUnit.SECONDS)
     }
   }
+
+  /** A job's label: the distinct RDD operation scopes of its final stage
+    * (the SQL operators it runs, e.g. `Exchange | WholeStageCodegen (2)`;
+    * earlier stages may be skipped shuffle reuse). Stage call sites name
+    * the AQE stage thread for most SQL jobs, so they are only the
+    * fallback for a stage whose RDDs carry no scope.
+    */
+  private def jobLabel(stages: Seq[StageInfo]): String =
+    stages.maxByOption(_.stageId).fold("") { last =>
+      val scopes = last.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+      if (scopes.nonEmpty) scopes.mkString(" | ") else last.name.takeWhile(_ != '+').trim
+    }
 
   /** Profile `gates` (catalog names, in catalog order) with a listener
     * that is removed again before this returns.

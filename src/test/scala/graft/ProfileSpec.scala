@@ -14,6 +14,10 @@ class ProfileSpec extends SparkTestBase {
     assert(r.plan.contains("Physical Plan"), r.plan)
     assert(r.wallS > 0)
     assert(r.jobs.nonEmpty && r.jobs.forall(j => j.tasks > 0 && j.seconds >= 0))
+    // jobs are labelled by the operators they run, not by the call site
+    // of the AQE thread that submitted them
+    assert(r.jobs.forall(j => j.desc.nonEmpty && !j.desc.contains("CompletableFuture")),
+      r.jobs.map(_.desc).mkString("\n"))
 
     // a job after Profile returns reaches a probe listener but not the recorder
     val seen = recorder.jobs.size
