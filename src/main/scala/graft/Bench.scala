@@ -613,16 +613,6 @@ object Bench {
       "q_dedup_winnow_pairs" -> 29.3,
       "q_curate_e2e_scale" -> 62.4))
 
-  /** Divergence rule for the digest's `divergent` list: a measured scale
-    * sample disagrees with its committed reference when the ratio
-    * exceeds 1.5× in either direction — the within-1.5× band is the
-    * round-12 done-criterion for channel agreement. Package-private for
-    * the spec.
-    */
-  private[graft] def isDivergent(measured: Double, ref: Double): Boolean =
-    ref > 0 && measured > 0 &&
-      (measured / ref > 1.5 || ref / measured > 1.5)
-
   /** Section-level memory-bandwidth fingerprints of the SAME artifact
     * family [[ScaleRefs]] is pinned to (r18a/b/c/d — the optimization
     * round's four full-protocol runs: zero errors, clean medians;

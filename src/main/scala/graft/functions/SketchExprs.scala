@@ -19,54 +19,20 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object SketchExprs {
 
-  /** Membership probe of a serialized [[BloomFilter]] against a STRING
+  /** Membership probe of a broadcast [[BloomFilter]] against a STRING
     * column: false is definitive (the filter has no false negatives),
-    * true means "possibly present" at the filter's fpp.
-    *
-    * The serialized filter travels in the task binary — torrent-broadcast
-    * once per executor, deserialized lazily per executor thread-safe-ly
-    * (BloomFilter reads are lock-free after construction). Size the
-    * filter for its history (~1.2 GB per 10⁹ items at 1% fpp) and
-    * persist it across ingestion batches rather than rebuilding.
-    */
-  case class BloomMightContainString(child: Expression, filterBytes: Array[Byte])
-    extends UnaryExpression with CodegenFallback {
-
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "bloom_might_contain"
-
-    @transient private lazy val filter =
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(filterBytes))
-
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Boolean.valueOf(filter.mightContainString(input.toString))
-
-    override protected def withNewChildInternal(newChild: Expression): BloomMightContainString =
-      copy(child = newChild)
-  }
-
-  def bloomMightContain(c: Column, filter: BloomFilter): Column = {
-    val bos = new java.io.ByteArrayOutputStream()
-    filter.writeTo(bos)
-    GraftShim.column(BloomMightContainString(GraftShim.expression(c), bos.toByteArray))
-  }
-
-  /** [[BloomMightContainString]]'s broadcast twin — the 100-TB probe
-    * shape (round 14, docs/REUSE_TWIN_ATTRIBUTION.md finding 4): the
-    * bytes variant embeds the serialized filter in the expression, so
-    * every TASK deserializes a fresh bitset — ~5 MB × tasks at sf1
-    * (noise), ~1.2 GB × tasks for a 10⁹-doc history (not). Here the
-    * expression carries only the broadcast HANDLE; the filter object is
+    * true means "possibly present" at the filter's fpp. The expression
+    * carries only the broadcast HANDLE; the filter object is
     * fetched/deserialized once per executor by the broadcast machinery
-    * (BloomFilterImpl is Serializable) and shared by every task on it.
+    * (BloomFilterImpl is Serializable) and shared by every task on it
+    * (docs/REUSE_TWIN_ATTRIBUTION.md finding 4). Size the filter for its
+    * history (~1.2 GB per 10⁹ items at 1% fpp) and persist it across
+    * ingestion batches rather than rebuilding.
     *
-    * CONTRACT CHANGE vs the bytes variant, for callers that mutate the
-    * filter (the streaming sink's mergeInPlace): the bytes variant
-    * snapshotted the filter at COLUMN-CONSTRUCTION time, so later
-    * mutation never affected even a lazy frame; in local mode a
-    * broadcast can hand back the caller's own object, so mutate only
-    * after the probing frame is materialized (both existing callers
-    * already checkpoint before merging).
+    * For callers that mutate the filter (the streaming sink's
+    * mergeInPlace): in local mode a broadcast can hand back the caller's
+    * own object, so mutate only after the probing frame is materialized
+    * (both existing callers already checkpoint before merging).
     */
   case class BloomMightContainBroadcast(
       child: Expression,

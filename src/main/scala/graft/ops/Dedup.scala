@@ -698,20 +698,6 @@ object Dedup {
           .otherwise(lit(0.0)))
   }
 
-  /** Bipartite n-gram Jaccard: (inc_id, ex_id, jaccard) for every
-    * incoming×existing pair at or above `threshold` — the cross-corpus
-    * half of incremental near-dup screening. Same inverted-index shape
-    * as [[ngramJaccardPairs]] but the join is between two different
-    * frames, so candidate volume is bounded by shared-shingle hits
-    * between the (small) batch and the corpus index, never corpus².
-    */
-  def ngramJaccardAgainst(incoming: DataFrame, existing: DataFrame,
-                          textCol: String, idCol: String,
-                          n: Int, threshold: Double): DataFrame =
-    bipartiteJaccard(
-      shingleIndex(incoming, textCol, idCol, n), idCol,
-      shingleIndex(existing, textCol, idCol, n), idCol, threshold)
-
   /** The shared bipartite join of the cross-corpus screens: both sides
     * in [[shingleIndex]] shape, output (inc_id, ex_id, jaccard) at or
     * above `threshold`.

@@ -164,10 +164,6 @@ object Flac {
     def alignByte(): Unit = if (bitPos != 0) { bitPos = 0; bytePosV += 1 }
 
     def bytePos: Int = { require(bitPos == 0, "unaligned"); bytePosV }
-
-    def atEnd: Boolean = bytePosV >= p.length || (bytePosV == p.length - 1 && bitPos > 0)
-
-    def hasBytes(n: Int): Boolean = bytePosV + n <= p.length && bitPos == 0
   }
 
   private object Eof extends RuntimeException("flac eof") {

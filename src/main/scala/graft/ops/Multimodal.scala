@@ -1430,12 +1430,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** STUB resize: emits the target geometry (a real impl transforms the
-    * payload); demonstrates metadata-preserving payload transforms.
-    */
-  def resizeStub(df: DataFrame, payloadCol: String, w: Int, h: Int): DataFrame =
-    df.withColumn("resize_target", struct(lit(w).as("width"), lit(h).as("height")))
-
   /** Parsed ISO-BMFF sample tables of one track: media timescale, one
     * size and one duration (in media ticks) per sample, and the 1-based
     * sync-sample (keyframe) numbers from `stss` (`None` = no stss box,

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{Bounds, Restructure}
+import graft.ops.Restructure
 import graft.sources.{PipelineConfig, StageIO}
 
 /** The six-stage DAG (reference .github/workflows/data-pipeline.yaml:
@@ -52,10 +52,9 @@ object Runner {
     */
   def validate(spark: SparkSession, tables: StageTables,
                kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-               kPriceKg: Double = 3.0,
-               globalBounds: Bounds.Strategy = Bounds.TwoPassExact): Unit = {
+               kPriceKg: Double = 3.0): Unit = {
     val res = Validate.fused(StageIO.load(spark, tables.preprocessed),
-      kNFishers, kNBoats, kPriceKg, globalBounds)
+      kNFishers, kNBoats, kPriceKg)
     StageIO.save(res.validated, tables.validated)
     StageIO.save(res.alertFlags, tables.alertFlags)
   }

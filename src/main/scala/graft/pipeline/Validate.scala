@@ -19,12 +19,15 @@ import graft.ops.{Bounds, Matching}
   */
 object Validate {
 
+  /** validate_dates' landing-date cutoff (reference :77-94). */
+  private val DateCutoff = "2020-12-31"
+
   /** V1 (reference :77-94): the second dplyr assignment overwrites the
     * first, so the live rule is only `landing_date < cutoff` → alert 1 +
     * mask (SURVEY.md V1 decision; the `landing_date > submission_date`
     * predicate is dead in the reference and therefore here too).
     */
-  def validateDates(data: DataFrame, cutoff: String = "2020-12-31"): DataFrame = {
+  def validateDates(data: DataFrame, cutoff: String = DateCutoff): DataFrame = {
     val alert = when(col("landing_date") < lit(cutoff), 1.0)
     data.select(
       col("form_name"), col("survey_id"),
@@ -179,8 +182,7 @@ object Validate {
 
   def apply(preprocessed: DataFrame,
             kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-            kPriceKg: Double = 3.0,
-            globalBounds: Bounds.Strategy = Bounds.TwoPassExact): ValidationResult = {
+            kPriceKg: Double = 3.0): ValidationResult = {
     val keys = Seq("form_name", "survey_id")
     // Deliberately LAZY fan-out (round 18, measured): the faithful chain
     // consumes `preprocessed` from ~8 places (four validators — two of
@@ -200,8 +202,8 @@ object Validate {
     val pre = preprocessed
     val outputs = Seq(
       validateDates(pre),
-      validateNFishers(pre, kNFishers, globalBounds),
-      validateNBoats(pre, kNBoats, globalBounds),
+      validateNFishers(pre, kNFishers),
+      validateNBoats(pre, kNBoats),
       validatePriceKg(pre, kPriceKg))
 
     // J5: cleaned columns re-merge
@@ -237,8 +239,8 @@ object Validate {
     *
     *   1. ONE small query, run and collected when `fused` is called:
     *      the n_fishers and n_boats upper bounds as one grouped
-    *      [[Bounds.globalBoundsStacked]] aggregation (`globalBounds`
-    *      strategy), unioned with the per-taxon price bounds
+    *      [[Bounds.globalBoundsStacked]] aggregation (two-pass exact,
+    *      like [[apply]]'s global bounds), unioned with the per-taxon price bounds
     *      ([[Bounds.boundsAgg]]) — 2 + #taxa rows;
     *   2. ONE projection over preprocessed per output, reading those
     *      bounds as driver-side constants: two scalar literals and a
@@ -262,9 +264,7 @@ object Validate {
     */
   def fused(preprocessed: DataFrame,
             kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-            kPriceKg: Double = 3.0,
-            globalBounds: Bounds.Strategy = Bounds.TwoPassExact,
-            dateCutoff: String = "2020-12-31"): ValidationResult = {
+            kPriceKg: Double = 3.0): ValidationResult = {
     def masked(valueCol: String): Column =
       when(col(valueCol) < 0, lit(null).cast(DoubleType))
         .otherwise(col(valueCol).cast(DoubleType))
@@ -272,7 +272,7 @@ object Validate {
     val nbMasked = masked("n_boats")
     val global = Bounds.globalBoundsStacked(preprocessed,
       Seq(("n_fishers", nfMasked, kNFishers), ("n_boats", nbMasked, kNBoats)),
-      logt = true, globalBounds)
+      logt = true, Bounds.TwoPassExact)
       .select(lit(true).as("global"), col("column").as("key"),
         lit(null).cast(DoubleType).as("lb"), (exp(col("upper_up")) - 1).as("ub"))
     val price = Bounds.boundsAgg(
@@ -291,7 +291,7 @@ object Validate {
       .map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
       .getItem(col("catch_taxon"))
 
-    val alertDate = when(col("landing_date") < lit(dateCutoff), 1.0)
+    val alertDate = when(col("landing_date") < lit(DateCutoff), 1.0)
     val alertNf = coalesce(when(nfMasked > upper("n_fishers"), 2.0),
       when(col("n_fishers") < 0, 2.0))
     val alertNb = coalesce(when(nbMasked > upper("n_boats"), 3.0),

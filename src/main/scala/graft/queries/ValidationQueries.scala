@@ -1,66 +1,54 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.ops.{Bounds, Matching}
+import graft.ops.Bounds
+import graft.pipeline.Validate
 
 /** Correctness-gate queries for the validation operator family
-  * (SURVEY.md §2.8) re-expressed over the synthetic tables. Each validator
-  * keeps the reference contract: emit (key, cleaned value columns, alert
+  * (SURVEY.md §2.8): each gate renames synthetic-table columns to the
+  * validator's input shape and runs the [[Validate]] function itself, so
+  * the oracle certifies the code the pipeline runs. Each validator keeps
+  * the reference contract: emit (key, cleaned value columns, alert
   * column); invalid values are masked to null with a numeric alert code.
   */
 object ValidationQueries {
 
-  /** V1: date validation with the reference's shadowed predicate — the
-    * second dplyr assignment silently overwrites the first
+  /** V1: [[Validate.validateDates]] — the reference's second dplyr
+    * assignment silently overwrites the first
     * (R/validation-functions.R:84-85), so the effective rule is only
-    * `landing_date < cutoff` → alert 1 + mask. Ported deliberately
-    * (SURVEY.md V1 decision); the shadowed `landing > submission` check is
-    * shown here and discarded exactly like dplyr does.
+    * `landing_date < cutoff` → alert 1 + mask (SURVEY.md V1 decision).
     */
   val v1Dates = Q("q_v1_validate_dates",
-    (s, dir) => {
-      val o = Tables.orders(s, dir)
-      val shadowed = when(col("o_orderdate") > col("o_orderdate"), 1.0) // dead: overwritten next line
-      val alert = when(col("o_orderdate") < lit("1996-06-17"), 1.0)
-      o.select(
-        col("o_orderkey").as("survey_id"),
-        when(alert.isNull, to_date(col("o_orderdate"))).as("landing_date"),
-        alert.as("alert_date"))
-        .orderBy("survey_id")
-    },
+    (s, dir) =>
+      Validate.validateDates(Tables.orders(s, dir).select(
+          lit("f1").as("form_name"), col("o_orderkey").as("survey_id"),
+          to_date(col("o_orderdate")).as("landing_date")), "1996-06-17")
+        .select("survey_id", "landing_date", "alert_date")
+        .orderBy("survey_id"),
     Some("""SELECT o_orderkey AS survey_id,
               CASE WHEN o_orderdate < '1996-06-17' THEN NULL
                    ELSE CAST(o_orderdate AS DATE) END AS landing_date,
               CASE WHEN o_orderdate < '1996-06-17' THEN CAST(1.0 AS DOUBLE) END AS alert_date
             FROM orders ORDER BY survey_id"""))
 
-  /** V2/V3: negative check then global LocScaleB upper-outlier mask
-    * (reference validate_nfishers, R/validation-functions.R:112-128):
-    * negatives alert 2 + mask first; the outlier bounds are computed on
-    * the masked column (logt=TRUE), back-transformed `exp(b)-1`
-    * (alert_outlier :51), upper-side alert only.
+  /** V2: [[Validate.validateNFishers]] (reference validate_nfishers,
+    * R/validation-functions.R:112-128): negatives alert 2 + mask first;
+    * the outlier bounds are computed on the masked column (logt=TRUE),
+    * back-transformed `exp(b)-1` (alert_outlier :51), upper-side alert
+    * only. Routed through the single-pass collect-exact aggregate; V3
+    * gates the two-pass route.
     */
   val v2Outlier = Q("q_v2_validate_nfishers",
-    (s, dir) => {
-      val c = Tables.customer(s, dir)
-      val k = 2.5
-      val base = c.select(
-        col("c_custkey").as("survey_id"),
-        when(col("c_acctbal") < 0, 2.0).as("alert_neg"),
-        when(col("c_acctbal") < 0, lit(null).cast(DoubleType))
-          .otherwise(col("c_acctbal")).as("x"))
-      val b = Bounds.boundsAgg(base.withColumn("g", lit(1)), Seq("g"), "x", k, logt = true)
-        .select(lit(1).as("g"), (exp(col("upper_up")) - 1).as("ub"))
-      val out = base.withColumn("g", lit(1))
-        .join(broadcast(b), Seq("g"), "left")
-        .withColumn("alert_outl", when(col("x") > col("ub"), 2.0))
-        .withColumn("alert_n_fishers", coalesce(col("alert_outl"), col("alert_neg")))
-        .withColumn("n_fishers", when(col("alert_n_fishers").isNull, col("x")))
-      out.select("survey_id", "n_fishers", "alert_n_fishers").orderBy("survey_id")
-    },
+    (s, dir) =>
+      Validate.validateNFishers(Tables.customer(s, dir).select(
+          lit("f1").as("form_name"), col("c_custkey").as("survey_id"),
+          col("c_acctbal").as("n_fishers")), 2.5, Bounds.CollectExact)
+        .select("survey_id", "n_fishers", "alert_n_fishers")
+        .orderBy("survey_id"),
     Some("""WITH base AS (
               SELECT c_custkey AS survey_id,
                 CASE WHEN c_acctbal < 0 THEN CAST(2.0 AS DOUBLE) END AS alert_neg,
@@ -84,31 +72,19 @@ object ValidationQueries {
             FROM x, bounds b
             ORDER BY survey_id"""))
 
-  /** V3: validate_nboats — same shape as V2 (reference
+  /** V3: [[Validate.validateNBoats]] — same shape as V2 (reference
     * R/validation-functions.R:147-162), alert code 3, over the supplier
     * balance column. Deliberately routed through the TWO-PASS bounds
     * strategy (the 100 TB global-group path) so that route has its own
     * oracle gate — the numbers must equal the collect-exact aggregate's.
     */
   val v3Outlier = Q("q_v3_validate_nboats",
-    (s, dir) => {
-      val sup = Tables.supplier(s, dir)
-      val k = 2.5
-      val base = sup.select(
-        col("s_suppkey").as("survey_id"),
-        when(col("s_acctbal") < 0, 3.0).as("alert_neg"),
-        when(col("s_acctbal") < 0, lit(null).cast(DoubleType))
-          .otherwise(col("s_acctbal")).as("x"))
-      val b = Bounds.bounds(base.withColumn("g", lit(1)), Seq("g"), "x", k,
-        logt = true, Bounds.TwoPassExact)
-        .select(lit(1).as("g"), (exp(col("upper_up")) - 1).as("ub"))
-      val out = base.withColumn("g", lit(1))
-        .join(broadcast(b), Seq("g"), "left")
-        .withColumn("alert_outl", when(col("x") > col("ub"), 3.0))
-        .withColumn("alert_n_boats", coalesce(col("alert_outl"), col("alert_neg")))
-        .withColumn("n_boats", when(col("alert_n_boats").isNull, col("x")))
-      out.select("survey_id", "n_boats", "alert_n_boats").orderBy("survey_id")
-    },
+    (s, dir) =>
+      Validate.validateNBoats(Tables.supplier(s, dir).select(
+          lit("f1").as("form_name"), col("s_suppkey").as("survey_id"),
+          col("s_acctbal").as("n_boats")), 2.5, Bounds.TwoPassExact)
+        .select("survey_id", "n_boats", "alert_n_boats")
+        .orderBy("survey_id"),
     Some("""WITH base AS (
               SELECT s_suppkey AS survey_id,
                 CASE WHEN s_acctbal < 0 THEN CAST(3.0 AS DOUBLE) END AS alert_neg,
@@ -132,38 +108,33 @@ object ValidationQueries {
             FROM x, bounds b
             ORDER BY survey_id"""))
 
-  /** V4/V5: per-group two-sided LocScaleB price bounds with mask of all
-    * three monetary columns (reference validate_pricekg,
-    * R/validation-functions.R:252-316): bounds per taxon (back-transform
-    * `exp(b)`, no -1 — get_pricekg_bounds :260-263), groups "0"/"no_catch"
-    * excluded from bound computation but their rows retained with null
-    * bounds → never alerted (left join + null-safe comparison).
+  /** Lineitem as catch rows for V4/V5: returnflag 'N' plays the
+    * library's ineligible taxon "no_catch" — excluded from the bounds,
+    * its rows kept with null bounds and never alerted. `catch_taxon` is
+    * not a gate output, so the oracle keeps 'N'.
+    */
+  private def catches(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir).select(
+      lit("f1").as("form_name"),
+      // (orderkey, linenumber) alone is not unique in the synthetic data
+      concat_ws("-", col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")).as("survey_id"),
+      col("l_linestatus").as("gear"),
+      when(col("l_returnflag") === "N", "no_catch").otherwise(col("l_returnflag")).as("catch_taxon"),
+      lit("kg").as("weight_type"),
+      (col("l_extendedprice") / col("l_quantity")).as("price_kg"),
+      col("l_quantity").as("catch_kg"),
+      col("l_extendedprice").as("catch_price"))
+
+  /** V5: [[Validate.validatePriceKg]] — per-taxon two-sided LocScaleB
+    * price bounds masking all three monetary columns (reference
+    * validate_pricekg, R/validation-functions.R:252-316; back-transform
+    * `exp(b)`, no -1 — get_pricekg_bounds :260-263).
     */
   val v5PriceKg = Q("q_v5_validate_pricekg",
-    (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val k = 3.0
-      val base = li.select(
-        // (orderkey, linenumber) alone is not unique in the synthetic data
-        concat_ws("-", col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")).as("survey_id"),
-        col("l_returnflag").as("catch_taxon"),
-        (col("l_extendedprice") / col("l_quantity")).as("price_kg"),
-        col("l_extendedprice").as("catch_price"),
-        col("l_quantity").as("catch_kg"))
-      val eligible = base.filter(col("catch_taxon") =!= "N")
-      val bounds = Bounds.boundsAgg(eligible, Seq("catch_taxon"), "price_kg", k, logt = true)
-        .select(col("catch_taxon"), exp(col("lower_low")).as("lb"), exp(col("upper_up")).as("ub"))
-      base.join(broadcast(bounds), Seq("catch_taxon"), "left")
-        .withColumn("alert_price",
-          when(col("price_kg") >= col("ub") || col("price_kg") <= col("lb"), 4.0))
-        .select(
-          col("survey_id"),
-          when(col("alert_price").isNull, col("price_kg")).as("price_kg"),
-          when(col("alert_price").isNull, col("catch_kg")).as("catch_kg"),
-          when(col("alert_price").isNull, col("catch_price")).as("catch_price"),
-          col("alert_price"))
-        .orderBy(col("survey_id"), col("catch_price"))
-    },
+    (s, dir) =>
+      Validate.validatePriceKg(catches(s, dir), 3.0)
+        .select("survey_id", "price_kg", "catch_kg", "catch_price", "alert_price")
+        .orderBy(col("survey_id"), col("catch_price")),
     Some("""WITH base AS (
               SELECT CONCAT_WS('-', l_orderkey, l_linenumber, l_partkey, l_suppkey) AS survey_id,
                      l_returnflag AS catch_taxon,
@@ -197,34 +168,18 @@ object ValidationQueries {
                                  THEN CAST(4.0 AS DOUBLE) END AS alert) a
             ORDER BY survey_id, catch_price NULLS FIRST"""))
 
-  /** V4: upper-only catch bound per (gear, catch_taxon, weight_type) —
-    * back-transform exp(b) WITHOUT -1 (get_catch_bounds :191); alert 4 on
-    * catch_kg ≥ upper, mask. Defined but never invoked by the reference's
-    * validate_landings (SURVEY.md V4) — kept as a first-class operator.
-    * Keys here: gear=l_linestatus, taxon=l_returnflag, weight_type='kg'.
+  /** V4: [[Validate.validateCatch]] — upper-only catch bound per (gear,
+    * catch_taxon, weight_type), back-transform exp(b) WITHOUT -1
+    * (get_catch_bounds :191); alert 4 on catch_kg ≥ upper, mask. Defined
+    * but never invoked by the reference's validate_landings (SURVEY.md
+    * V4) — kept as a first-class operator. Keys here: gear=l_linestatus,
+    * taxon=l_returnflag, weight_type='kg'.
     */
   val v4Catch = Q("q_v4_validate_catch",
-    (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val k = 2.5
-      val base = li.select(
-        concat_ws("-", col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")).as("survey_id"),
-        col("l_linestatus").as("gear"),
-        col("l_returnflag").as("catch_taxon"),
-        lit("kg").as("weight_type"),
-        col("l_quantity").as("catch_kg"))
-      val eligible = base.filter(col("catch_taxon") =!= "N")
-      val bounds = Bounds.boundsAgg(eligible,
-        Seq("gear", "catch_taxon", "weight_type"), "catch_kg", k, logt = true)
-        .select(col("gear"), col("catch_taxon"), col("weight_type"),
-          exp(col("upper_up")).as("ub"))
-      base.join(broadcast(bounds), Seq("gear", "catch_taxon", "weight_type"), "left")
-        .withColumn("alert_catch", when(col("catch_kg") >= col("ub"), 4.0))
-        .select(col("survey_id"),
-          when(col("alert_catch").isNull, col("catch_kg")).as("catch_kg"),
-          col("alert_catch"))
-        .orderBy(col("survey_id"), col("catch_kg"))
-    },
+    (s, dir) =>
+      Validate.validateCatch(catches(s, dir), 2.5)
+        .select("survey_id", "catch_kg", "alert_catch")
+        .orderBy(col("survey_id"), col("catch_kg")),
     Some("""WITH base AS (
               SELECT CONCAT_WS('-', l_orderkey, l_linenumber, l_partkey, l_suppkey) AS survey_id,
                      l_linestatus AS gear, l_returnflag AS catch_taxon,
@@ -250,11 +205,13 @@ object ValidationQueries {
             FROM base LEFT JOIN bounds b USING (gear, catch_taxon)
             ORDER BY survey_id, catch_kg NULLS FIRST"""))
 
-  /** V6: scalar IMEI validation — null/"0" pass-through, negative→abs,
-    * <9999 → alert 1, suffix match against the device registry: exactly
-    * one match → canonical value, several → alert 2, none → alert 3
-    * (reference validate_this_imei, R/validation-functions.R:339-375).
-    * Probe values synthesized to hit every code path.
+  /** V6: [[Validate.attachImeis]], the IMEI validation merge_trips runs —
+    * null/"0" pass-through, negative→abs, <9999 → alert 1, suffix match
+    * against the device registry: exactly one match → canonical value,
+    * several → alert 2, none → alert 3 (reference validate_this_imei,
+    * R/validation-functions.R:339-375). Probe values synthesized to hit
+    * every code path; survey_id is unique, so each verdict is its raw
+    * value's.
     */
   val v6Imei = Q("q_v6_validate_imei",
     (s, dir) => {
@@ -278,23 +235,8 @@ object ValidationQueries {
           .when(m === 5, (lit(80000) + col("c_custkey") % 10).cast(StringType))
           .otherwise((lit(1100000) + col("c_custkey") % 10 + 1).cast(StringType))
           .as("imei_raw"))
-      // numeric normalization: as.numeric + abs (R/validation-functions.R:355-356)
-      val normalized = probe.withColumn("imei_num",
-        abs(expr("try_cast(imei_raw as double)")))
-      val matched = Matching.suffixMatchCount(
-        normalized.withColumn("imei_str", col("imei_num").cast(LongType).cast(StringType)),
-        "imei_str", registry, "r")
-      matched.select(
-        col("survey_id"),
-        when(col("imei_raw").isNull || col("imei_raw") === "0", lit(null).cast(StringType))
-          .when(col("imei_num") < 9999, lit(null).cast(StringType))
-          .when(col("match_count") === 1, col("matched_value"))
-          .otherwise(lit(null).cast(StringType)).as("imei"),
-        when(col("imei_raw").isNull || col("imei_raw") === "0", lit(null).cast(IntegerType))
-          .when(col("imei_num") < 9999, lit(1))
-          .when(col("match_count") === 1, lit(null).cast(IntegerType))
-          .when(col("match_count") > 1, lit(2))
-          .otherwise(lit(3)).as("alert_number"))
+      Validate.attachImeis(probe, "imei_raw", registry, "r")
+        .select("survey_id", "imei", "alert_number")
         .orderBy("survey_id")
     },
     Some("""WITH sup AS (SELECT s_suppkey FROM supplier WHERE s_suppkey <= 300),
@@ -338,10 +280,10 @@ object ValidationQueries {
     * frame, alert columns united with na.rm semantics (J6). The output
     * gated here is the `alert_flags` frame the reference computes but
     * never persists (kept first-class per SURVEY.md V7). Exercises
-    * [[graft.pipeline.Validate.apply]] itself, including the scale-safe
+    * [[Validate.apply]] itself, including the scale-safe
     * two-pass global-bounds routing for V2/V3.
     */
-  private def v7Base(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def v7Base(s: SparkSession, dir: String) = {
     val li = Tables.lineitem(s, dir)
     // survey_id must be UNIQUE (it is the P7 surrogate key both validate
     // forms join on): the 4-part key collides at sf0.001, and a duplicate
@@ -364,11 +306,11 @@ object ValidationQueries {
 
   val v7Orchestration = Q("q_v7_validate_orchestration",
     (s, dir) =>
-      graft.pipeline.Validate(v7Base(s, dir)).alertFlags
+      Validate(v7Base(s, dir)).alertFlags
         .orderBy("survey_id"),
     Some(V7OracleSql))
 
-  /** The FUSED validate orchestration ([[graft.pipeline.Validate.fused]]):
+  /** The FUSED validate orchestration ([[Validate.fused]]):
     * 2 small bounds aggregations + ONE wide projection instead of the
     * faithful 4-rescan / 3-full-outer chain — identical semantics, so it
     * shares the faithful gate's oracle verbatim. Both forms hash-matching
@@ -377,7 +319,7 @@ object ValidationQueries {
     */
   val v7Fused = Q("q_v7_validate_fused",
     (s, dir) =>
-      graft.pipeline.Validate.fused(v7Base(s, dir)).alertFlags
+      Validate.fused(v7Base(s, dir)).alertFlags
         .orderBy("survey_id"),
     Some(V7OracleSql))
 

@@ -239,52 +239,8 @@ object TrackStream {
       history, textCol, expectedItems = expectedItems, fpp = fpp)
   }
 
-  /** [[bloomDedupForeachBatch]]'s NEAR-dup sibling: incremental n-gram
-    * Jaccard screening as a `foreachBatch` sink. Cross-batch state is
-    * the appended corpus table plus the persisted [[graft.ops.Dedup
-    * .shingleIndex]] (`indexDir`, plain parquet — one (id, n_shingles,
-    * 64-bit shingle hash) row per distinct shingle occurrence). SCALE
-    * BOUNDARY: the per-batch probe join RESHUFFLES the history-side
-    * index rows it reads — Θ(history shingle occurrences) per batch; at
-    * a large history use [[nearDupForeachBatchBucketed]], whose index
-    * rides a bucketed table and reaches the join with zero exchange
-    * (plan-asserted in TrackStreamSpec). Each micro-batch
-    * clusters against itself, probes the index bipartite (the history is
-    * never re-tokenized — the 100 TB property), appends its survivors'
-    * rows AND shingles, and hands survivors to `sink`. A replayed batch
-    * emits zero rows — every doc jaccard-1.0-matches its own ingested
-    * copy — so at-least-once retries stay idempotent.
-    *
-    * RECOVERY CONTRACT: the corpus and index appends are two
-    * non-atomic writes, corpus DELIBERATELY first — a crash between
-    * them leaves the corpus ahead of the index, which a restart repairs
-    * by rebuilding the index from the corpus
-    * ([[shingleIndexFromCorpus]]) before resuming; the replayed batch
-    * then matches its own ingested copy and emits zero rows. The
-    * reverse order would be unrepairable: an index ahead of the corpus
-    * makes the replay emit zero rows for documents that were never
-    * persisted — silent data loss. So "replayed batch emits zero rows"
-    * holds for whole-batch replay after full success, and after
-    * crash-recovery once the index is rebuilt.
-    */
-  def nearDupForeachBatch(textCol: String, idCol: String,
-                          corpusDir: String, indexDir: String,
-                          n: Int = 3, threshold: Double = 0.2,
-                          sink: DataFrame => Unit = _ => ())
-      : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
-    val spark = batch.sparkSession
-    val index = readState(spark, indexDir).getOrElse( // first batch
-      graft.ops.Dedup.shingleIndex(batch.limit(0), textCol, idCol, n))
-    val kept = graft.ops.Dedup.nearDupIncrementalAgainstIndex(
-      batch, index, textCol, idCol, n, threshold).lineageCut()
-    kept.write.mode("append").parquet(corpusDir)
-    graft.ops.Dedup.shingleIndex(kept, textCol, idCol, n)
-      .write.mode("append").parquet(indexDir)
-    sink(kept)
-  }
-
   /** The SEMANTIC sibling of [[bloomDedupForeachBatch]] /
-    * [[nearDupForeachBatch]]: streaming benchmark decontamination as a
+    * [[nearDupForeachBatchBucketed]]: streaming benchmark decontamination as a
     * `foreachBatch` sink. State is the STATIC benchmark embedding set
     * (decontamination screens against a fixed eval suite, not against
     * ingested history — no cross-batch mutation at all), so unlike the
@@ -331,36 +287,33 @@ object TrackStream {
     sink(kept)
   }
 
-  /** Rebuild [[nearDupForeachBatch]]'s shingle index from the persisted
-    * corpus — the RESTART step after an unclean shutdown: overwrites
-    * `indexDir` with the index of exactly what `corpusDir` holds, so a
-    * corpus-ahead-of-index crash window is repaired before the query
-    * resumes. No-op (writes an empty index) if the corpus is absent.
-    */
-  def shingleIndexFromCorpus(spark: org.apache.spark.sql.SparkSession,
-                             corpusDir: String, indexDir: String,
-                             textCol: String, idCol: String,
-                             n: Int = 3): Unit = {
-    val corpus = readState(spark, corpusDir).getOrElse(return)
-    graft.ops.Dedup.shingleIndex(corpus, textCol, idCol, n)
-      .write.mode("overwrite").parquet(indexDir)
-  }
-
-  /** [[nearDupForeachBatch]] with the shingle index as a BUCKETED table
-    * — the round-15 closure of the remaining plain-parquet streaming
-    * screen (the minhash screen got this treatment in round 14): the
-    * plain sibling's per-batch probe join re-exchanges the history-side
-    * shingle index it reads — Θ(history shingle occurrences) of shuffle
-    * per batch — while a table bucketed on `shingle` (the probe join's
-    * one key) reaches the join with ZERO exchange and the per-batch
-    * shuffle mass stays batch-sized forever (TrackStreamSpec pins the
-    * executed plan). Same catalog/file-accumulation price and the same
-    * recovery contract as [[minhashNearDupForeachBatchBucketed]]:
-    * corpus append FIRST, then the index append — any crash window
-    * leaves index ⊆ corpus, repaired by
-    * [[shingleIndexFromCorpusBucketed]] (also the periodic compaction)
-    * before resume; a replayed batch emits zero rows. Size `buckets`
-    * to the probe's core budget (StageIO.saveBucketed's sizing rule).
+  /** [[bloomDedupForeachBatch]]'s NEAR-dup sibling: incremental n-gram
+    * Jaccard screening as a `foreachBatch` sink. Cross-batch state is
+    * the appended corpus (`corpusDir`, parquet) plus the
+    * [[graft.ops.Dedup.shingleIndex]] — one (id, n_shingles, 64-bit
+    * shingle hash) row per distinct shingle occurrence — held as a
+    * catalog table bucketed on `shingle`, the probe join's one key. Each
+    * micro-batch clusters against itself, probes the index bipartite
+    * (the history is never re-tokenized), appends its survivors' rows
+    * AND shingles, and hands survivors to `sink`. The bucketed index
+    * reaches the probe join with ZERO exchange, so the per-batch shuffle
+    * stays batch-sized however large the history grows (TrackStreamSpec
+    * pins the executed plan). A replayed batch emits zero rows — every
+    * doc jaccard-1.0-matches its own ingested copy — so at-least-once
+    * retries stay idempotent.
+    *
+    * RECOVERY CONTRACT: the corpus and index appends are two
+    * non-atomic writes, corpus DELIBERATELY first — a crash between
+    * them leaves index ⊆ corpus, which a restart repairs by rebuilding
+    * the index from the corpus ([[shingleIndexFromCorpusBucketed]], also
+    * the periodic compaction) before resuming; the replayed batch then
+    * matches its own ingested copy and emits zero rows. The reverse
+    * order would be unrepairable: an index ahead of the corpus makes the
+    * replay emit zero rows for documents that were never persisted —
+    * silent data loss. State is named by table, and each append adds one
+    * file per non-empty bucket, as for
+    * [[minhashNearDupForeachBatchBucketed]]; size `buckets` to the
+    * probe's core budget (StageIO.saveBucketed's sizing rule).
     */
   def nearDupForeachBatchBucketed(textCol: String, idCol: String,
                                   corpusDir: String, indexTable: String,
@@ -402,109 +355,35 @@ object TrackStream {
       indexTable, "shingle", buckets)
   }
 
-  /** [[nearDupForeachBatch]]'s MINHASH-BANDED sibling: the
+  /** The MINHASH-BANDED near-dup screen: the
     * [[graft.ops.Dedup.minhashIncrementalAgainstIndex]] screen as a
     * `foreachBatch` sink. Cross-batch state is the appended corpus plus
-    * TWO persisted tables — the band index (`bandDir`, bucket by
-    * (band, bucket) at ingestion scale) and the per-doc hashed shingle
-    * sets (`setsDir`, bucket by idCol) — each growing by appending the
-    * kept batch's own rows, so the history is never re-tokenized OR
-    * re-signed. When to prefer this over the n-gram sink is measured
-    * and documented on the batch operator (long-doc corpora + large
-    * history); the streaming contract is identical.
+    * TWO catalog tables — the band index bucketed on (band, bucket) and
+    * the per-doc hashed shingle sets bucketed on idCol — each growing by
+    * appending the kept batch's own rows, so the history is never
+    * re-tokenized OR re-signed. When to prefer this over the n-gram sink
+    * is measured and documented on the batch operator (long-doc corpora
+    * + large history). The buckets are the exact join keys, all of them,
+    * per the requireAllClusterKeysForCoPartition contract
+    * StageIO.saveBucketed documents, so the history scans arrive at
+    * their joins with ZERO exchange and the per-batch shuffle stays
+    * batch-sized however large the history grows (TrackStreamSpec pins
+    * the executed plan, mirroring IncrementalIndexSpec's batch-side
+    * assertion).
     *
-    * SCALE BOUNDARY (honest): these state tables are PLAIN PARQUET
-    * appends — simple, crash-rebuildable (below), but the per-batch
-    * probe join reshuffles the history-side index rows it reads
-    * (IncrementalIndexSpec's negative control measures exactly this
-    * shape). At a truly large history, run the ingestion as periodic
-    * BATCHES of `minhashIncrementalAgainstIndex` against BUCKETED
-    * stage tables (`StageIO.saveBucketed(idx, tbl, "band", n,
-    * "bucket")` — bucket-local, zero history reshuffle, the spec's
-    * positive case); the streaming sink's value is micro-batch
-    * latency, and its recovery contract relies on cheap
-    * whole-directory rebuilds that a metastore-backed bucketed table
-    * would complicate. Pick by history size.
+    * Bucket metadata is catalog state, so state is named by TABLE, not
+    * directory, and append-bucketed writes add one file per bucket per
+    * batch — compact periodically ([[graft.sources.StageIO.compact]]
+    * does not preserve bucketing; rebuild via
+    * [[minhashIndexFromCorpusBucketed]] instead).
     *
     * RECOVERY CONTRACT: three non-atomic appends, corpus DELIBERATELY
-    * first (same reasoning as [[nearDupForeachBatch]] — any
-    * index-behind-corpus window is repaired by rebuilding both index
-    * tables from the corpus via [[minhashIndexFromCorpus]] before the
-    * query resumes; an index AHEAD of the corpus would be silent data
-    * loss). A replayed batch after full success emits zero rows: every
+    * first (same reasoning as [[nearDupForeachBatchBucketed]]) — any
+    * crash window leaves index ⊆ corpus, repaired by rebuilding both
+    * tables from the corpus via [[minhashIndexFromCorpusBucketed]]
+    * before the query resumes. A replayed batch emits zero rows: every
     * doc collides with its own ingested copy in all bands and verifies
     * at jaccard 1.0.
-    */
-  def minhashNearDupForeachBatch(textCol: String, idCol: String,
-                                 corpusDir: String, bandDir: String,
-                                 setsDir: String,
-                                 n: Int = 3, bands: Int = 64,
-                                 rowsPerBand: Int = 2,
-                                 threshold: Double = 0.5,
-                                 sink: DataFrame => Unit = _ => ())
-      : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
-    val spark = batch.sparkSession
-    val bandIdx = readState(spark, bandDir).getOrElse( // first batch
-      graft.ops.Dedup.minhashBandIndex(batch.limit(0), textCol, idCol,
-        n, bands, rowsPerBand))
-    val hashSets = readState(spark, setsDir).getOrElse(
-      graft.ops.Dedup.shingleHashSets(batch.limit(0), textCol, idCol, n))
-    val kept = graft.ops.Dedup.minhashIncrementalAgainstIndex(
-      batch, bandIdx, hashSets, textCol, idCol, n, bands, rowsPerBand,
-      threshold).lineageCut()
-    kept.write.mode("append").parquet(corpusDir)
-    // one shingling pass feeds both index appends (the signature is the
-    // dominant batch-side cost — don't pay it per state table)
-    val keptShingled = graft.ops.Dedup.wordShingled(kept, textCol, idCol, n)
-      .lineageCut()
-    graft.ops.Dedup.shingleHashSetsFromShingled(keptShingled, idCol)
-      .write.mode("append").parquet(setsDir)
-    graft.ops.Dedup.minhashBandIndexFromShingled(keptShingled, idCol,
-      bands, rowsPerBand)
-      .write.mode("append").parquet(bandDir)
-    sink(kept)
-  }
-
-  /** Rebuild [[minhashNearDupForeachBatch]]'s BOTH state tables from the
-    * persisted corpus — the restart step after an unclean shutdown,
-    * mirroring [[shingleIndexFromCorpus]]. No-op if the corpus is
-    * absent.
-    */
-  def minhashIndexFromCorpus(spark: org.apache.spark.sql.SparkSession,
-                             corpusDir: String, bandDir: String,
-                             setsDir: String,
-                             textCol: String, idCol: String,
-                             n: Int = 3, bands: Int = 64,
-                             rowsPerBand: Int = 2): Unit = {
-    val corpus = readState(spark, corpusDir).getOrElse(return)
-    graft.ops.Dedup.minhashBandIndex(corpus, textCol, idCol, n, bands, rowsPerBand)
-      .write.mode("overwrite").parquet(bandDir)
-    graft.ops.Dedup.shingleHashSets(corpus, textCol, idCol, n)
-      .write.mode("overwrite").parquet(setsDir)
-  }
-
-  /** [[minhashNearDupForeachBatch]] with BUCKETED state tables — the
-    * round-14 closure of the scale boundary its sibling's scaladoc
-    * documents: plain-parquet state makes every batch's probe join
-    * reshuffle the history-side index rows it reads, so the per-batch
-    * cost grows with the HISTORY; with the band index bucketed on
-    * (band, bucket) and the hash sets bucketed on idCol — the exact
-    * join keys, all of them, per the requireAllClusterKeysForCoPartition
-    * contract StageIO.saveBucketed documents — the history scans arrive
-    * at their joins with ZERO exchange and the per-batch shuffle is
-    * batch-sized forever (TrackStreamSpec pins the executed plan,
-    * mirroring IncrementalIndexSpec's batch-side assertion).
-    *
-    * The price, and why the plain sibling still exists: bucketed tables
-    * live in the CATALOG (bucket metadata is metastore state), so state
-    * is named by TABLE, not directory, and append-bucketed writes add
-    * one file per bucket per batch — compact periodically
-    * ([[graft.sources.StageIO.compact]] does not preserve bucketing;
-    * rebuild via [[minhashIndexFromCorpusBucketed]] instead, which is
-    * also the crash-recovery step). Same recovery contract as the
-    * sibling: corpus append FIRST, then both index appends — any crash
-    * window leaves index ⊆ corpus, repaired by the rebuild before
-    * resume; a replayed batch emits zero rows.
     *
     * SIZING `buckets` (measured, SCALING.md §5b): a bucketed scan runs
     * one task per bucket, so the probe join's parallelism IS the bucket

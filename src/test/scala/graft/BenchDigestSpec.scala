@@ -317,10 +317,11 @@ class BenchDigestSpec extends AnyFunSuite {
         s"$label refs not in digest picks: ${refs.keySet -- picks}")
       refs.values.foreach(v => assert(v > 0))
     }
-    assert(!Bench.isDivergent(24.0, 22.9))       // within band
-    assert(Bench.isDivergent(77.4, 22.9))        // the r13 anomaly
-    assert(Bench.isDivergent(10.0, 22.9))        // suspiciously FAST counts too
-    assert(!Bench.isDivergent(0.0, 22.9))        // degenerate guard
+    def divergent(m: Double, r: Double) = Bench.divergenceClass(m, r, 1.0, 1.0)
+    assert(divergent(24.0, 22.9).isEmpty)                 // within band
+    assert(divergent(77.4, 22.9).contains("divergent"))   // the r13 anomaly
+    assert(divergent(10.0, 22.9).contains("divergent"))   // suspiciously FAST counts too
+    assert(divergent(0.0, 22.9).isEmpty)                  // degenerate guard
   }
 
   test("salvage line: appends salvage keys to the last digest; minimal fallback pre-emit") {

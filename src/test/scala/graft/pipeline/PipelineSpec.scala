@@ -244,6 +244,46 @@ class PipelineSpec extends SparkTestBase {
       s"fused=${joins(fusedPlan)} faithful=${joins(faithfulPlan)}")
   }
 
+  test("validate: validateCatch masks catch_kg at or above exp(b) with alert 4; 0/no_catch rows are never alerted") {
+    // reference get_catch_bounds/validate_catch (:183-233): LocScaleB on
+    // log1p(catch_kg) per (gear, catch_taxon, weight_type), upper bound
+    // back-transformed exp(b) with no -1
+    def upper(xs: Seq[Double]): Double = {
+      def median(v: Seq[Double]) = {
+        val s = v.sorted
+        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+      }
+      val t = xs.map(math.log1p)
+      val m = median(t)
+      math.exp(m + 2.5 * 1.4826 * median(t.map(x => math.abs(x - m))))
+    }
+    val bulk = (10 to 19).map(_.toDouble)
+    // two rows above the bulk cannot move its median or MAD, so the bound
+    // is known before they are planted: `below` sits in [exp(b)-1, exp(b))
+    val ub = upper(bulk ++ Seq(1e6, 1e6))
+    val (below, above) = (ub - 0.5, ub + 0.5)
+    assert(upper(bulk ++ Seq(below, above)) == ub)
+    val rows = bulk.indices.map(i => (s"b$i", "usipa", bulk(i))) ++
+      Seq(("below", "usipa", below), ("above", "usipa", above)) ++
+      (bulk :+ 1e6).indices.flatMap(i =>
+        Seq((s"z$i", "0", (bulk :+ 1e6)(i)), (s"n$i", "no_catch", (bulk :+ 1e6)(i))))
+    val data = rows.toDF("survey_id", "catch_taxon", "catch_kg")
+      .select(lit("f").as("form_name"), col("survey_id"), lit("gillnet").as("gear"),
+        col("catch_taxon"), lit("kg").as("weight_type"), col("catch_kg"))
+    val out = Validate.validateCatch(data, 2.5).collect()
+      .map(r => r.getAs[String]("survey_id") -> r).toMap
+    def alert(id: String) = Option(out(id).getAs[java.lang.Double]("alert_catch")).map(_.doubleValue)
+    def kg(id: String) = Option(out(id).getAs[java.lang.Double]("catch_kg")).map(_.doubleValue)
+    assert(out.size == rows.size) // every row is emitted, ineligible ones too
+    assert(alert("below").isEmpty && kg("below").contains(below))
+    assert(alert("above").contains(4.0) && kg("above").isEmpty)
+    assert(bulk.indices.forall(i => alert(s"b$i").isEmpty))
+    // excluded from the bounds: even 1e6 keeps its value and no alert
+    assert(rows.map(_._1).filter(id => id.startsWith("z") || id.startsWith("n"))
+      .forall(id => alert(id).isEmpty && kg(id).isDefined))
+    assert(kg(s"z${bulk.size}").contains(1e6) && kg(s"n${bulk.size}").contains(1e6))
+  }
+
   test("merge: only 1:1 (date, imei) pairs match; tz conversions applied") {
     val landings = Seq(
       ("s1", "2024-03-11T00:00:00Z", "111"),

@@ -149,93 +149,6 @@ class TrackStreamSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("foreachBatch near-dup screen: index-backed cross-batch state; replay emits zero") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val base = java.nio.file.Files.createTempDirectory("neardup").toString
-    val emitted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val filler = (1 to 30).map(i => s"word$i").mkString(" ")
-    val q = stream.toDF.toDF("doc_id", "text").writeStream
-      .foreachBatch(TrackStream.nearDupForeachBatch("text", "doc_id",
-        s"$base/corpus", s"$base/index", n = 3, threshold = 0.5,
-        sink = df => emitted.synchronized {
-          emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet
-        }))
-      .start()
-    try {
-      stream.addData(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here")))
-      q.processAllAvailable()
-      // doc 3 is a near-dup of ingested doc 1 (two words changed out of
-      // 32); doc 4 is novel
-      stream.addData(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely")))
-      q.processAllAvailable()
-      // exact replay of batch 0 (at-least-once retry)
-      stream.addData(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here")))
-      q.processAllAvailable()
-      assert(emitted.toSeq == Seq(Set(1L, 2L), Set(4L), Set.empty[Long]),
-        s"per-batch novel sets: $emitted")
-      val corpus = spark.read.parquet(s"$base/corpus").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      assert(corpus == Set(1L, 2L, 4L))
-      // the index holds exactly the survivors' shingles
-      val idxIds = spark.read.parquet(s"$base/index").select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet
-      assert(idxIds == Set(1L, 2L, 4L))
-    } finally q.stop()
-  }
-
-  test("foreachBatch minhash-banded screen: two-table cross-batch state; replay emits zero; crash recovery rebuilds both") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val base = java.nio.file.Files.createTempDirectory("mhneardup").toString
-    val emitted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val filler = (1 to 30).map(i => s"word$i").mkString(" ")
-    val q = stream.toDF.toDF("doc_id", "text").writeStream
-      .foreachBatch(TrackStream.minhashNearDupForeachBatch("text", "doc_id",
-        s"$base/corpus", s"$base/bands", s"$base/sets",
-        n = 3, bands = 64, rowsPerBand = 2, threshold = 0.5,
-        sink = df => emitted.synchronized {
-          emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet
-        }))
-      .start()
-    try {
-      stream.addData(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here")))
-      q.processAllAvailable()
-      // doc 3 is a near-dup of ingested doc 1; doc 4 is novel
-      stream.addData(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely")))
-      q.processAllAvailable()
-      // exact replay of batch 0 (at-least-once retry)
-      stream.addData(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here")))
-      q.processAllAvailable()
-      assert(emitted.toSeq == Seq(Set(1L, 2L), Set(4L), Set.empty[Long]),
-        s"per-batch novel sets: $emitted")
-      val corpus = spark.read.parquet(s"$base/corpus").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      assert(corpus == Set(1L, 2L, 4L))
-      // both state tables hold exactly the survivors
-      assert(spark.read.parquet(s"$base/bands").select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
-      assert(spark.read.parquet(s"$base/sets").select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
-    } finally q.stop()
-    // crash window: corpus append landed, neither index append did —
-    // the restart step rebuilds both tables and the replay is idempotent
-    val base2 = java.nio.file.Files.createTempDirectory("mhcrash").toString
-    val batch1 = Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-      .toDF("doc_id", "text")
-    batch1.write.mode("append").parquet(s"$base2/corpus")
-    TrackStream.minhashIndexFromCorpus(spark, s"$base2/corpus",
-      s"$base2/bands", s"$base2/sets", "text", "doc_id", 3, 64, 2)
-    val emitted2 = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    TrackStream.minhashNearDupForeachBatch("text", "doc_id",
-      s"$base2/corpus", s"$base2/bands", s"$base2/sets",
-      n = 3, bands = 64, rowsPerBand = 2, threshold = 0.5,
-      sink = df => emitted2 += df.select("doc_id").collect().map(_.getLong(0)).toSet)
-      .apply(batch1, 0L)
-    assert(emitted2.toSeq == Seq(Set.empty[Long]), s"post-recovery replay: $emitted2")
-    assert(spark.read.parquet(s"$base2/corpus").count() == 2)
-  }
-
   test("foreachBatch semantic screen: a paraphrased-contaminated batch emits zero rows; novel rows pass") {
     implicit val sqlCtx = spark.sqlContext
     def vec(seed: Int): Array[Double] = {
@@ -323,29 +236,6 @@ class TrackStreamSpec extends SparkTestBase {
     sinkFn2(batch1, 1L)
     assert(emitted2.toSeq == Seq(Set.empty[Long]), s"post-restart replay: $emitted2")
     assert(spark.read.parquet(dir).count() == 2) // nothing re-appended
-  }
-
-  test("near-dup sink recovery: rebuilding the index from the corpus makes a crashed batch's replay idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("neardupcrash").toString
-    val filler = (1 to 30).map(i => s"word$i").mkString(" ")
-    val batch1 = Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-      .toDF("doc_id", "text")
-    // CRASH WINDOW: corpus append landed, index append didn't (the
-    // documented repairable order). Simulate: write rows to the corpus
-    // with no index.
-    batch1.write.mode("append").parquet(s"$base/corpus")
-    // restart step: rebuild the index from what the corpus holds
-    TrackStream.shingleIndexFromCorpus(spark, s"$base/corpus", s"$base/index",
-      "text", "doc_id", n = 3)
-    val emitted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val sinkFn = TrackStream.nearDupForeachBatch("text", "doc_id",
-      s"$base/corpus", s"$base/index", n = 3, threshold = 0.5,
-      sink = df => emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet)
-    // replay of the crashed batch: every doc matches its own ingested
-    // copy via the rebuilt index → zero emitted, zero re-appended
-    sinkFn(batch1, 0L)
-    assert(emitted.toSeq == Seq(Set.empty[Long]), s"post-recovery replay: $emitted")
-    assert(spark.read.parquet(s"$base/corpus").count() == 2)
   }
 
   test("streaming ingest curation: dedup + quality filter + scrub compose in one query") {
@@ -595,27 +485,43 @@ class TrackStreamSpec extends SparkTestBase {
 
   test("bucketed minhash screen: same semantics as the plain sink, zero history-side shuffle in the probe plan") {
     import graft.PlanTestUtil.{historySideShuffleFree, scansOf}
+    implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("mhbucketed").toString
     val filler = (1 to 30).map(i => s"word$i").mkString(" ")
+    val batch0 = Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
     val emitted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val fn = TrackStream.minhashNearDupForeachBatchBucketed("text", "doc_id",
-      s"$base/corpus", "graft_stream_bands", "graft_stream_sets",
-      buckets = 4, n = 3, bands = 64, rowsPerBand = 2, threshold = 0.5,
-      sink = df => emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet)
+    def screen(corpus: String, bands: String, sets: String) =
+      TrackStream.minhashNearDupForeachBatchBucketed("text", "doc_id",
+        corpus, bands, sets,
+        buckets = 4, n = 3, bands = 64, rowsPerBand = 2, threshold = 0.5,
+        sink = df => emitted.synchronized {
+          emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet
+        })
+    val fn = screen(s"$base/corpus", "graft_stream_bands", "graft_stream_sets")
+    def ids(table: String) = spark.table(table).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSet
     try {
-      // batch 0 lands and seeds both bucketed state tables
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 0L)
-      // batch 1: doc 3 near-dups ingested doc 1; doc 4 is novel
-      fn(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely"))
-        .toDF("doc_id", "text"), 1L)
-      // batch-0 replay (at-least-once retry) emits zero
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 2L)
+      val stream = MemoryStream[(Long, String)]
+      val q = stream.toDF.toDF("doc_id", "text").writeStream
+        .foreachBatch(fn).start()
+      try {
+        // batch 0 lands and seeds both bucketed state tables
+        stream.addData(batch0)
+        q.processAllAvailable()
+        // batch 1: doc 3 near-dups ingested doc 1; doc 4 is novel
+        stream.addData(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely")))
+        q.processAllAvailable()
+        // batch-0 replay (at-least-once retry) emits zero
+        stream.addData(batch0)
+        q.processAllAvailable()
+      } finally q.stop()
       assert(emitted.toSeq == Seq(Set(1L, 2L), Set(4L), Set.empty[Long]),
         s"per-batch novel sets: $emitted")
       assert(spark.read.parquet(s"$base/corpus").select("doc_id").collect()
         .map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
+      // both state tables hold exactly the survivors
+      assert(ids("graft_stream_bands") == Set(1L, 2L, 4L))
+      assert(ids("graft_stream_sets") == Set(1L, 2L, 4L))
       // THE CONTRACT (round-14 verdict item 4, mirroring
       // IncrementalIndexSpec): the next batch's probe join receives BOTH
       // bucketed history scans with no shuffle exchange between scan and
@@ -641,42 +547,68 @@ class TrackStreamSpec extends SparkTestBase {
         "graft_stream_bands", "graft_stream_sets", "text", "doc_id",
         buckets = 4, n = 3, bands = 64, rowsPerBand = 2)
       emitted.clear()
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 3L)
+      fn(batch0.toDF("doc_id", "text"), 3L)
       assert(emitted.toSeq == Seq(Set.empty[Long]), s"post-rebuild replay: $emitted")
+      // crash window: the corpus append landed, neither index append did
+      // — rebuilding both tables from the corpus makes the replay emit
+      // and append nothing
+      val base2 = java.nio.file.Files.createTempDirectory("mhcrash").toString
+      batch0.toDF("doc_id", "text").write.parquet(s"$base2/corpus")
+      TrackStream.minhashIndexFromCorpusBucketed(spark, s"$base2/corpus",
+        "graft_stream_bands_crash", "graft_stream_sets_crash", "text", "doc_id",
+        buckets = 4, n = 3, bands = 64, rowsPerBand = 2)
+      emitted.clear()
+      screen(s"$base2/corpus", "graft_stream_bands_crash", "graft_stream_sets_crash")
+        .apply(batch0.toDF("doc_id", "text"), 0L)
+      assert(emitted.toSeq == Seq(Set.empty[Long]), s"post-recovery replay: $emitted")
+      assert(spark.read.parquet(s"$base2/corpus").count() == 2)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_stream_bands")
-      spark.sql("DROP TABLE IF EXISTS graft_stream_sets")
+      Seq("graft_stream_bands", "graft_stream_sets", "graft_stream_bands_crash",
+        "graft_stream_sets_crash").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
   test("bucketed n-gram screen: same semantics as the plain sink, zero history-side shuffle in the probe plan") {
     import graft.PlanTestUtil.{historySideShuffleFree, scansOf}
+    implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("ngbucketed").toString
     val filler = (1 to 30).map(i => s"word$i").mkString(" ")
+    val batch0 = Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
     val emitted = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val fn = TrackStream.nearDupForeachBatchBucketed("text", "doc_id",
-      s"$base/corpus", "graft_stream_shidx", buckets = 4, n = 3,
-      threshold = 0.5,
-      sink = df => emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet)
+    def screen(corpus: String, index: String) =
+      TrackStream.nearDupForeachBatchBucketed("text", "doc_id",
+        corpus, index, buckets = 4, n = 3, threshold = 0.5,
+        sink = df => emitted.synchronized {
+          emitted += df.select("doc_id").collect().map(_.getLong(0)).toSet
+        })
+    val fn = screen(s"$base/corpus", "graft_stream_shidx")
     try {
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 0L)
-      // doc 3 near-dups ingested doc 1; doc 4 is novel
-      fn(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely"))
-        .toDF("doc_id", "text"), 1L)
-      // batch-0 replay (at-least-once retry) emits zero
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 2L)
+      val stream = MemoryStream[(Long, String)]
+      val q = stream.toDF.toDF("doc_id", "text").writeStream
+        .foreachBatch(fn).start()
+      try {
+        stream.addData(batch0)
+        q.processAllAvailable()
+        // doc 3 near-dups ingested doc 1 (two words changed out of 32);
+        // doc 4 is novel
+        stream.addData(Seq((3L, s"$filler alpha gamma"), (4L, "another novel document entirely")))
+        q.processAllAvailable()
+        // batch-0 replay (at-least-once retry) emits zero
+        stream.addData(batch0)
+        q.processAllAvailable()
+      } finally q.stop()
       assert(emitted.toSeq == Seq(Set(1L, 2L), Set(4L), Set.empty[Long]),
         s"per-batch novel sets: $emitted")
       assert(spark.read.parquet(s"$base/corpus").select("doc_id").collect()
         .map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
+      // the index holds exactly the survivors' shingles
+      assert(spark.table("graft_stream_shidx").select("doc_id").distinct()
+        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
       // THE CONTRACT (round-15 verdict item 6, the n-gram sibling of the
       // round-14 minhash case above): the probe join receives the
       // bucketed shingle index with no shuffle exchange between scan and
-      // join — the plain sink reshuffles Θ(history shingle occurrences)
-      // per batch; this stays batch-sized however large the index grows
+      // join — per-batch shuffle stays batch-sized however large the
+      // index grows
       val probe = graft.ops.Dedup.nearDupIncrementalAgainstIndex(
         Seq((9L, s"$filler alpha delta"), (10L, "yet another novel text"))
           .toDF("doc_id", "text"),
@@ -692,10 +624,24 @@ class TrackStreamSpec extends SparkTestBase {
       TrackStream.shingleIndexFromCorpusBucketed(spark, s"$base/corpus",
         "graft_stream_shidx", "text", "doc_id", buckets = 4, n = 3)
       emitted.clear()
-      fn(Seq((1L, s"$filler alpha beta"), (2L, "tiny unrelated doc here"))
-        .toDF("doc_id", "text"), 3L)
+      fn(batch0.toDF("doc_id", "text"), 3L)
       assert(emitted.toSeq == Seq(Set.empty[Long]), s"post-rebuild replay: $emitted")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_stream_shidx")
+      // crash window: the corpus append landed, the index append did not
+      // — rebuilding the index from the corpus makes the replay emit and
+      // append nothing
+      val base2 = java.nio.file.Files.createTempDirectory("ngcrash").toString
+      batch0.toDF("doc_id", "text").write.parquet(s"$base2/corpus")
+      TrackStream.shingleIndexFromCorpusBucketed(spark, s"$base2/corpus",
+        "graft_stream_shidx_crash", "text", "doc_id", buckets = 4, n = 3)
+      emitted.clear()
+      screen(s"$base2/corpus", "graft_stream_shidx_crash")
+        .apply(batch0.toDF("doc_id", "text"), 0L)
+      assert(emitted.toSeq == Seq(Set.empty[Long]), s"post-recovery replay: $emitted")
+      assert(spark.read.parquet(s"$base2/corpus").count() == 2)
+    } finally {
+      Seq("graft_stream_shidx", "graft_stream_shidx_crash")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 
   test("bloom screen history contract: all-novel batches never scan history; the residue path scans it shuffle-free") {
