@@ -96,22 +96,17 @@ object ScaleGen {
     val spark = Session(confs = Seq("spark.sql.shuffle.partitions" -> "32"))
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
-    // Non-destructive write: materialize into a temp dir, verify it is
-    // readable and non-empty, and only then swap it into place. Round 4's
+    // Non-destructive write: the table publishes through StageIO.replace
+    // and is verified readable and non-empty before the swap. Round 4's
     // direct mode("overwrite") deleted the existing sf1 documents table
     // BEFORE the (failing) job ran, leaving an empty dir that poisoned the
     // three heaviest dedup bench queries with UNABLE_TO_INFER_SCHEMA.
-    def wr(df: DataFrame, t: String): Unit = {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(s"$out/.tmp-$t.parquet")
-      val dst = new Path(s"$out/$t.parquet")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      require(spark.read.parquet(tmp.toString).head(1).nonEmpty,
-        s"ScaleGen produced an empty $t table; refusing to replace $dst")
-      if (fs.exists(dst)) fs.delete(dst, true)
-      require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
-    }
+    def wr(df: DataFrame, t: String): Unit =
+      graft.sources.StageIO.replace(spark, s"$out/$t.parquet") { tmp =>
+        df.write.parquet(tmp)
+        require(spark.read.parquet(tmp).head(1).nonEmpty,
+          s"ScaleGen produced an empty $t table; refusing to replace $out/$t.parquet")
+      }
 
     // true dimensions: verbatim
     Seq("region", "nation").foreach(t => wr(rd(t), t))

@@ -23,6 +23,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {
+        // plain overwrite, not StageIO.replace: a failed gate must leave no stale output
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,6 +15,22 @@ import graft.ops.Restructure
   * applied on load (parquet preserves order natively; padding keeps the
   * union-of-forms tolerance).
   *
+  * Every table overwrite publishes through [[replace]]: the new table is
+  * written into the sibling `<dir>.tmp` and only then swapped in by two
+  * renames (live → `.old`, `.tmp` → live, drop `.old`). The reference
+  * computes each frame before it pushes, so a failed R stage leaves its
+  * collection alone; here the transform is lazy and runs inside the
+  * write, and a plain `mode("overwrite")` deletes the target before the
+  * job starts — a stage that died mid-write left an empty directory
+  * that the next read failed on (UNABLE_TO_INFER_SCHEMA). Renames are
+  * atomic per HDFS/posix semantics, so every crash window leaves a
+  * recoverable table: before the first rename the live table is
+  * untouched; between the renames `.old` holds it and [[recover]] (run
+  * by [[replace]], [[load]] and the streaming state readers) rolls it
+  * back; after the second the new table is live and a leftover `.old`
+  * is swept. The one limit: the swap is NOT atomic for a concurrent
+  * reader — between the two renames the path is briefly absent.
+  *
   * 100 TB notes: [[saveByMonth]] partitions by landing month so downstream
   * date filters prune partitions (the reference re-reads full history every
   * run — partition pruning makes incremental reruns touch only changed
@@ -22,9 +39,52 @@ import graft.ops.Restructure
   */
 object StageIO {
 
+  /** Publish a table at `dir` through the write-aside-and-swap protocol
+    * above: `write` receives the staging path `<dir>.tmp` (cleared of
+    * any earlier attempt's leftovers) and must leave a complete table
+    * there; a `write` that throws leaves the live table untouched.
+    */
+  def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val fs = fileSystem(spark, dir)
+    recover(fs, dir)
+    val live = new Path(dir)
+    val tmp = live.suffix(".tmp")
+    val old = live.suffix(".old")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    if (fs.exists(live) && !fs.rename(live, old))
+      throw new java.io.IOException(s"replace: rename $live -> $old failed")
+    if (!fs.rename(tmp, live))
+      throw new java.io.IOException(s"replace: rename $tmp -> $live failed")
+    fs.delete(old, true)
+  }
+
+  /** Repair whichever single rename a crashed [[replace]] left
+    * unfinished: live dir present → drop any leftover `.old` (the swap
+    * published, cleanup didn't run); live dir absent but `.old` present
+    * → roll the previous table back into place. Returns whether a table
+    * exists at `dir` afterwards. A stale `.tmp` is cleared by the next
+    * [[replace]].
+    */
+  def recover(fs: FileSystem, dir: String): Boolean = {
+    val live = new Path(dir)
+    val old = live.suffix(".old")
+    if (fs.exists(live)) {
+      fs.delete(old, true)
+      true
+    } else if (fs.exists(old)) {
+      if (!fs.rename(old, live))
+        throw new java.io.IOException(s"recover: rename $old -> $live failed")
+      true
+    } else false
+  }
+
+  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
   /** S5: truncate-and-load a stage table. */
   def save(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").parquet(dir)
+    replace(df.sparkSession, dir)(df.write.parquet(_))
 
   /** S5 at scale: overwrite partitioned by month of `dateCol`. Rows are
     * AQE-rebalanced by month first — see [[appendDedup]]'s note: without
@@ -33,9 +93,10 @@ object StageIO {
     * skewed months split by AQE.
     */
   def saveByMonth(df: DataFrame, dir: String, dateCol: String): Unit =
-    df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
-      .hint("rebalance", col("__month"))
-      .write.mode("overwrite").partitionBy("__month").parquet(dir)
+    replace(df.sparkSession, dir)(
+      df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
+        .hint("rebalance", col("__month"))
+        .write.partitionBy("__month").parquet(_))
 
   /** S5 at scale, join-heavy shape: bucketed+sorted stage table. Two
     * tables bucketed the same way on the join key sort-merge-join with NO
@@ -113,23 +174,9 @@ object StageIO {
   def appendDedup(spark: SparkSession, df: DataFrame, dir: String,
                   dateCol: String, keyCols: Seq[String],
                   monthScopedKeys: Boolean = true): Unit = {
-    val withMonth = df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
-    // REBALANCE by the partition column before every partitioned write
-    // (round 18, guide §6): an unclustered writer emits one file per
-    // (task × month it holds) — at scale that is the many-small-files
-    // problem, and at gate scale the opposite degenerate case showed up
-    // (ONE input task serially writing every month's file: the two
-    // ~1.4 s single-task write jobs in q_s5_append_dedup's job
-    // profile). The AQE rebalance clusters rows by month AND splits
-    // skewed months into multiple writers, so file count ≈ months (+
-    // splits) and the write parallelizes. Content is identical; no
-    // gate pins append-file layout.
-    def clustered(d: DataFrame): DataFrame = d.hint("rebalance", col("__month"))
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      clustered(withMonth).write.mode("overwrite").partitionBy("__month").parquet(dir)
-    } else {
+    if (!recover(fileSystem(spark, dir), dir)) saveByMonth(df, dir, dateCol)
+    else {
+      val withMonth = df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
       val existing = spark.read.parquet(dir)
       val scoped =
         if (monthScopedKeys) {
@@ -138,8 +185,19 @@ object StageIO {
           existing.filter(col("__month").isin(months: _*))
         } else existing
       val existingKeys = scoped.select(keyCols.map(col): _*)
-      val fresh = withMonth.join(existingKeys, keyCols, "left_anti")
-      clustered(fresh).write.mode("append").partitionBy("__month").parquet(dir)
+      // REBALANCE by the partition column before every partitioned
+      // write (round 18, guide §6): an unclustered writer emits one
+      // file per (task × month it holds) — at scale that is the
+      // many-small-files problem, and at gate scale the opposite
+      // degenerate case showed up (ONE input task serially writing
+      // every month's file: the two ~1.4 s single-task write jobs in
+      // q_s5_append_dedup's job profile). The AQE rebalance clusters
+      // rows by month AND splits skewed months into multiple writers,
+      // so file count ≈ months (+ splits) and the write parallelizes.
+      // Content is identical; no gate pins append-file layout.
+      withMonth.join(existingKeys, keyCols, "left_anti")
+        .hint("rebalance", col("__month"))
+        .write.mode("append").partitionBy("__month").parquet(dir)
     }
   }
 
@@ -152,19 +210,10 @@ object StageIO {
     * lengths), not Catalyst's row estimate — compressed bytes are what
     * file-count targeting is about.
     *
-    * Write-ahead discipline: the compacted copy lands in a `.compact`
-    * sibling first and only then swaps into place via the rename-aside
-    * protocol the streaming sketch sinks use (live → `.old`, `.compact`
-    * → live, drop `.old`) — renames are atomic per HDFS/posix semantics,
-    * so EVERY crash window leaves a recoverable table: before the first
-    * rename the live table is untouched; between the renames `.old`
-    * holds it (and [[recoverCompact]] — run automatically at the start
-    * of the next compact — rolls it back); after the second the new
-    * table is live. The naive delete-then-rename this replaces had a
-    * window (after the delete, before the rename) with NO live table at
-    * the path and no recovery route. NOT atomic for concurrent READERS
-    * during the swap window — run it when the table is quiet, like any
-    * compaction.
+    * The compacted copy publishes through [[replace]], so a compaction
+    * that dies leaves the table as it was. Like any compaction, run it
+    * when the table is quiet (the swap is not atomic for concurrent
+    * readers).
     *
     * `repartition(n)` (round-robin), not `coalesce(n)`: coalesce chains
     * input files onto ≤ n tasks WITHOUT a shuffle, so one task can
@@ -174,49 +223,23 @@ object StageIO {
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0, s"targetFileBytes=$targetFileBytes")
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompact(fs, dir)
-    val bytes = fs.getContentSummary(path).getLength
+    val table = load(spark, dir)
+    val bytes = fileSystem(spark, dir).getContentSummary(new Path(dir)).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact")
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    spark.read.parquet(dir).repartition(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compact: rename $path -> $old failed")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed")
-    fs.delete(old, true)
+    replace(spark, dir)(table.repartition(n).write.parquet(_))
   }
 
-  /** Repair whichever single rename a crashed [[compact]] left
-    * unfinished (read-side half of the rename-aside protocol, same
-    * contract as the streaming sinks' recoverState): live dir present →
-    * drop any leftover `.old` (the swap published, cleanup didn't run);
-    * live dir absent but `.old` present → roll the original table back
-    * into place (a stale `.compact` is simply overwritten by the next
-    * attempt). Runs automatically at the start of every [[compact]];
-    * callers reading a possibly-crashed table can invoke it directly.
+  /** S4: scan a stage table, first repairing a swap that a crashed
+    * [[replace]] left half done.
     */
-  def recoverCompact(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    if (fs.exists(path)) {
-      if (fs.exists(old)) fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      if (!fs.rename(old, path))
-        throw new java.io.IOException(s"compact recovery: rename $old -> $path failed")
-    }
-  }
-
-  /** S4: scan a stage table. */
-  def load(spark: SparkSession, dir: String): DataFrame =
+  def load(spark: SparkSession, dir: String): DataFrame = {
+    recover(fileSystem(spark, dir), dir)
     spark.read.parquet(dir)
+  }
 
   /** S4 with contract: pad columns missing on disk with typed nulls and
     * apply the contract's column order (reference R/storage.R:36-48).
     */
   def loadConformed(spark: SparkSession, dir: String, contract: StructType): DataFrame =
-    Restructure.conformTo(spark.read.parquet(dir), contract)
+    Restructure.conformTo(load(spark, dir), contract)
 }

@@ -138,6 +138,24 @@ object TrackStream {
     }
   }
 
+  /** Read a parquet state table, distinguishing ABSENT (first batch /
+    * pre-bootstrap — `None`) from FAILED (transient FS error, corrupt
+    * footer — the read exception PROPAGATES, failing the micro-batch so
+    * the source retries it). A broad catch here would silently
+    * substitute an EMPTY history for a read failure, let every
+    * historical duplicate in the batch pass as novel, and append the
+    * divergence permanently — unrepairable and undetectable. A swap
+    * that a crashed [[graft.sources.StageIO.replace]] left half done is
+    * repaired first, so that window reads as the previous state, not as
+    * ABSENT (which would restart a sketch from empty).
+    */
+  private def readState(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): Option[DataFrame] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (graft.sources.StageIO.recover(fs, dir)) Some(spark.read.parquet(dir)) else None
+  }
+
   /** History-scale incremental dedup as a `foreachBatch` sink — the
     * complement of [[dedupStream]]'s watermark-bounded screen: state is
     * UNBOUNDED history, held as the natural pair a production ingester
@@ -174,21 +192,6 @@ object TrackStream {
     * exactly this. Resuming with a fresh empty filter silently breaks
     * the same no-false-negative invariant as the ordering above.
     */
-  /** Read a parquet state table, distinguishing ABSENT (first batch /
-    * pre-bootstrap — `None`) from FAILED (transient FS error, corrupt
-    * footer — the read exception PROPAGATES, failing the micro-batch so
-    * the source retries it). A broad catch here would silently
-    * substitute an EMPTY history for a read failure, let every
-    * historical duplicate in the batch pass as novel, and append the
-    * divergence permanently — unrepairable and undetectable.
-    */
-  private def readState(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
-  }
-
   def bloomDedupForeachBatch(textCol: String, idCol: String,
                              historyDir: String,
                              state: org.apache.spark.util.sketch.BloomFilter,
@@ -543,7 +546,7 @@ object TrackStream {
         // be orphaned state
         val fit = graft.ops.Similarity.ivfCentroids(
           batch, idCol, vecCol, nCells, iters)
-        fit.write.mode("overwrite").parquet(centroidsDir)
+        graft.sources.StageIO.save(fit, centroidsDir)
         spark.read.parquet(centroidsDir)
       }
       val cellIdx =
@@ -592,7 +595,7 @@ object TrackStream {
       .getOrElse {
         val fit = graft.ops.Similarity.ivfCentroids(
           corpus, idCol, vecCol, nCells, iters)
-        fit.write.mode("overwrite").parquet(centroidsDir)
+        graft.sources.StageIO.save(fit, centroidsDir)
         spark.read.parquet(centroidsDir)
       }
     graft.sources.StageIO.saveBucketed(
@@ -761,54 +764,35 @@ object TrackStream {
                            fitN: Long): Unit = {
     import spark.implicits._
     val names = "_intercept" +: lrFeatureCols
-    weights.zipWithIndex.map { case (wj, i) => (i, names(i), wj, fitN) }
-      .toDF("idx", "feature", "weight", "fit_n")
-      .coalesce(1).write.mode("overwrite").parquet(weightsDir)
+    graft.sources.StageIO.save(
+      weights.zipWithIndex.map { case (wj, i) => (i, names(i), wj, fitN) }
+        .toDF("idx", "feature", "weight", "fit_n").coalesce(1),
+      weightsDir)
   }
 
-  /** Read-side half of the crash-safe state-dir protocol shared by the
-    * sketch sinks: repair whichever single rename a crashed
-    * [[commitState]] left unfinished — live dir present → drop any
-    * leftover `.old` (the commit published, cleanup didn't run); live
-    * dir absent but `.old` present → roll the previous state back into
-    * place (the commit renamed the live dir aside and died before
-    * publishing; the half-written `.tmp` is overwritten by the next
-    * commit). Returns whether a committed state exists. Read failures on
-    * an EXISTING dir are NOT swallowed: a corrupt or unreachable state
-    * must surface, not silently restart the sketch from zero.
+  /** The `_batchid` watermark the sum-merged sketch sinks keep inside
+    * their state dir (underscore-prefixed, so parquet readers skip it):
+    * the last applied batch id, or -1 when there is none.
     */
-  private def recoverState(fs: org.apache.hadoop.fs.FileSystem,
-                           stateDir: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val old = new org.apache.hadoop.fs.Path(stateDir + ".old")
-    if (fs.exists(dst)) {
-      if (fs.exists(old)) fs.delete(old, true)
-      true
-    } else if (fs.exists(old)) {
-      require(fs.rename(old, dst), s"state rollback $old -> $dst failed")
-      true
-    } else false
+  private def readBatchId(spark: org.apache.spark.sql.SparkSession,
+                          stateDir: String): Long = {
+    val marker = new org.apache.hadoop.fs.Path(stateDir, "_batchid")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) -1L
+    else {
+      val in = fs.open(marker)
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+      finally in.close()
+    }
   }
 
-  /** Write-side half: publish `stateDir + ".tmp"` (already fully
-    * written) as the live state via two renames — live → `.old`,
-    * `.tmp` → live — then drop `.old`. Renames are atomic per HDFS/posix
-    * semantics, so EVERY crash window leaves a state [[recoverState]]
-    * restores: before the first rename the live dir is untouched;
-    * between them `.old` holds the previous state; after the second the
-    * new state is live (a stale `.old` is swept on the next recover).
-    * The naive delete-then-rename this replaces had a window that
-    * destroyed BOTH copies.
-    */
-  private def commitState(fs: org.apache.hadoop.fs.FileSystem,
-                          stateDir: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(stateDir + ".old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) require(fs.rename(dst, old), s"state swap $dst -> $old failed")
-    require(fs.rename(tmp, dst), s"state swap $tmp -> $dst failed")
-    if (fs.exists(old)) fs.delete(old, true)
+  private def writeBatchId(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, batchId: Long): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(dir, "_batchid")
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(marker, true)
+    try out.write(s"$batchId\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Streaming heavy-hitter counting: the count-min counter frame
@@ -816,54 +800,36 @@ object TrackStream {
     * the HLL sink, counter SUM-merge is NOT idempotent — a replayed
     * batch would double-count — so this sink demonstrates the OTHER
     * streaming consistency pattern: a transactional batch-id watermark.
-    * The applied batch id is committed ATOMICALLY with the state (an
-    * underscore-prefixed `_batchid` marker written inside the tmp dir
-    * BEFORE the publish — parquet readers ignore `_`-files, so marker
-    * and counters always travel together), and the publish itself is
-    * the rename-aside protocol of [[commitState]]/[[recoverState]], so
-    * every crash window leaves either the old state+old marker or the
-    * new state+new marker — never a torn pair, never zero copies. A
-    * replayed batch id ≤ the marker is skipped (its counts are already
-    * in the state) and the sink just re-emits the current counters.
+    * The applied batch id is committed ATOMICALLY with the state (the
+    * `_batchid` marker is written inside the staging dir BEFORE the
+    * publish, so marker and counters always travel together), and the
+    * publish itself is [[graft.sources.StageIO.replace]]'s rename-aside
+    * swap, so every crash window leaves either the old state+old marker
+    * or the new state+new marker — never a torn pair, never zero
+    * copies. A replayed batch id ≤ the marker is skipped (its counts are
+    * already in the state) and the sink just re-emits the current
+    * counters.
     */
   def cmsCountersForeachBatch(keyCol: String, stateDir: String,
                               sink: DataFrame => Unit = _ => ())
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.sum
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState = recoverState(fs, stateDir)
-    val marker = new org.apache.hadoop.fs.Path(stateDir + "/_batchid")
-    val applied: Long =
-      if (!hasState || !fs.exists(marker)) -1L
-      else {
-        val in = fs.open(marker)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](64)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        } finally in.close()
-      }
-    if (batchId <= applied) {
-      sink(spark.read.parquet(stateDir)) // replay: already applied
+    // no catch: a state that exists but cannot be read is corruption or
+    // an FS outage — advancing the watermark past silently-dropped
+    // history would make the loss permanent and undetectable
+    val prev = readState(spark, stateDir)
+    if (batchId <= readBatchId(spark, stateDir)) {
+      sink(prev.get) // replay: already applied
     } else {
       val batchCounters = graft.ops.Corpus.cmsCounters(batch, keyCol)
-      // no catch: state exists, so a read failure is corruption or an FS
-      // outage — advancing the watermark past silently-dropped history
-      // would make the loss permanent and undetectable
-      val prev = if (hasState) Some(spark.read.parquet(stateDir)) else None
       val merged = prev.fold(batchCounters)(p =>
         p.union(batchCounters).groupBy("__j", "__b").agg(sum("c").as("c")))
         .lineageCut()
-      val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_batchid"), true)
-      try out.write(s"$batchId\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      commitState(fs, stateDir)
+      graft.sources.StageIO.replace(spark, stateDir) { tmp =>
+        merged.write.parquet(tmp)
+        writeBatchId(spark, tmp, batchId)
+      }
       sink(spark.read.parquet(stateDir))
     }
   }
@@ -880,10 +846,9 @@ object TrackStream {
     * source, crash retry) merges to exactly the same frame and the
     * estimates never double-count — the replay-safety the count-style
     * alternative (`sum` state) structurally cannot have. The state
-    * publish is the rename-aside protocol of [[commitState]]/
-    * [[recoverState]], so every crash window leaves a readable frame;
-    * on restart the state on disk IS the sketch (no rebuild step
-    * needed — contrast [[bloomFromHistory]]).
+    * publishes through [[graft.sources.StageIO.replace]], so every crash
+    * window leaves a readable frame; on restart the state on disk IS
+    * the sketch (no rebuild step needed — contrast [[bloomFromHistory]]).
     */
   def hllDistinctForeachBatch(groupCol: String, keyCol: String,
                               stateDir: String,
@@ -891,19 +856,13 @@ object TrackStream {
       : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.max
-    val hadoop = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchRegs = graft.ops.Corpus.hllRegisters(batch, groupCol, keyCol)
-    // no catch: recoverState distinguishes "first batch" from "state
+    // no catch: readState distinguishes "first batch" from "state
     // unreadable" — the latter must surface, not restart the sketch
-    val prev =
-      if (recoverState(hadoop, stateDir)) Some(spark.read.parquet(stateDir)) else None
-    val merged = prev.fold(batchRegs)(_.union(batchRegs))
+    val merged = readState(spark, stateDir).fold(batchRegs)(_.union(batchRegs))
       .groupBy("__g", "__reg").agg(max("__mr").as("__mr"))
-      .lineageCut() // materialize BEFORE overwriting what it read
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    commitState(hadoop, stateDir)
+      .lineageCut() // materialize BEFORE the swap drops what it read
+    graft.sources.StageIO.replace(spark, stateDir)(merged.write.parquet(_))
     sink(graft.ops.Corpus.hllEstimate(merged, groupCol))
   }
 
@@ -917,7 +876,7 @@ object TrackStream {
     * the sketch already holds and nothing moves, so no batch-id
     * watermark is needed (contrast [[cmsCountersForeachBatch]], whose
     * sum-merge is not idempotent and carries one). Same
-    * write-tmp-then-swap state discipline.
+    * [[graft.sources.StageIO.replace]] state publish.
     */
   def kmvSketchForeachBatch(groupCol: String, keyCol: String, k: Int,
                             stateDir: String,
@@ -925,24 +884,18 @@ object TrackStream {
       : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.{col, explode, row_number}
-    val hadoop = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // (group, hash) rows: batch sketch exploded so it unions with state
     val batchHashes = graft.ops.Corpus.kmvSketch(batch, groupCol, keyCol, k)
       .select(col(groupCol), explode(col("kmv")).as("__kh"))
-    val prev =
-      if (recoverState(hadoop, stateDir)) Some(spark.read.parquet(stateDir)) else None
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(col("__kh"))
-    val merged = prev.fold(batchHashes)(_.union(batchHashes))
+    val merged = readState(spark, stateDir).fold(batchHashes)(_.union(batchHashes))
       .distinct()
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .select(col(groupCol), col("__kh"))
-      .lineageCut() // materialize BEFORE overwriting what it read
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    commitState(hadoop, stateDir)
+      .lineageCut() // materialize BEFORE the swap drops what it read
+    graft.sources.StageIO.replace(spark, stateDir)(merged.write.parquet(_))
     sink(merged)
   }
 
@@ -955,8 +908,8 @@ object TrackStream {
     * (group, bucket), which — like the CMS sink and unlike the
     * idempotent HLL max / KMV union — would double-count a replayed
     * batch, so it carries the same `_batchid` watermark inside the
-    * state dir: marker and counters commit atomically via the
-    * tmp-write + rename-aside swap, and a batch id ≤ the marker just
+    * state dir: marker and counters swap in together through
+    * [[graft.sources.StageIO.replace]], and a batch id ≤ the marker just
     * re-emits current state. Estimates come straight off the state
     * table via [[graft.ops.Corpus.quantileSketchEstimate]].
     */
@@ -966,40 +919,20 @@ object TrackStream {
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.sum
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState = recoverState(fs, stateDir)
-    val marker = new org.apache.hadoop.fs.Path(stateDir + "/_batchid")
-    val applied: Long =
-      if (!hasState || !fs.exists(marker)) -1L
-      else {
-        val in = fs.open(marker)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](64)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        } finally in.close()
-      }
-    if (batchId <= applied) {
-      sink(spark.read.parquet(stateDir)) // replay: already applied
+    // no catch: as in the CMS sink, an unreadable state must surface
+    val prev = readState(spark, stateDir)
+    if (batchId <= readBatchId(spark, stateDir)) {
+      sink(prev.get) // replay: already applied
     } else {
       val batchCounters =
         graft.ops.Corpus.quantileSketch(batch, groupCol, valueCol, subBits)
-      // no catch: state exists, so a read failure is corruption or an FS
-      // outage — advancing the watermark past silently-dropped history
-      // would make the loss permanent and undetectable
-      val prev = if (hasState) Some(spark.read.parquet(stateDir)) else None
       val merged = prev.fold(batchCounters)(p =>
         p.union(batchCounters).groupBy(groupCol, "bucket").agg(sum("c").as("c")))
         .lineageCut()
-      val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_batchid"), true)
-      try out.write(s"$batchId\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      commitState(fs, stateDir)
+      graft.sources.StageIO.replace(spark, stateDir) { tmp =>
+        merged.write.parquet(tmp)
+        writeBatchId(spark, tmp, batchId)
+      }
       sink(spark.read.parquet(stateDir))
     }
   }

@@ -296,7 +296,7 @@ class SourcesSpec extends SparkTestBase {
     val after = files()
     assert(after < before, s"compacted $before -> $after files")
     assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == beforeRows)
-    assert(!new java.io.File(dir + ".compact").exists(), "tmp dir must be swapped away")
+    assert(!new java.io.File(dir + ".tmp").exists(), "tmp dir must be swapped away")
     // idempotent on an already-compact table (big target -> 1 file)
     StageIO.compact(spark, dir, targetFileBytes = 1L << 30)
     assert(files() == 1)
@@ -309,7 +309,7 @@ class SourcesSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + ".old")))
-    StageIO.recoverCompact(fs, dir)
+    StageIO.recover(fs, dir)
     assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == beforeRows)
     assert(!new java.io.File(dir + ".old").exists(), "rollback must consume .old")
     // crash after publish, before cleanup: live present + stale `.old` —
@@ -318,6 +318,45 @@ class SourcesSpec extends SparkTestBase {
     StageIO.compact(spark, dir, targetFileBytes = 1L << 30)
     assert(!new java.io.File(dir + ".old").exists())
     assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == beforeRows)
+  }
+
+  test("S5: a stage whose write fails keeps its previous table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-failwrite").toString + "/t"
+    val first = Seq((1L, "a"), (2L, "b")).toDF("id", "x")
+    StageIO.save(first, dir)
+    def rows() = StageIO.load(spark, dir).collect().map(_.toSeq).toSet
+    val before = rows()
+    assert(before == Set(Seq(1L, "a"), Seq(2L, "b")))
+    // the transform is lazy and runs inside the write: this frame's tasks
+    // throw after the overwrite has started (a range, not a local frame,
+    // so the optimizer cannot fold the error into planning)
+    val dying = spark.range(1, 4).select(col("id"),
+      raise_error(lit("stage died mid-write")).cast("string").as("x"))
+    intercept[Exception](StageIO.save(dying, dir))
+    assert(rows() == before)
+    // a crash between the swap's two renames leaves the live table at
+    // `.old`: load rolls it back instead of reading "no table"
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
+      new org.apache.hadoop.fs.Path(dir + ".old")))
+    assert(rows() == before)
+    assert(!new java.io.File(dir + ".old").exists())
+  }
+
+  test("src/main renames table directories only in sources/StageIO.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val renames = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .filter(_._1.contains(".rename("))
+          .map { case (_, i) => s"${root.relativize(p)}:${i + 1}" }
+      }
+    assert(renames.nonEmpty && renames.forall(_.startsWith("graft/sources/StageIO.scala:")),
+      renames.mkString(", "))
   }
 
   test("S8: add_version stamps timestamp + short sha") {
