@@ -41,15 +41,12 @@ object Preprocess {
     }.toSeq: _*)
   }
 
-  /** P7 + R5 + P2: survey key, prefix strip, drop `_*` scratch columns
-    * (reference R/preprocessing.R:47-54).
+  /** P7: the survey key (reference R/preprocessing.R:47-49) over raw
+    * landings conformed to [[Schemas.rawLandings]].
     */
-  def coreData(raw: DataFrame): DataFrame = {
-    val keyed = raw.withColumn("survey_id",
+  def coreData(raw: DataFrame): DataFrame =
+    raw.withColumn("survey_id",
       Cleanse.pasteNA("-", col("submission_id"), col("vessel_number"), col("catch_number")))
-    val stripped = stripPrefixes(keyed)
-    stripped.drop(stripped.columns.filter(_.startsWith("_")).toIndexedSeq: _*)
-  }
 
   /** P1: the 30-column transmute merging five form vocabularies via
     * coalesce (reference R/preprocessing.R:56-92).
@@ -203,18 +200,26 @@ object Preprocess {
   private def rDivide(x: Column, y: Column): Column =
     when(y === 0, when(x =!= 0, x * Double.PositiveInfinity)).otherwise(x / y)
 
+  /** P6 (reference R/preprocessing.R:308): a "total" price is divided by
+    * the catch weight ([[rDivide]]), any other price is already per kg.
+    */
+  def priceKg(price: Column, kg: Column, priceType: Column): Column =
+    when(priceType === "total", rDivide(price, kg)).otherwise(price)
+
   private val numericCols = Seq(
     "n_boats", "n_fishers", "n_women", "trip_length", "mesh_size_mm",
     "catch_price", "catch_kg", "lat", "lon", "gear_depth",
     "gear_hrs", "gear_n_hooks", "gear_n_sets", "gear_length", "gear_n_hauls")
 
-  /** Full stage: harmonize → gear efforts (fused) → J2 assembly → R4 GPS
-    * split → P5 casts → P6 price_kg → distinct → R6 column order →
-    * gillnets HOF fix-up → P4 recodes
-    * (reference R/preprocessing.R:274-398).
+  /** Full stage over the ingested landings: R5 prefix strip → S4 conform
+    * to [[Schemas.rawLandings]] (which also drops the `_*` scratch
+    * columns, reference R/preprocessing.R:47-54) → harmonize → gear
+    * efforts (fused) → J2 assembly → R4 GPS split → P5 casts → P6
+    * price_kg → distinct → R6 column order → gillnets HOF fix-up → P4
+    * recodes (reference R/preprocessing.R:274-398).
     */
   def apply(raw: DataFrame): DataFrame = {
-    val core = coreData(raw)
+    val core = coreData(Restructure.conformTo(stripPrefixes(raw), Schemas.rawLandings))
     val merged = harmonized(core)
     val gears = gearEffortFused(core)
 
@@ -239,8 +244,7 @@ object Preprocess {
       .withColumn("submission_id", col("submission_id").cast(StringType))
       .withColumn("survey_id", col("survey_id").cast(StringType))
       .withColumn("price_kg",
-        when(col("catch_price_type") === "total", rDivide(col("catch_price"), col("catch_kg")))
-          .otherwise(col("catch_price")))
+        priceKg(col("catch_price"), col("catch_kg"), col("catch_price_type")))
       .distinct()
 
     // R6 column order (R/preprocessing.R:311-319)

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.Restructure
 import graft.sources.{PipelineConfig, StageIO}
 
 /** The six-stage DAG (reference .github/workflows/data-pipeline.yaml:
@@ -35,11 +34,8 @@ object Runner {
     StageIO.save(Ingest(forms), tables.raw)
 
   /** Stage 2 — preprocess_landings. */
-  def preprocess(spark: SparkSession, tables: StageTables): Unit = {
-    val raw = Restructure.conformTo(
-      Preprocess.stripPrefixes(StageIO.load(spark, tables.raw)), Schemas.rawLandings)
-    StageIO.save(Preprocess(raw), tables.preprocessed)
-  }
+  def preprocess(spark: SparkSession, tables: StageTables): Unit =
+    StageIO.save(Preprocess(StageIO.load(spark, tables.raw)), tables.preprocessed)
 
   /** Stage 3 — validate_landings (+ the alert-flags output the reference
     * computes but never persists — kept first-class, SURVEY.md V7).
@@ -51,10 +47,8 @@ object Runner {
     * guarantees for this stage's input.
     */
   def validate(spark: SparkSession, tables: StageTables,
-               kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-               kPriceKg: Double = 3.0): Unit = {
-    val res = Validate.fused(StageIO.load(spark, tables.preprocessed),
-      kNFishers, kNBoats, kPriceKg)
+               ks: Validate.Ks = Validate.Ks()): Unit = {
+    val res = Validate.fused(StageIO.load(spark, tables.preprocessed), ks)
     StageIO.save(res.validated, tables.validated)
     StageIO.save(res.alertFlags, tables.alertFlags)
   }
@@ -64,10 +58,8 @@ object Runner {
     * validate_landings the same way), not call-site defaults.
     */
   def validate(spark: SparkSession, tables: StageTables,
-               conf: PipelineConfig.Conf): Unit = {
-    val ks = conf.validationK
-    validate(spark, tables, ks.kNFishers, ks.kNBoats, ks.kPriceKg)
-  }
+               conf: PipelineConfig.Conf): Unit =
+    validate(spark, tables, conf.validationK)
 
   /** Stage 4 — merge_trips: IMEIs validated once per distinct tracker
     * value and attached by survey_id ([[Validate.attachImeis]]), then the

@@ -58,15 +58,6 @@ object Schemas {
     ).map(StructField(_, StringType)) :+
       StructField("gillnets", ArrayType(gillnetStruct)))
 
-  /** Preprocessed-landings contract (FIXTURES.md A2; reference
-    * R/preprocessing.R:284-354).
-    */
-  val preprocessedGillnet: StructType = StructType(Seq(
-    StructField("gillnet_mesh_mm", DoubleType),
-    StructField("gillnet_length_m", DoubleType),
-    StructField("gillnet_number", DoubleType),
-    StructField("net_type", StringType)))
-
   /** PDS trips contract (FIXTURES.md A3; reference R/ingestion.R:428-475,
     * columns used at R/merge_trips.R:66-70).
     */

@@ -11,79 +11,146 @@ import graft.ops.{Bounds, Matching}
   *
   * Contract per validator: (form_name, survey_id, cleaned columns, alert
   * column); invalid values masked to null, integer alert code recorded.
-  * Bounds tables are tiny per-group aggregates → broadcast joins here,
-  * driver-side constants in [[fused]]; masks are pure column expressions
-  * (the reference's `rowwise()` blocks, R/validation-functions.R:226,301,
-  * are needless row-at-a-time escapes — the expressions are vectorizable
-  * and stay inside codegen here).
+  * V1, V2, V3 and V5 are each defined once, as a [[Rule]] built from its
+  * bound: the standalone validators select one rule, [[fused]] (the form
+  * the stage runs) selects all four in one projection, and [[apply]]
+  * joins the standalone outputs back the reference's way. Their bounds
+  * are a handful of numbers from one small query, run and collected when
+  * the validator is called, and attach as constants; V4
+  * ([[validateCatch]]) attaches its bounds by a broadcast join. Masks are
+  * pure column expressions (the reference's `rowwise()` blocks,
+  * R/validation-functions.R:226,301, are needless row-at-a-time escapes —
+  * the expressions are vectorizable and stay inside codegen here).
   */
 object Validate {
 
+  /** The LocScaleB k's of the stage's bounds (reference
+    * inst/config.yml:42-46; `PipelineConfig.Conf.validationK` overlays
+    * the YAML values on these defaults).
+    */
+  final case class Ks(kNFishers: Double = 2.5, kNBoats: Double = 2.5, kPriceKg: Double = 3.0)
+
   /** validate_dates' landing-date cutoff (reference :77-94). */
   private val DateCutoff = "2020-12-31"
+
+  private val keys = Seq("form_name", "survey_id")
+
+  /** One validation rule over its bound: `alert` (null when the row
+    * passes) and the columns it replaces, each masked to null where the
+    * alert fires. */
+  private final case class Rule(alertName: String, alert: Column, replaced: Seq[(String, Column)]) {
+    def cleaned: Seq[Column] = replaced.map { case (name, value) => when(alert.isNull, value).as(name) }
+  }
+
+  /** (keys, cleaned columns, alert) of one rule. */
+  private def validateBy(data: DataFrame, rule: Rule): DataFrame =
+    data.select(keys.map(col) ++ rule.cleaned :+ rule.alert.as(rule.alertName): _*)
 
   /** V1 (reference :77-94): the second dplyr assignment overwrites the
     * first, so the live rule is only `landing_date < cutoff` → alert 1 +
     * mask (SURVEY.md V1 decision; the `landing_date > submission_date`
     * predicate is dead in the reference and therefore here too).
     */
-  def validateDates(data: DataFrame, cutoff: String = DateCutoff): DataFrame = {
-    val alert = when(col("landing_date") < lit(cutoff), 1.0)
-    data.select(
-      col("form_name"), col("survey_id"),
-      when(alert.isNull, col("landing_date")).as("landing_date"),
-      alert.as("alert_date"))
-  }
+  private def dateRule(cutoff: String): Rule =
+    Rule("alert_date", when(col("landing_date") < lit(cutoff), 1.0),
+      Seq("landing_date" -> col("landing_date")))
 
-  /** Shared V2/V3 shape (reference validate_nfishers :112-128 /
-    * validate_nboats :147-162): negatives → alert + mask, then global
-    * LocScaleB upper outliers on the masked column (logt, back-transform
-    * exp(b)-1 per alert_outlier :51).
-    *
-    * The grouping here is GLOBAL (one group = the whole column), so the
-    * single-buffer [[Bounds.CollectExact]] aggregate would collect the
-    * entire column on one reducer at scale — the default routes through
-    * the two-pass formulation instead (identical numbers); pass
-    * [[Bounds.TwoPassApprox]] for bounded-memory sketched medians on
-    * planet-scale columns.
+  /** V2/V3 (reference validate_nfishers :112-128 / validate_nboats
+    * :147-162): negatives → alert + mask, then global LocScaleB upper
+    * outliers of the masked column (logt; the bound is back-transformed
+    * exp(b)-1 per alert_outlier :51, in [[collectBounds]]).
     */
-  private def validatePositiveOutliers(data: DataFrame, valueCol: String,
-                                       alertCode: Double, k: Double,
-                                       outName: String,
-                                       strategy: Bounds.Strategy): DataFrame = {
-    val base = data.select(
-      col("form_name"), col("survey_id"),
-      when(col(valueCol) < 0, alertCode).as("__alert_neg"),
-      when(col(valueCol) < 0, lit(null).cast(DoubleType))
-        .otherwise(col(valueCol).cast(DoubleType)).as("__x"))
-      .withColumn("__g", lit(1))
-    val bounds = Bounds.bounds(base, Seq("__g"), "__x", k, logt = true, strategy)
-      .select(col("__g"), (exp(col("upper_up")) - 1).as("__ub"))
-    base.join(broadcast(bounds), Seq("__g"), "left")
-      .withColumn("__alert", coalesce(
-        when(col("__x") > col("__ub"), alertCode), col("__alert_neg")))
-      .select(
-        col("form_name"), col("survey_id"),
-        when(col("__alert").isNull, col("__x")).as(valueCol),
-        col("__alert").as(outName))
+  private final case class CountRule(column: String, code: Double) {
+    /** What the bound is computed over. */
+    val masked: Column =
+      when(col(column) < 0, lit(null).cast(DoubleType)).otherwise(col(column).cast(DoubleType))
+    def rule(upper: Column): Rule = Rule(s"alert_$column",
+      coalesce(when(masked > upper, code), when(col(column) < 0, code)), Seq(column -> masked))
+  }
+  private val NFishers = CountRule("n_fishers", 2.0)
+  private val NBoats = CountRule("n_boats", 3.0)
+
+  /** The rows whose taxon has catch bounds (V4, V5): every taxon but the
+    * no-catch markers. */
+  private def eligible(data: DataFrame): DataFrame =
+    data.filter(col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch")
+
+  /** V5 (reference get_pricekg_bounds/validate_pricekg :252-316): two-sided
+    * bounds per catch_taxon over the [[eligible]] rows (back-transform
+    * exp(b), :260-263, in [[collectBounds]]), given as the row's
+    * (lower, upper) struct; alert 4 masks price_kg AND catch_kg AND
+    * catch_price.
+    */
+  private def priceRule(bounds: Column): Rule = Rule("alert_price",
+    when(col("price_kg") >= bounds.getField("_2") || col("price_kg") <= bounds.getField("_1"), 4.0),
+    Seq("price_kg", "catch_kg", "catch_price").map(c => c -> col(c)))
+
+  /** Collected bounds, attached as constants: a count rule's upper bound
+    * is a scalar literal, the price bounds a literal taxon → (lower,
+    * upper) map looked up by the row's taxon. A bound that does not exist
+    * — a column entirely null or negative has no bounds row, a guarded
+    * column or taxon has null bounds, a taxon with no eligible price is
+    * absent from the map (`getItem` of a missing key is null) — is a null
+    * constant, so its alert never fires, as a left join would leave it.
+    * The map is searched linearly per row: right for the reference's
+    * dozens of taxa; with thousands, a broadcast join is the better
+    * attach.
+    */
+  private final case class Constants(upper: Map[String, Double],
+                                     price: Map[String, (Double, Double)]) {
+    def upperOf(rule: CountRule): Column =
+      upper.get(rule.column).fold(lit(null).cast(DoubleType))(lit(_))
+    def priceBounds: Column = typedLit(price).getItem(col("catch_taxon"))
   }
 
-  def validateNFishers(data: DataFrame, k: Double,
-                       strategy: Bounds.Strategy = Bounds.TwoPassExact): DataFrame =
-    validatePositiveOutliers(data, "n_fishers", 2.0, k, "alert_n_fishers", strategy)
+  /** The bounds of `counts` (each count rule with its k) and, given
+    * `kPriceKg`, of V5, from ONE query run and collected now: the count
+    * columns stacked into one grouped [[Bounds.globalBoundsStacked]]
+    * aggregation (two-pass exact: the group is the whole column, which the
+    * single-buffer [[Bounds.CollectExact]] would hold on one reducer),
+    * unioned with the per-taxon price bounds ([[Bounds.boundsAgg]]) —
+    * one row per count column plus one per taxon.
+    */
+  private def collectBounds(data: DataFrame, counts: Seq[(CountRule, Double)],
+                            kPriceKg: Option[Double]): Constants = {
+    val global = Option.when(counts.nonEmpty)(Bounds.globalBoundsStacked(data,
+        counts.map { case (r, k) => (r.column, r.masked, k) }, logt = true, Bounds.TwoPassExact)
+      .select(lit(true).as("global"), col("column").as("key"),
+        lit(null).cast(DoubleType).as("lb"), (exp(col("upper_up")) - 1).as("ub")))
+    val price = kPriceKg.map(k =>
+      Bounds.boundsAgg(eligible(data), Seq("catch_taxon"), "price_kg", k, logt = true)
+        .select(lit(false).as("global"), col("catch_taxon").cast(StringType).as("key"),
+          exp(col("lower_low")).as("lb"), exp(col("upper_up")).as("ub")))
+    // lower and upper are null together (the LocScaleB guard), so only
+    // rows with an upper bound become constants
+    val (globalRows, priceRows) = (global ++ price).reduce(_ unionByName _).collect()
+      .filterNot(_.isNullAt(3)).partition(_.getBoolean(0))
+    Constants(globalRows.map(r => r.getString(1) -> r.getDouble(3)).toMap,
+      priceRows.map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
+  }
 
-  def validateNBoats(data: DataFrame, k: Double,
-                     strategy: Bounds.Strategy = Bounds.TwoPassExact): DataFrame =
-    validatePositiveOutliers(data, "n_boats", 3.0, k, "alert_n_boats", strategy)
+  def validateDates(data: DataFrame, cutoff: String = DateCutoff): DataFrame =
+    validateBy(data, dateRule(cutoff))
+
+  private def validateCount(data: DataFrame, rule: CountRule, k: Double): DataFrame =
+    validateBy(data, rule.rule(collectBounds(data, Seq(rule -> k), None).upperOf(rule)))
+
+  def validateNFishers(data: DataFrame, k: Double): DataFrame = validateCount(data, NFishers, k)
+
+  def validateNBoats(data: DataFrame, k: Double): DataFrame = validateCount(data, NBoats, k)
+
+  def validatePriceKg(data: DataFrame, k: Double): DataFrame =
+    validateBy(data, priceRule(collectBounds(data, Nil, Some(k)).priceBounds))
 
   /** V4 (reference get_catch_bounds/validate_catch :183-233 — defined but
     * not wired into validate_landings; kept as a first-class op): upper
     * bound per (gear, catch_taxon, weight_type), back-transform exp(b)
-    * (no -1, :191), alert 4 when catch_kg ≥ upper.
+    * (no -1, :191), alert 4 when catch_kg ≥ upper. Attached by broadcast
+    * join: a null `gear` group has bounds but matches no row, which a
+    * struct-keyed literal map would not reproduce.
     */
   def validateCatch(data: DataFrame, k: Double): DataFrame = {
-    val eligible = data.filter(col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch")
-    val bounds = Bounds.boundsAgg(eligible,
+    val bounds = Bounds.boundsAgg(eligible(data),
       Seq("gear", "catch_taxon", "weight_type"), "catch_kg", k, logt = true)
       .select(col("gear"), col("catch_taxon"), col("weight_type"),
         exp(col("upper_up")).as("__ub"))
@@ -92,24 +159,6 @@ object Validate {
       .select(col("form_name"), col("survey_id"),
         when(col("alert_catch").isNull, col("catch_kg")).as("catch_kg"),
         col("alert_catch"))
-  }
-
-  /** V5 (reference get_pricekg_bounds/validate_pricekg :252-316): two-sided
-    * bounds per catch_taxon (back-transform exp(b), :260-263); alert 4
-    * masks price_kg AND catch_kg AND catch_price.
-    */
-  def validatePriceKg(data: DataFrame, k: Double): DataFrame = {
-    val eligible = data.filter(col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch")
-    val bounds = Bounds.boundsAgg(eligible, Seq("catch_taxon"), "price_kg", k, logt = true)
-      .select(col("catch_taxon"), exp(col("lower_low")).as("__lb"), exp(col("upper_up")).as("__ub"))
-    data.join(broadcast(bounds), Seq("catch_taxon"), "left")
-      .withColumn("alert_price",
-        when(col("price_kg") >= col("__ub") || col("price_kg") <= col("__lb"), 4.0))
-      .select(col("form_name"), col("survey_id"),
-        when(col("alert_price").isNull, col("price_kg")).as("price_kg"),
-        when(col("alert_price").isNull, col("catch_kg")).as("catch_kg"),
-        when(col("alert_price").isNull, col("catch_price")).as("catch_price"),
-        col("alert_price"))
   }
 
   /** V6/J10 (reference validate_this_imei :339-375): the reference's
@@ -180,31 +229,29 @@ object Validate {
     */
   case class ValidationResult(validated: DataFrame, alertFlags: DataFrame)
 
-  def apply(preprocessed: DataFrame,
-            kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-            kPriceKg: Double = 3.0): ValidationResult = {
-    val keys = Seq("form_name", "survey_id")
-    // Deliberately LAZY fan-out (round 18, measured): the faithful chain
-    // consumes `preprocessed` from ~8 places (four validators — two of
-    // them two-pass global bounds — the J5 re-merge, the final join). A
-    // checkpoint-at-the-fork here was tried and REVERTED: each consumer
-    // re-runs a COLUMN-PRUNED scan of the upstream (2-4 columns of a
-    // narrow projection over parquet), while the checkpoint materializes
-    // the full-width frame eagerly and defeats that pruning — measured
-    // at sf1, the forked form ran 15.0-25.1 s vs 8.2-12.6 s lazy (and was
-    // neutral at sf0.1). Callers whose input is NOT a cheap pruned-scan
-    // projection (a join tree, a preprocess chain) should checkpoint
-    // BEFORE calling, where they know what the upstream costs — the same
-    // contract as Corpus.pplBuckets. The fused twin ([[fused]]) is the
-    // one-scan scale path, and the one `Runner.validate` runs; this chain
-    // stays as the reference-faithful form behind
-    // q_v7_validate_orchestration.
+  /** The reference-shaped chain: the four standalone validators, their
+    * outputs joined back (J5, J6) — behind q_v7_validate_orchestration
+    * and the equivalence tests; `Runner.validate` runs [[fused]].
+    */
+  def apply(preprocessed: DataFrame, ks: Ks = Ks()): ValidationResult = {
+    // The validators run their three bounds queries here, when called;
+    // the J5/J6 joins below stay LAZY (round 18, measured): the two
+    // writes scan `preprocessed` once per validator projection and once
+    // more for the J5 re-merge. A checkpoint-at-the-fork here was
+    // tried and REVERTED: each consumer re-runs a COLUMN-PRUNED scan of
+    // the upstream (2-4 columns of a narrow projection over parquet),
+    // while the checkpoint materializes the full-width frame eagerly and
+    // defeats that pruning — measured at sf1, the forked form ran
+    // 15.0-25.1 s vs 8.2-12.6 s lazy (and was neutral at sf0.1). Callers
+    // whose input is NOT a cheap pruned-scan projection (a join tree, a
+    // preprocess chain) should checkpoint BEFORE calling, where they know
+    // what the upstream costs — the same contract as Corpus.pplBuckets.
     val pre = preprocessed
     val outputs = Seq(
       validateDates(pre),
-      validateNFishers(pre, kNFishers),
-      validateNBoats(pre, kNBoats),
-      validatePriceKg(pre, kPriceKg))
+      validateNFishers(pre, ks.kNFishers),
+      validateNBoats(pre, ks.kNBoats),
+      validatePriceKg(pre, ks.kPriceKg))
 
     // J5: cleaned columns re-merge
     val cleaned = outputs
@@ -230,31 +277,19 @@ object Validate {
     ValidationResult(validated, flags)
   }
 
-  /** Fused validate_landings — identical semantics to [[apply]] (equivalence
+  /** Fused validate_landings — the same rules as [[apply]] (equivalence
     * tested in PipelineSpec and RunnerSpec), restructured for scale like
-    * the J1 fused gear assembly. Every validator derives from the SAME
+    * the J1 fused gear assembly. Every rule derives from the SAME
     * preprocessed frame and its bounds are a handful of numbers, so the
     * faithful shape's 4 re-scans + 3 full-outer joins + the J5 re-merge
     * join chain collapse to:
     *
-    *   1. ONE small query, run and collected when `fused` is called:
-    *      the n_fishers and n_boats upper bounds as one grouped
-    *      [[Bounds.globalBoundsStacked]] aggregation (two-pass exact,
-    *      like [[apply]]'s global bounds), unioned with the per-taxon price bounds
-    *      ([[Bounds.boundsAgg]]) — 2 + #taxa rows;
+    *   1. ONE small query for all four rules' bounds ([[collectBounds]]),
+    *      run and collected when `fused` is called — 2 + #taxa rows;
     *   2. ONE projection over preprocessed per output, reading those
-    *      bounds as driver-side constants: two scalar literals and a
-    *      literal taxon → (lower, upper) map. No join, no broadcast, no
-    *      exchange: writing `validated` or `alertFlags` is a
-    *      scan-project-write job that re-runs nothing.
-    *
-    * A bound that does not exist — a column entirely null or negative
-    * has no bounds row, a guarded column or taxon has null bounds, a taxon
-    * with no eligible price is absent from the map (`getItem` of a
-    * missing key is null) — is a null constant, so its alert never fires,
-    * exactly as [[apply]]'s left joins leave it. The map is searched
-    * linearly per row: right for the reference's dozens of taxa; with
-    * thousands, a broadcast join is the better attach.
+    *      bounds as constants. No join, no broadcast, no exchange:
+    *      writing `validated` or `alertFlags` is a scan-project-write job
+    *      that re-runs nothing.
     *
     * Caveat shared with [[apply]]'s join semantics: (form_name, survey_id)
     * is assumed unique and non-null (it is a surrogate key, P7: Preprocess
@@ -262,63 +297,22 @@ object Validate {
     * indices, so it is never null); with duplicate keys the faithful form
     * fans out multiplicatively in its joins while this form cannot.
     */
-  def fused(preprocessed: DataFrame,
-            kNFishers: Double = 2.5, kNBoats: Double = 2.5,
-            kPriceKg: Double = 3.0): ValidationResult = {
-    def masked(valueCol: String): Column =
-      when(col(valueCol) < 0, lit(null).cast(DoubleType))
-        .otherwise(col(valueCol).cast(DoubleType))
-    val nfMasked = masked("n_fishers")
-    val nbMasked = masked("n_boats")
-    val global = Bounds.globalBoundsStacked(preprocessed,
-      Seq(("n_fishers", nfMasked, kNFishers), ("n_boats", nbMasked, kNBoats)),
-      logt = true, Bounds.TwoPassExact)
-      .select(lit(true).as("global"), col("column").as("key"),
-        lit(null).cast(DoubleType).as("lb"), (exp(col("upper_up")) - 1).as("ub"))
-    val price = Bounds.boundsAgg(
-      preprocessed.filter(col("catch_taxon") =!= "0" && col("catch_taxon") =!= "no_catch"),
-      Seq("catch_taxon"), "price_kg", kPriceKg, logt = true)
-      .select(lit(false).as("global"), col("catch_taxon").cast(StringType).as("key"),
-        exp(col("lower_low")).as("lb"), exp(col("upper_up")).as("ub"))
-    val (globalRows, priceRows) = global.unionByName(price).collect()
-      .partition(_.getBoolean(0))
-    def upper(column: String): Column =
-      globalRows.find(_.getString(1) == column).filterNot(_.isNullAt(3))
-        .fold(lit(null).cast(DoubleType))(r => lit(r.getDouble(3)))
-    // lower and upper are null together (the LocScaleB guard), so only
-    // taxa with both bounds enter the map
-    val priceBounds = typedLit(priceRows.filterNot(_.isNullAt(3))
-      .map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
-      .getItem(col("catch_taxon"))
+  def fused(preprocessed: DataFrame, ks: Ks = Ks()): ValidationResult = {
+    val bounds = collectBounds(preprocessed,
+      Seq(NFishers -> ks.kNFishers, NBoats -> ks.kNBoats), Some(ks.kPriceKg))
+    val rules = Seq(dateRule(DateCutoff), NFishers.rule(bounds.upperOf(NFishers)),
+      NBoats.rule(bounds.upperOf(NBoats)), priceRule(bounds.priceBounds))
 
-    val alertDate = when(col("landing_date") < lit(DateCutoff), 1.0)
-    val alertNf = coalesce(when(nfMasked > upper("n_fishers"), 2.0),
-      when(col("n_fishers") < 0, 2.0))
-    val alertNb = coalesce(when(nbMasked > upper("n_boats"), 3.0),
-      when(col("n_boats") < 0, 3.0))
-    val alertPrice = when(col("price_kg") >= priceBounds.getField("_2") ||
-      col("price_kg") <= priceBounds.getField("_1"), 4.0)
-
-    val replaced = Set("landing_date", "n_fishers", "n_boats",
-      "price_kg", "catch_kg", "catch_price")
     // apply()'s using-column join emits the join keys first, then the
-    // remaining left columns — reproduce that exact column order
-    val keys = Seq("form_name", "survey_id")
-    val kept = (keys ++ preprocessed.columns
-      .filterNot(c => replaced.contains(c) || keys.contains(c)))
+    // remaining left columns, then the cleaned ones — the same order
+    val replaced = rules.flatMap(_.replaced.map(_._1)).toSet
+    val kept = (keys ++ preprocessed.columns.filterNot(c => replaced(c) || keys.contains(c)))
       .map(c => col(s"`$c`"))
-    val validated = preprocessed.select(kept ++ Seq(
-      when(alertDate.isNull, col("landing_date")).as("landing_date"),
-      when(alertNf.isNull, nfMasked).as("n_fishers"),
-      when(alertNb.isNull, nbMasked).as("n_boats"),
-      when(alertPrice.isNull, col("price_kg")).as("price_kg"),
-      when(alertPrice.isNull, col("catch_kg")).as("catch_kg"),
-      when(alertPrice.isNull, col("catch_price")).as("catch_price")): _*)
+    val validated = preprocessed.select(kept ++ rules.flatMap(_.cleaned): _*)
 
     val flags = preprocessed.select(
       col("form_name"), col("survey_id"),
-      concat_ws("-", Seq(alertDate, alertNf, alertNb, alertPrice)
-        .map(_.cast(IntegerType).cast(StringType)): _*).as("alert_number"))
+      concat_ws("-", rules.map(_.alert.cast(IntegerType).cast(StringType)): _*).as("alert_number"))
 
     ValidationResult(validated, flags)
   }

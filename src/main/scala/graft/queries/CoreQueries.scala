@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ops.{Cleanse, Matching, Restructure}
+import graft.pipeline.Preprocess
 import graft.sources.{Sources, StageIO}
 
 /** Correctness-gate queries for the structural/projection/join/window
@@ -231,16 +232,18 @@ object CoreQueries {
             FROM events ORDER BY event_id"""))
 
   /** P6+P10: derived ratio metric and constant currency scale (reference
-    * R/preprocessing.R:308, inst/reports/malawi-report.qmd:152). Scalar
-    * IEEE ops — full precision, deterministic cross-engine.
+    * R/preprocessing.R:308, inst/reports/malawi-report.qmd:152) — the
+    * stage's own [[Preprocess.priceKg]], returnflag 'R' playing "total"
+    * (l_quantity is never 0, so its R-style x/0 branch never fires).
+    * Scalar IEEE ops — full precision, deterministic cross-engine.
     */
   val p6Derived = Q("q_p6_p10_derived",
     (s, dir) => {
       val li = Tables.lineitem(s, dir)
       li.select(
         col("l_orderkey"), col("l_linenumber"),
-        when(col("l_returnflag") === "R", col("l_extendedprice") / col("l_quantity"))
-          .otherwise(col("l_extendedprice")).as("price_kg"),
+        Preprocess.priceKg(col("l_extendedprice"), col("l_quantity"),
+          when(col("l_returnflag") === "R", "total")).as("price_kg"),
         (col("l_extendedprice") * 0.0006).as("price_usd"))
         .orderBy("l_orderkey", "l_linenumber", "price_kg", "price_usd")
     },

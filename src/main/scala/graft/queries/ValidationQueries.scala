@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.ops.Bounds
 import graft.pipeline.Validate
 
 /** Correctness-gate queries for the validation operator family
@@ -39,14 +38,15 @@ object ValidationQueries {
     * R/validation-functions.R:112-128): negatives alert 2 + mask first;
     * the outlier bounds are computed on the masked column (logt=TRUE),
     * back-transformed `exp(b)-1` (alert_outlier :51), upper-side alert
-    * only. Routed through the single-pass collect-exact aggregate; V3
-    * gates the two-pass route.
+    * only. The validator runs the stage's own rule and bounds query
+    * (two-pass exact global bounds, attached as a constant);
+    * `q_a5_locscaleb_bounds` gates the single-pass collect-exact route.
     */
   val v2Outlier = Q("q_v2_validate_nfishers",
     (s, dir) =>
       Validate.validateNFishers(Tables.customer(s, dir).select(
           lit("f1").as("form_name"), col("c_custkey").as("survey_id"),
-          col("c_acctbal").as("n_fishers")), 2.5, Bounds.CollectExact)
+          col("c_acctbal").as("n_fishers")), 2.5)
         .select("survey_id", "n_fishers", "alert_n_fishers")
         .orderBy("survey_id"),
     Some("""WITH base AS (
@@ -74,15 +74,14 @@ object ValidationQueries {
 
   /** V3: [[Validate.validateNBoats]] — same shape as V2 (reference
     * R/validation-functions.R:147-162), alert code 3, over the supplier
-    * balance column. Deliberately routed through the TWO-PASS bounds
-    * strategy (the 100 TB global-group path) so that route has its own
-    * oracle gate — the numbers must equal the collect-exact aggregate's.
+    * balance column; the same rule and two-pass exact bounds query as
+    * V2, whose numbers equal the collect-exact aggregate's (BoundsSpec).
     */
   val v3Outlier = Q("q_v3_validate_nboats",
     (s, dir) =>
       Validate.validateNBoats(Tables.supplier(s, dir).select(
           lit("f1").as("form_name"), col("s_suppkey").as("survey_id"),
-          col("s_acctbal").as("n_boats")), 2.5, Bounds.TwoPassExact)
+          col("s_acctbal").as("n_boats")), 2.5)
         .select("survey_id", "n_boats", "alert_n_boats")
         .orderBy("survey_id"),
     Some("""WITH base AS (
@@ -310,12 +309,12 @@ object ValidationQueries {
         .orderBy("survey_id"),
     Some(V7OracleSql))
 
-  /** The FUSED validate orchestration ([[Validate.fused]]):
-    * 2 small bounds aggregations + ONE wide projection instead of the
-    * faithful 4-rescan / 3-full-outer chain — identical semantics, so it
-    * shares the faithful gate's oracle verbatim. Both forms hash-matching
-    * the same DuckDB twin at sf0.01 is the cross-engine proof of the
-    * equivalence the PipelineSpec fixture test asserts.
+  /** The FUSED validate orchestration ([[Validate.fused]]), the form
+    * `Runner.validate` runs: one small bounds query + ONE wide projection
+    * instead of the faithful 4-rescan / 3-full-outer chain — the same
+    * rules, so it shares the faithful gate's oracle verbatim. Both forms
+    * hash-matching the same DuckDB twin at sf0.01 certifies the join
+    * shapes' equivalence; the rules themselves are one definition.
     */
   val v7Fused = Q("q_v7_validate_fused",
     (s, dir) =>

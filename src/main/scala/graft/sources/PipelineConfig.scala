@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import graft.pipeline.Validate
+
 /** S7 — layered YAML config with environment interpolation (reference
   * read_config, R/utils.R:65-77 over inst/config.yml: `default` plus an
   * active profile like `production`/`local`, profile values overriding
@@ -10,11 +12,9 @@ import scala.jdk.CollectionConverters._
   * `${VAR}` placeholders interpolate from the provided environment
   * (missing vars resolve to "" like R's Sys.getenv default). Validation
   * constants (`k_*`, reference inst/config.yml:42-46) surface through
-  * [[ValidationK]].
+  * [[Conf.validationK]].
   */
 object PipelineConfig {
-
-  case class ValidationK(kNFishers: Double, kNBoats: Double, kCatch: Double, kPriceKg: Double)
 
   /** Curation-stage knobs (see [[graft.pipeline.Curate]]): thresholds for
     * the near-dup cluster and quality band, plus the optional bracketed
@@ -55,11 +55,15 @@ object PipelineConfig {
     def getDouble(path: String): Option[Double] = getString(path).flatMap(_.toDoubleOption)
     def getBoolean(path: String): Option[Boolean] = getString(path).flatMap(_.toBooleanOption)
 
-    def validationK: ValidationK = ValidationK(
-      getDouble("validation.k_nfishers").getOrElse(2.5),
-      getDouble("validation.k_nboats").getOrElse(2.5),
-      getDouble("validation.k_catch").getOrElse(2.5),
-      getDouble("validation.k_pricekg").getOrElse(3.0))
+    /** The validate stage's k's: `validation.k_*` overlaid on
+      * [[Validate.Ks]]'s defaults. */
+    def validationK: Validate.Ks = {
+      val d = Validate.Ks()
+      Validate.Ks(
+        getDouble("validation.k_nfishers").getOrElse(d.kNFishers),
+        getDouble("validation.k_nboats").getOrElse(d.kNBoats),
+        getDouble("validation.k_pricekg").getOrElse(d.kPriceKg))
+    }
 
     def getStringList(path: String): Seq[String] = get(path) match {
       case Some(l: List[_]) => l.map(_.toString)

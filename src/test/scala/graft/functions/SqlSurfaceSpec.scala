@@ -192,13 +192,11 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("preprocessed stage round-trips through the typed Dataset model") {
-    val raw = graft.ops.Restructure.conformTo(
-      spark.read.json(Seq(
-        """{"_id": 7, "today": "2024-03-12", "landing_date": "2024-03-11",
-           "fish_species": "Usipa", "weight": "24.5", "value_species": "30000",
-           "value_type": "total", "vessel_number": "1", "catch_number": "1"}""").toDS)
-        .withColumnRenamed("_id", "submission_id"),
-      graft.pipeline.Schemas.rawLandings)
+    val raw = spark.read.json(Seq(
+      """{"_id": 7, "today": "2024-03-12", "landing_date": "2024-03-11",
+         "fish_species": "Usipa", "weight": "24.5", "value_species": "30000",
+         "value_type": "total", "vessel_number": "1", "catch_number": "1"}""").toDS)
+      .withColumnRenamed("_id", "submission_id")
     val pre = graft.pipeline.Preprocess(raw.withColumn("form_name", lit("f")))
     val ds = Model.asPreprocessed(pre)
     val row = ds.collect().head

@@ -78,7 +78,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   private lazy val preprocessed: DataFrame =
-    Preprocess(Restructure.conformTo(Preprocess.stripPrefixes(ingested), Schemas.rawLandings))
+    Preprocess(ingested)
 
   test("preprocess: survey_id renders missing indices as NA like R paste") {
     val ids = preprocessed.select("survey_id").collect().map(_.getString(0)).sorted
@@ -131,7 +131,7 @@ class PipelineSpec extends SparkTestBase {
          "group_vessel_data": [
            {"group_vessel_data/group_vessel/crew_number": "3",
             "group_vessel_data/group_catch": [${catches.mkString(",")}]}]}""")))
-    val pre = Preprocess(Restructure.conformTo(Preprocess.stripPrefixes(raw), Schemas.rawLandings))
+    val pre = Preprocess(raw)
     val priceKg = pre.select("survey_id", "price_kg").collect()
       .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
     assert(priceKg.size == 12) // the stage completes: no DIVIDE_BY_ZERO
@@ -282,6 +282,83 @@ class PipelineSpec extends SparkTestBase {
     assert(rows.map(_._1).filter(id => id.startsWith("z") || id.startsWith("n"))
       .forall(id => alert(id).isEmpty && kg(id).isDefined))
     assert(kg(s"z${bulk.size}").contains(1e6) && kg(s"n${bulk.size}").contains(1e6))
+  }
+
+  test("validate: planted bounds — counts alert strictly above exp(b)-1 and mask negatives; price alerts at exp(b) on both sides; fused and standalone agree") {
+    // LocScaleB on log1p(x) as the stage computes it: odd counts, so each
+    // median is one element, and StrictMath like Spark's log1p/exp
+    def locscaleb(xs: Seq[Double], k: Double): (Double, Double) = {
+      def median(v: Seq[Double]) = {
+        val s = v.sorted
+        assert(s.size % 2 == 1)
+        s(s.size / 2)
+      }
+      val t = xs.map(StrictMath.log1p)
+      val m = median(t)
+      val mad = 1.4826 * median(t.map(x => math.abs(x - m)))
+      (m - k * mad, m + k * mad)
+    }
+    val n = 21
+    val fishers = (0 until n).map(10.0 + _)
+    val boats = (0 until n).map(5.0 + _ * 0.5)
+    val prices = (0 until n).map(100.0 + 2.0 * _)
+    // the plants lie beyond the whole bulk, in value and in distance from
+    // the median, so they move neither median nor MAD: each bound is known
+    // before they are planted (asserted below with the plants in place)
+    def countUpper(xs: Seq[Double]) = StrictMath.exp(locscaleb(xs, 2.5)._2) - 1
+    def priceBounds(xs: Seq[Double]) = {
+      val (l, u) = locscaleb(xs, 3.0)
+      (StrictMath.exp(l), StrictMath.exp(u))
+    }
+    val ubF = countUpper(fishers ++ Seq(1e6, 1e6))
+    val ubB = countUpper(boats ++ Seq(1e6, 1e6))
+    val (lbP, ubP) = priceBounds(prices ++ Seq(1.0, 1.0, 1e6, 1e6))
+    assert(countUpper(fishers ++ Seq(ubF, ubF + 0.5)) == ubF)
+    assert(countUpper(boats ++ Seq(ubB, ubB + 0.5)) == ubB)
+    assert(priceBounds(prices ++ Seq(lbP, lbP + 0.5, ubP - 0.5, ubP)) == (lbP, ubP))
+
+    val rows = fishers.indices.map(i => (s"b$i", Option(fishers(i)), Option(boats(i)), Option(prices(i)))) ++ Seq(
+      ("nf_at", Some(ubF), None, None), ("nf_above", Some(ubF + 0.5), None, None),
+      ("nf_neg", Some(-1.0), None, None),
+      ("nb_at", None, Some(ubB), None), ("nb_above", None, Some(ubB + 0.5), None),
+      ("nb_neg", None, Some(-2.0), None),
+      ("p_lb", None, None, Some(lbP)), ("p_above_lb", None, None, Some(lbP + 0.5)),
+      ("p_below_ub", None, None, Some(ubP - 0.5)), ("p_ub", None, None, Some(ubP)))
+    val data = rows.toDF("survey_id", "n_fishers", "n_boats", "price_kg")
+      .select(lit("f").as("form_name"), col("survey_id"),
+        to_timestamp(lit("2024-06-01")).as("landing_date"), col("n_fishers"), col("n_boats"),
+        lit("usipa").as("catch_taxon"), lit(1.0).as("catch_kg"),
+        col("price_kg").as("catch_price"), col("price_kg"))
+    def read(df: DataFrame, c: String): Map[String, Option[Double]] =
+      df.select(col("survey_id"), col(c)).collect()
+        .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+
+    val fused = Validate.fused(data)
+    val flags = fused.alertFlags.collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    val bulk = fishers.indices.map(i => s"b$i")
+    assert(bulk.forall(flags(_) == ""))
+    // (masked columns, alert column and code, the standalone validator,
+    // planted id → alerted)
+    Seq(
+      (Seq("n_fishers"), "alert_n_fishers", 2, Validate.validateNFishers(data, 2.5),
+        Map("nf_at" -> false, "nf_above" -> true, "nf_neg" -> true)),
+      (Seq("n_boats"), "alert_n_boats", 3, Validate.validateNBoats(data, 2.5),
+        Map("nb_at" -> false, "nb_above" -> true, "nb_neg" -> true)),
+      (Seq("price_kg", "catch_kg", "catch_price"), "alert_price", 4, Validate.validatePriceKg(data, 3.0),
+        Map("p_lb" -> true, "p_above_lb" -> false, "p_below_ub" -> false, "p_ub" -> true))
+    ).foreach { case (masked, alertCol, code, alone, planted) =>
+      val alert = read(alone, alertCol)
+      assert(bulk.forall(alert(_).isEmpty), alertCol)
+      val values = masked.map(c => (c, read(data, c), read(alone, c), read(fused.validated, c)))
+      planted.foreach { case (id, hit) =>
+        assert(alert(id) == Option.when(hit)(code.toDouble), s"$id: standalone $alertCol")
+        assert(flags(id) == (if (hit) code.toString else ""), s"$id: fused alert_number")
+        values.foreach { case (c, in, standalone, fusedOut) =>
+          val want = if (hit) None else in(id)
+          assert(standalone(id) == want && fusedOut(id) == want, s"$id: $c")
+        }
+      }
+    }
   }
 
   test("merge: only 1:1 (date, imei) pairs match; tz conversions applied") {

@@ -91,8 +91,9 @@ class ValidateStageSpec extends SparkTestBase {
     // one footer read, the bounds query's jobs and two writes
     assert(got.jobs <= 10, s"validate stage submitted ${got.jobs} jobs")
 
-    // negative control: the faithful chain re-derives its bounds inside
-    // both writes, so both counters must fire
+    // negative control: the faithful chain runs one bounds query per
+    // validator when it is called and joins the validators' outputs back
+    // (J5, J6) inside both writes, so both counters must fire
     val faithful = observe {
       val res = Validate(StageIO.load(spark, tables.preprocessed))
       StageIO.save(res.validated, tables.validated)
