@@ -40,7 +40,7 @@ import org.apache.spark.sql.DataFrame
   *     layer: executor loss costs nothing, memory pressure is zero, and
   *     the staging table doubles as a debuggable pipeline breakpoint.
   *     This is the 100-TB default — the measured decision rule is in
-  *     SCALING.md §fork-materialization. Staging tables land under
+  *     docs/SCALING.md §9b. Staging tables land under
   *     `spark.graft.forkMaterialize.dir` (default: JVM temp dir +
   *     `/graft-fork-stage/<applicationId>`, see [[DirKey]]) with
   *     collision-safe unique names; the dir is CALLER-MANAGED:

@@ -104,29 +104,33 @@ object Validate {
   }
 
   /** The bounds of `counts` (each count rule with its k) and, given
-    * `kPriceKg`, of V5, from ONE query run and collected now: the count
-    * columns stacked into one grouped [[Bounds.globalBoundsStacked]]
-    * aggregation (two-pass exact: the group is the whole column, which the
-    * single-buffer [[Bounds.CollectExact]] would hold on one reducer),
-    * unioned with the per-taxon price bounds ([[Bounds.boundsAgg]]) —
-    * one row per count column plus one per taxon.
+    * `kPriceKg`, of V5, from ONE exact [[Bounds.boundsAgg]] aggregation,
+    * run and collected now: the masked count columns, exploded into one
+    * row per (row, column), union the [[eligible]] price rows, grouped by
+    * (global, key) — one group per count column, the whole column, and
+    * one per taxon — each group with its own k. One row per group.
     */
   private def collectBounds(data: DataFrame, counts: Seq[(CountRule, Double)],
                             kPriceKg: Option[Double]): Constants = {
-    val global = Option.when(counts.nonEmpty)(Bounds.globalBoundsStacked(data,
-        counts.map { case (r, k) => (r.column, r.masked, k) }, logt = true, Bounds.TwoPassExact)
-      .select(lit(true).as("global"), col("column").as("key"),
-        lit(null).cast(DoubleType).as("lb"), (exp(col("upper_up")) - 1).as("ub")))
-    val price = kPriceKg.map(k =>
-      Bounds.boundsAgg(eligible(data), Seq("catch_taxon"), "price_kg", k, logt = true)
-        .select(lit(false).as("global"), col("catch_taxon").cast(StringType).as("key"),
-          exp(col("lower_low")).as("lb"), exp(col("upper_up")).as("ub")))
+    def stacked(global: Boolean, key: Column, x: Column): Seq[Column] =
+      Seq(lit(global).as("global"), key.cast(StringType).as("key"), x.cast(DoubleType).as("x"))
+    val countRows = Option.when(counts.nonEmpty)(data.select(explode(array(counts.map {
+      case (r, _) => struct(stacked(global = true, lit(r.column), r.masked): _*)
+    }: _*)).as("__s")).select("__s.*"))
+    val priceRows = kPriceKg.map(_ =>
+      eligible(data).select(stacked(global = false, col("catch_taxon"), col("price_kg")): _*))
+    val k = counts.foldLeft(kPriceKg.fold(lit(null).cast(DoubleType))(lit(_))) {
+      case (acc, (r, kc)) => when(col("global") && col("key") === r.column, kc).otherwise(acc)
+    }
+    val bounds = Bounds.boundsAgg((countRows ++ priceRows).reduce(_ unionByName _),
+        Seq("global", "key"), "x", k, logt = true)
+      .select(col("global"), col("key"), exp(col("lower_low")).as("lb"),
+        when(col("global"), exp(col("upper_up")) - 1).otherwise(exp(col("upper_up"))).as("ub"))
     // lower and upper are null together (the LocScaleB guard), so only
     // rows with an upper bound become constants
-    val (globalRows, priceRows) = (global ++ price).reduce(_ unionByName _).collect()
-      .filterNot(_.isNullAt(3)).partition(_.getBoolean(0))
+    val (globalRows, taxonRows) = bounds.collect().filterNot(_.isNullAt(3)).partition(_.getBoolean(0))
     Constants(globalRows.map(r => r.getString(1) -> r.getDouble(3)).toMap,
-      priceRows.map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
+      taxonRows.map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap)
   }
 
   def validateDates(data: DataFrame, cutoff: String = DateCutoff): DataFrame =
@@ -151,7 +155,7 @@ object Validate {
     */
   def validateCatch(data: DataFrame, k: Double): DataFrame = {
     val bounds = Bounds.boundsAgg(eligible(data),
-      Seq("gear", "catch_taxon", "weight_type"), "catch_kg", k, logt = true)
+      Seq("gear", "catch_taxon", "weight_type"), "catch_kg", lit(k), logt = true)
       .select(col("gear"), col("catch_taxon"), col("weight_type"),
         exp(col("upper_up")).as("__ub"))
     data.join(broadcast(bounds), Seq("gear", "catch_taxon", "weight_type"), "left")

@@ -39,8 +39,8 @@ object ValidationQueries {
     * the outlier bounds are computed on the masked column (logt=TRUE),
     * back-transformed `exp(b)-1` (alert_outlier :51), upper-side alert
     * only. The validator runs the stage's own rule and bounds query
-    * (two-pass exact global bounds, attached as a constant);
-    * `q_a5_locscaleb_bounds` gates the single-pass collect-exact route.
+    * (the exact `locscaleb` aggregate over the whole column, attached as
+    * a constant); `q_a5_locscaleb_bounds` gates the aggregate itself.
     */
   val v2Outlier = Q("q_v2_validate_nfishers",
     (s, dir) =>
@@ -74,8 +74,7 @@ object ValidationQueries {
 
   /** V3: [[Validate.validateNBoats]] — same shape as V2 (reference
     * R/validation-functions.R:147-162), alert code 3, over the supplier
-    * balance column; the same rule and two-pass exact bounds query as
-    * V2, whose numbers equal the collect-exact aggregate's (BoundsSpec).
+    * balance column; the same rule and bounds query as V2.
     */
   val v3Outlier = Q("q_v3_validate_nboats",
     (s, dir) =>
@@ -279,8 +278,7 @@ object ValidationQueries {
     * frame, alert columns united with na.rm semantics (J6). The output
     * gated here is the `alert_flags` frame the reference computes but
     * never persists (kept first-class per SURVEY.md V7). Exercises
-    * [[Validate.apply]] itself, including the scale-safe
-    * two-pass global-bounds routing for V2/V3.
+    * [[Validate.apply]] itself, including the global bounds of V2/V3.
     */
   private def v7Base(s: SparkSession, dir: String) = {
     val li = Tables.lineitem(s, dir)

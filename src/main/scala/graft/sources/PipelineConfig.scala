@@ -52,8 +52,15 @@ object PipelineConfig {
         case _ => None
       }
     def getString(path: String): Option[String] = get(path).map(_.toString)
-    def getDouble(path: String): Option[Double] = getString(path).flatMap(_.toDoubleOption)
-    def getBoolean(path: String): Option[Boolean] = getString(path).flatMap(_.toBooleanOption)
+    def getDouble(path: String): Option[Double] = parsed(path, "a number")(_.toDoubleOption)
+    def getBoolean(path: String): Option[Boolean] = parsed(path, "true or false")(_.toBooleanOption)
+
+    /** A present, non-empty value must parse: absent keys and the empty
+      * string of an unset `${VAR}` fall to the caller's default, anything
+      * else that does not parse fails naming the key. */
+    private def parsed[A](path: String, expected: String)(parse: String => Option[A]): Option[A] =
+      getString(path).filter(_.nonEmpty).map(v => parse(v).getOrElse(
+        throw new IllegalArgumentException(s"config key $path: '$v' is not $expected")))
 
     /** The validate stage's k's: `validation.k_*` overlaid on
       * [[Validate.Ks]]'s defaults. */

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** A5 — LocScaleB bounds: single-pass aggregate vs two-pass DataFrame
-  * equivalence, the reference's guards, and the one executable reference
-  * example (`get_bounds(c(1,2,3,4,5), k=3)`,
-  * reference R/validation-functions.R:387).
+/** A5 — LocScaleB bounds: the count-buffer aggregate vs an independent
+  * two-pass formulation over Spark's exact `percentile`, the per-group k,
+  * the reference's guards, and the one executable reference example
+  * (`get_bounds(c(1,2,3,4,5), k=3)`, reference
+  * R/validation-functions.R:387).
   */
 class BoundsSpec extends SparkTestBase {
   import spark.implicits._
@@ -28,89 +29,36 @@ class BoundsSpec extends SparkTestBase {
     assert(math.abs(r.getAs[Double]("upper_up") - (med + 3 * mad)) < 1e-12)
   }
 
+  private def bits(r: Row): Seq[Any] = r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case other => other
+  }
+
   test("single-pass aggregate equals two-pass DataFrame formulation") {
     val rng = new scala.util.Random(7)
-    val data = Seq.tabulate(500)(i => (s"g${i % 3}", rng.nextDouble() * 100))
-    val df = data.toDF("g", "x")
-    val viaAgg = df.groupBy("g").agg(Bounds.locscaleb(col("x"), 2.5, logt = true).as("b"))
-      .select(col("g"), col("b.n"), col("b.median"), col("b.mad"),
-        col("b.lower_low"), col("b.upper_up"))
-      .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-    val viaTwoPass = Bounds.boundsTwoPass(df, Seq("g"), "x", 2.5, logt = true)
-      .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-    assert(viaAgg.keySet == viaTwoPass.keySet)
-    viaAgg.foreach { case (g, a) =>
-      val b = viaTwoPass(g)
-      a.zip(b).foreach {
-        case (x: Double, y: Double) => assert(math.abs(x - y) < 1e-12, s"group $g: $a vs $b")
-        case (x, y) => assert(x == y, s"group $g: $a vs $b")
-      }
-    }
+    // continuous values plus ties: the count buffer and Spark's exact
+    // percentile agree bit for bit
+    val data = Seq.tabulate(500)(i =>
+      (s"g${i % 3}", if (i % 4 == 0) (i % 7).toDouble else rng.nextDouble() * 100))
+    val df = data.toDF("g", "x").repartition(8)
+    val viaAgg = Bounds.boundsAgg(df, Seq("g"), "x", lit(2.5), logt = true)
+      .collect().map(r => r.getString(0) -> bits(Row.fromSeq(r.toSeq.drop(1)))).toMap
+    val viaTwoPass = BoundsTwins.boundsTwoPass(df, Seq("g"), "x", 2.5, logt = true)
+      .collect().map(r => r.getString(0) -> bits(Row.fromSeq(r.toSeq.drop(1)))).toMap
+    assert(viaAgg.keySet == Set("g0", "g1", "g2"))
+    assert(viaAgg == viaTwoPass)
   }
 
-  test("strategy dispatcher: all three routes agree (exact identically, approx closely)") {
+  test("one global skewed group: aggregate equals the percentile reference bit for bit") {
     val rng = new scala.util.Random(11)
-    // skewed positive data + a global single group — the V2/V3 shape where
-    // CollectExact is the scale hazard and TwoPass* is the 100 TB route
+    // skewed positive data in one global group — the V2/V3 shape
     val df = Seq.tabulate(2000)(i => ("all", math.exp(rng.nextGaussian()) * 10))
       .toDF("g", "x")
-    def run(s: Bounds.Strategy): Row =
-      Bounds.bounds(df, Seq("g"), "x", 2.5, logt = true, s).collect().head
-    val exact = run(Bounds.CollectExact)
-    val twoPass = run(Bounds.TwoPassExact)
-    val approx = run(Bounds.TwoPassApprox(10000))
-    Seq("median", "mad", "lower_low", "upper_up").foreach { f =>
-      assert(math.abs(exact.getAs[Double](f) - twoPass.getAs[Double](f)) < 1e-12,
-        s"$f: exact vs two-pass")
-      // sketch returns a data value near the true median — close, not equal
-      assert(math.abs(exact.getAs[Double](f) - approx.getAs[Double](f)) < 0.05,
-        s"$f: exact vs approx")
-    }
-  }
-
-  test("TwoPassApprox accuracy contract: <=1% relative deviation at accuracy=10000 on skewed data") {
-    // the distributions a 100 TB numeric column actually throws at the
-    // sketch: heavy right tail (lognormal), memoryless (exponential),
-    // power-law (pareto alpha=1.5), and a bimodal mixture
-    val rng = new scala.util.Random(101)
-    val n = 20000
-    val dists: Seq[(String, Seq[Double])] = Seq(
-      "lognormal" -> Seq.fill(n)(math.exp(rng.nextGaussian() * 1.5) * 10),
-      "exponential" -> Seq.fill(n)(-math.log(rng.nextDouble()) * 50),
-      "pareto" -> Seq.fill(n)(math.pow(rng.nextDouble(), -1.0 / 1.5)),
-      "bimodal" -> Seq.fill(n)(
-        if (rng.nextBoolean()) rng.nextGaussian() + 5 else rng.nextGaussian() * 3 + 80))
-    val df = dists.flatMap { case (g, vs) => vs.map(g -> _) }.toDF("g", "x")
-    def collect(s: Bounds.Strategy): Map[String, Row] =
-      Bounds.bounds(df, Seq("g"), "x", 2.5, logt = true, s)
-        .collect().map(r => r.getString(0) -> r).toMap
-    val exact = collect(Bounds.TwoPassExact)
-    val approx = collect(Bounds.TwoPassApprox(10000))
-    for (g <- dists.map(_._1); f <- Seq("median", "mad", "lower_low", "upper_up")) {
-      val e = exact(g).getAs[Double](f)
-      val a = approx(g).getAs[Double](f)
-      // median and mad: plain relative error. The derived bounds are
-      // DIFFERENCES (med ± k·mad) whose magnitude can be near zero, so
-      // their yardstick is the bound's own scale k·mad — a 1% deviation
-      // there is what a user of the bounds actually experiences (rows
-      // near the cutoff flipping), not the inflated |a-e|/|e| of a
-      // near-zero difference.
-      val scale = f match {
-        case "median" | "mad" => math.abs(e)
-        case _ => 2.5 * exact(g).getAs[Double]("mad")
-      }
-      val rel = math.abs(a - e) / math.max(scale, 1e-9)
-      assert(rel <= 0.01, f"$g.$f: exact $e%.6f vs approx $a%.6f (rel $rel%.5f)")
-    }
-    // and the documented failure mode of cranking accuracy DOWN: a coarse
-    // sketch (accuracy=10) must still return usable numbers, just worse —
-    // quantifies why 10000 is the default, not a magic constant
-    val coarse = collect(Bounds.TwoPassApprox(10))
-    val coarseRel = dists.map(_._1).map { g =>
-      math.abs(coarse(g).getAs[Double]("median") - exact(g).getAs[Double]("median")) /
-        math.abs(exact(g).getAs[Double]("median"))
-    }.max
-    assert(coarseRel <= 0.5, s"coarse sketch unusable: $coarseRel")
+    val agg = df.agg(Bounds.locscaleb(col("x"), 2.5, logt = true).as("b"))
+      .select("b.*").collect().head
+    val twoPass = BoundsTwins.boundsTwoPass(df, Seq("g"), "x", 2.5, logt = true)
+      .drop("g").collect().head
+    assert(bits(agg) == bits(twoPass))
   }
 
   test("stacked global bounds with k applied afterwards are bit-identical to one call per column") {
@@ -122,22 +70,22 @@ class BoundsSpec extends SparkTestBase {
         (i % 13).toDouble, 0.0, Option.empty[Double])
     }.toDF("a", "b", "c", "d")
     val ks = Seq("a" -> 2.5, "b" -> 1.7, "c" -> 3.0, "d" -> 2.0)
-    def bits(r: Row): Seq[Any] = r.toSeq.map {
-      case d: Double => java.lang.Double.doubleToRawLongBits(d)
-      case other => other
+    val rows = df.select(explode(array(ks.map { case (c, _) =>
+      struct(lit(c).as("column"), col(c).as("x"))
+    }: _*)).as("s")).select("s.*")
+    val k = ks.foldLeft(lit(null).cast("double")) { case (acc, (c, kc)) =>
+      when(col("column") === c, kc).otherwise(acc)
     }
-    for (strategy <- Seq(Bounds.TwoPassExact, Bounds.CollectExact)) {
-      val stacked = Bounds.globalBoundsStacked(df,
-        ks.map { case (c, k) => (c, col(c), k) }, logt = true, strategy)
-        .collect().map(r => r.getString(0) -> bits(Row.fromSeq(r.toSeq.drop(1)))).toMap
-      val separate = ks.flatMap { case (c, k) =>
-        Bounds.bounds(df.withColumn("__g", lit(1)), Seq("__g"), c, k, logt = true, strategy)
-          .drop("__g").collect().map(r => c -> bits(r))
-      }.toMap
-      assert(stacked == separate, s"$strategy")
-      assert(stacked.keySet == Set("a", "b", "c"), s"$strategy")
-      assert(stacked("c").takeRight(2) == Seq(null, null), s"$strategy: guarded column")
-    }
+    val stacked = Bounds.boundsAgg(rows, Seq("column"), "x", k, logt = true)
+      .collect().map(r => r.getString(0) -> bits(Row.fromSeq(r.toSeq.drop(1)))).toMap
+    // k inside the aggregate, one query per column
+    val separate = ks.flatMap { case (c, kc) =>
+      df.agg(Bounds.locscaleb(col(c), kc, logt = true).as("b"))
+        .filter(col("b").isNotNull).select("b.*").collect().map(r => c -> bits(r))
+    }.toMap
+    assert(stacked == separate)
+    assert(stacked.keySet == Set("a", "b", "c"))
+    assert(stacked("c").takeRight(2) == Seq(null, null), "guarded column")
   }
 
   test("guard: all-zero input yields null bounds (reference :34)") {
@@ -165,5 +113,69 @@ class BoundsSpec extends SparkTestBase {
     val without = aggBounds(Seq(1, 2, 3, 4, 5), 3.0, logt = true)
     assert(withNulls.getAs[Long]("n") == 5)
     assert(withNulls.getAs[Double]("median") == without.getAs[Double]("median"))
+  }
+}
+
+/** Independent references [[Bounds]] is checked against. */
+object BoundsTwins {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.types.DoubleType
+
+  /** LocScaleB written out over a sorted array of every value (R type-7
+    * median, stats::mad, the reference's two guards): (n, median, mad,
+    * lower_low, upper_up) on the transformed scale, None when no value is
+    * given. */
+  def locScaleBSorted(values: Seq[Double], k: Double, logt: Boolean): Option[Row] = {
+    def median(v: Array[Double]): Double =
+      if (v.length % 2 == 1) v(v.length / 2) else (v(v.length / 2 - 1) + v(v.length / 2)) / 2.0
+    def mad(v: Array[Double]): Double = {
+      val m = median(v)
+      val dev = v.map(x => math.abs(x - m))
+      java.util.Arrays.sort(dev)
+      Bounds.MadConstant * median(dev)
+    }
+    val raw = values.toArray
+    java.util.Arrays.sort(raw)
+    Option.when(raw.nonEmpty) {
+      val x = if (logt) raw.map(math.log1p) else raw.clone()
+      java.util.Arrays.sort(x)
+      val (m, s) = (median(x), mad(x))
+      val guarded = raw.forall(_ == 0.0) || mad(raw) <= 0.0
+      Row(raw.length.toLong, m, s, if (guarded) null else m - k * s, if (guarded) null else m + k * s)
+    }
+  }
+
+  /** A two-pass DataFrame formulation over Spark's exact `percentile`.
+    * Pass 1: per-group medians (raw + transformed); pass 2: per-group
+    * MADs. One row per group: groupCols ++ (n, median, mad, lower_low,
+    * upper_up) on the transformed scale. Spark's percentile interpolates
+    * the middle two as `0.5a + 0.5b`, which equals R type-7's
+    * `(a + b) / 2` exactly.
+    */
+  def boundsTwoPass(df: DataFrame, groupCols: Seq[String], valueCol: String,
+                    k: Double, logt: Boolean): DataFrame = {
+    def med(c: Column): Column = percentile(c, lit(0.5))
+    val vRaw = col(valueCol).cast(DoubleType)
+    val vT = if (logt) log1p(vRaw) else vRaw
+    val base = df.select(groupCols.map(col) :+ vRaw.as("__raw") :+ vT.as("__t"): _*)
+      .filter(col("__raw").isNotNull)
+    val meds = base.groupBy(groupCols.map(col): _*).agg(
+      med(col("__raw")).as("__med_raw"),
+      med(col("__t")).as("__med_t"),
+      count(lit(1)).as("n"),
+      max(when(col("__raw") =!= 0.0, lit(1)).otherwise(lit(0))).as("__any_nonzero"))
+    val mads = base.join(meds, groupCols)
+      .groupBy(groupCols.map(col): _*).agg(
+        med(abs(col("__raw") - col("__med_raw"))).as("__mad0_raw"),
+        med(abs(col("__t") - col("__med_t"))).as("__mad0_t"))
+    meds.join(mads, groupCols)
+      .withColumn("__mad_raw", lit(Bounds.MadConstant) * col("__mad0_raw"))
+      .withColumn("mad", lit(Bounds.MadConstant) * col("__mad0_t"))
+      .withColumn("median", col("__med_t"))
+      .withColumn("__guard", col("__any_nonzero") === 0 || col("__mad_raw") <= 0.0)
+      .withColumn("lower_low", when(!col("__guard"), col("median") - lit(k) * col("mad")))
+      .withColumn("upper_up", when(!col("__guard"), col("median") + lit(k) * col("mad")))
+      .select(groupCols.map(col) ++ Seq(col("n"), col("median"), col("mad"),
+        col("lower_low"), col("upper_up")): _*)
   }
 }

@@ -68,6 +68,36 @@ object GraftProps extends Properties("graft") {
       }
     }
 
+  // few distinct values force heavy ties; -0.0 beside 0.0, and ±Inf as
+  // P6's x/0 gives them (log1p(-Inf) is NaN)
+  private val edgeValue: Gen[Option[Double]] = Gen.frequency(
+    1 -> Gen.const(None),
+    4 -> Gen.oneOf(0.0, -0.0, 1.0, 2.0, 7.5, Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(Option(_)),
+    3 -> Gen.chooseNum(0.0, 1000.0).map(Option(_)))
+
+  property("locscaleb equals the sorted-array LocScaleB bit for bit, merged across partitions") =
+    forAll(Gen.listOf(Gen.zip(Gen.oneOf("a", "b", "c"), edgeValue)),
+      Gen.chooseNum(0.5, 3.0), Gen.oneOf(true, false)) { (generated, k, logt) =>
+      // plus fixed groups: all zero, one value, all null
+      val rows = generated ++ Seq("zero" -> Some(0.0), "zero" -> Some(-0.0), "zero" -> Some(0.0),
+        "one" -> Some(3.25), "null" -> None, "null" -> None)
+      // NaN payloads are not portable (Math.abs of a NaN differs between
+      // the interpreter and compiled code), so any NaN equals any NaN
+      def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+        case d: Double if d.isNaN => "NaN"
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case other => other
+      }
+      val got = rows.toDF("g", "x").repartition(8).groupBy("g")
+        .agg(Bounds.locscaleb(col("x"), k, logt).as("b"))
+        .collect().map(r => r.getString(0) -> Option(r.getStruct(1)).map(bits)).toMap
+      val want = rows.groupBy(_._1).map { case (g, xs) =>
+        g -> BoundsTwins.locScaleBSorted(xs.flatMap(_._2), k, logt).map(bits)
+      }
+      got == want
+    }
+
   property("explodeWithIndex conserves rows: sum of sizes + empties") =
     forAll(Gen.listOf(Gen.listOf(Gen.alphaStr))) { nested =>
       val df = nested.zipWithIndex.map { case (xs, i) => (i, xs) }.toDF("id", "xs")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.ops.Restructure
+import graft.ops.{BoundsTwins, Restructure}
 
 /** End-to-end pipeline fixtures (SURVEY.md §5, FIXTURES.md A1-A4): nested
   * Kobo submissions → ingest → preprocess → validate → merge → export.
@@ -248,15 +248,8 @@ class PipelineSpec extends SparkTestBase {
     // reference get_catch_bounds/validate_catch (:183-233): LocScaleB on
     // log1p(catch_kg) per (gear, catch_taxon, weight_type), upper bound
     // back-transformed exp(b) with no -1
-    def upper(xs: Seq[Double]): Double = {
-      def median(v: Seq[Double]) = {
-        val s = v.sorted
-        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      val t = xs.map(math.log1p)
-      val m = median(t)
-      math.exp(m + 2.5 * 1.4826 * median(t.map(x => math.abs(x - m))))
-    }
+    def upper(xs: Seq[Double]): Double =
+      math.exp(BoundsTwins.locScaleBSorted(xs, 2.5, logt = true).get.getDouble(4))
     val bulk = (10 to 19).map(_.toDouble)
     // two rows above the bulk cannot move its median or MAD, so the bound
     // is known before they are planted: `below` sits in [exp(b)-1, exp(b))
@@ -285,18 +278,11 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("validate: planted bounds — counts alert strictly above exp(b)-1 and mask negatives; price alerts at exp(b) on both sides; fused and standalone agree") {
-    // LocScaleB on log1p(x) as the stage computes it: odd counts, so each
-    // median is one element, and StrictMath like Spark's log1p/exp
+    // LocScaleB on log1p(x) as the stage computes it (the sorted-array
+    // reference); StrictMath exp like Spark's
     def locscaleb(xs: Seq[Double], k: Double): (Double, Double) = {
-      def median(v: Seq[Double]) = {
-        val s = v.sorted
-        assert(s.size % 2 == 1)
-        s(s.size / 2)
-      }
-      val t = xs.map(StrictMath.log1p)
-      val m = median(t)
-      val mad = 1.4826 * median(t.map(x => math.abs(x - m)))
-      (m - k * mad, m + k * mad)
+      val r = BoundsTwins.locScaleBSorted(xs, k, logt = true).get
+      (r.getDouble(3), r.getDouble(4))
     }
     val n = 21
     val fishers = (0 until n).map(10.0 + _)

@@ -5,21 +5,25 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, SparkPlanInfo}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkTestBase
+import graft.{PlanTestUtil, SparkTestBase}
 import graft.sources.StageIO
 
 /** Pins how `Runner.validate` spends its jobs: the bounds are one small
-  * query run once, and each of the two writes is a scan-project-write
-  * with the bounds as constants. Counted with listeners, as in
-  * CurateForkSpec: jobs from `SparkListenerJobStart`, written plans from
-  * the SQL execution start and adaptive-update events of the two
-  * writes. The negative control writes the same two tables through the
-  * faithful chain ([[Validate.apply]]) under the same counters and must
-  * trip both of them.
+  * aggregation run once (one shuffle exchange, no join), and each of the
+  * two writes is a scan-project-write with the bounds as constants.
+  * Counted with listeners, as in CurateForkSpec: jobs from
+  * `SparkListenerJobStart`, written plans from the SQL execution start
+  * and adaptive-update events of the two writes, the bounds plan from a
+  * `QueryExecutionListener`. The negative control writes the same two
+  * tables through the faithful chain ([[Validate.apply]]) under the same
+  * counters and must trip both of them.
   */
 class ValidateStageSpec extends SparkTestBase {
   import spark.implicits._
@@ -46,14 +50,22 @@ class ValidateStageSpec extends SparkTestBase {
     Runner.StageTables(root)
   }
 
-  private case class Observed(jobs: Int, writtenNodes: Map[String, Seq[String]])
+  private case class Observed(jobs: Int, writtenNodes: Map[String, Seq[String]],
+                              collected: Seq[SparkPlan])
 
-  /** Jobs submitted while `body` runs, and the node names of every plan
+  /** Jobs submitted while `body` runs, the node names of every plan
     * (initial and adaptive updates) that writes into the validated or
-    * alert_flags directory. */
+    * alert_flags directory, and the executed plans of the queries it
+    * collected. */
   private def observe(body: => Unit): Observed = {
     val jobs = new AtomicInteger(0)
     val written = mutable.Map.empty[String, Seq[String]]
+    val collected = mutable.Buffer.empty[SparkPlan]
+    val queries = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collected.synchronized(collected += qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
     def names(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(names)
     def record(plan: SparkPlanInfo): Unit =
       Seq(tables.validated, tables.alertFlags).filter(plan.simpleString.contains)
@@ -71,12 +83,19 @@ class ValidateStageSpec extends SparkTestBase {
     tables // write the fixture outside the counting window
     org.apache.spark.GraftTestShim.waitListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(queries)
     try {
       body
       org.apache.spark.GraftTestShim.waitListenerBus(spark.sparkContext)
-      Observed(jobs.get(), written.toMap)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Observed(jobs.get(), written.toMap, collected.synchronized(collected.toList))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(queries)
+    }
   }
+
+  /** Jobs of the fused stage, as measured. */
+  private val Bound = 5
 
   private def forbidden(nodes: Seq[String]): Seq[String] =
     nodes.filter(n => Seq("Exchange", "Aggregate", "Join").exists(n.contains)).distinct
@@ -88,8 +107,14 @@ class ValidateStageSpec extends SparkTestBase {
     got.writtenNodes.foreach { case (dir, nodes) =>
       assert(forbidden(nodes).isEmpty, s"$dir plan has ${forbidden(nodes)}: $nodes")
     }
-    // one footer read, the bounds query's jobs and two writes
-    assert(got.jobs <= 10, s"validate stage submitted ${got.jobs} jobs")
+    // one footer read, the bounds aggregation (its shuffle map stage and
+    // its result stage) and two writes
+    assert(got.jobs <= Bound, s"validate stage submitted ${got.jobs} jobs")
+    // the bounds are one aggregation: a single shuffle exchange, no join
+    assert(got.collected.size == 1, s"${got.collected.size} collected queries")
+    val boundsNodes = PlanTestUtil.nodes(got.collected.head)
+    assert(boundsNodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1 &&
+      !boundsNodes.exists(_.isInstanceOf[BaseJoinExec]), s"bounds plan:\n${got.collected.head}")
 
     // negative control: the faithful chain runs one bounds query per
     // validator when it is called and joins the validators' outputs back
@@ -99,10 +124,10 @@ class ValidateStageSpec extends SparkTestBase {
       StageIO.save(res.validated, tables.validated)
       StageIO.save(res.alertFlags, tables.alertFlags)
     }
-    assert(faithful.jobs > 10,
+    assert(faithful.jobs > Bound,
       s"negative control: faithful chain ran only ${faithful.jobs} jobs")
     assert(faithful.writtenNodes.values.forall(forbidden(_).nonEmpty),
       "negative control: the plan walk no longer sees exchanges, aggregates or joins")
-    info(s"jobs: fused stage ${got.jobs}, faithful chain ${faithful.jobs} (bound 10)")
+    info(s"jobs: fused stage ${got.jobs}, faithful chain ${faithful.jobs} (bound $Bound)")
   }
 }

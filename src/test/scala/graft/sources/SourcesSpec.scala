@@ -193,6 +193,21 @@ class SourcesSpec extends SparkTestBase {
     assert(dflt.getString("storage.conn").contains("")) // missing env → ""
   }
 
+  test("S7: a present config value that does not parse fails naming the key; empty keeps the default") {
+    def conf(body: String) = PipelineConfig.parse(s"default:\n$body", "default", Map.empty)
+    val comma = intercept[IllegalArgumentException](
+      conf("  validation:\n    k_nfishers: \"2,5\"\n").validationK)
+    assert(comma.getMessage.contains("validation.k_nfishers") && comma.getMessage.contains("2,5"))
+    val typo = intercept[IllegalArgumentException](
+      conf("  curation:\n    nfc_normalize: ture\n").curationConf)
+    assert(typo.getMessage.contains("curation.nfc_normalize") && typo.getMessage.contains("ture"))
+    // an unset ${VAR} interpolates to "", which keeps the default
+    val unset = conf("  validation:\n    k_nboats: ${GRAFT_UNSET_K}\n  curation:\n" +
+      "    fold_accents: ${GRAFT_UNSET_FLAG}\n")
+    assert(unset.validationK == graft.pipeline.Validate.Ks())
+    assert(!unset.curationConf.foldAccents)
+  }
+
   test("curationConf: yaml knobs surface, absent keys fall to stage defaults") {
     val conf = PipelineConfig.parse(
       """default:
